@@ -1059,9 +1059,12 @@ FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
 
 # exact-string surgery guards (ADVICE r5): if the donor SQL tails ever
 # drift, .replace() silently no-ops and the derived oracles become the
-# donor query with the wrong columns — fail at import instead.
-assert _CC_SQL != _NGRAM_SQL and "RECURSIVE" in _CC_SQL
-assert _SURVIVORS_CORE != _CC_SQL and "LEFT JOIN cc" in _SURVIVORS_CORE
+# donor query with the wrong columns — fail at import instead. Explicit
+# raises, not asserts: the guards must also hold under ``python -O``.
+if _CC_SQL == _NGRAM_SQL or "RECURSIVE" not in _CC_SQL:
+    raise RuntimeError("oracle SQL surgery failed: _CC_SQL")
+if _SURVIVORS_CORE == _CC_SQL or "LEFT JOIN cc" not in _SURVIVORS_CORE:
+    raise RuntimeError("oracle SQL surgery failed: _SURVIVORS_CORE")
 
 _REDUCTION_SQL = f"""
 WITH s AS ({_SURVIVORS_CORE})

@@ -65,7 +65,8 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 def connected_components(edges: DataFrame, max_iter: int = 25,
                          n_partitions: int | None = None,
-                         edges_canonical: bool = False) -> DataFrame:
+                         edges_canonical: bool = False,
+                         max_edges: int | None = None) -> DataFrame:
     """Return (file_id, cluster_id) for every vertex appearing in edges.
 
     ``n_partitions`` sizes the per-round shuffles. The star rounds flatten
@@ -79,11 +80,17 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     construction: group star pairs are (rep=group-min, member) and
     verified rep edges are least/greatest-ordered distinct pairs, and the
     two sets are disjoint (same-group vs cross-group endpoints).
+
+    ``max_edges``: a caller-measured upper bound on the input's rows (the
+    streaming serve path sums parquet footer rows). A bound at or under
+    ``DRIVER_FINALIZE_EDGES`` proves the graph driver-sized, so the edges
+    are collected once as they are, with no canonicalization and no
+    persist + count probe; ``None`` (the batch path) keeps the probe.
     """
     spark = edges.sparkSession
     if n_partitions is None:
         n_partitions = max(8, spark.sparkContext.defaultParallelism // 4)
-    return _cc_loop(edges, max_iter, n_partitions, edges_canonical)
+    return _cc_loop(edges, max_iter, n_partitions, edges_canonical, max_edges)
 
 
 DRIVER_FINALIZE_EDGES = 500_000  # collect threshold: ~8 MB of (u,v) longs
@@ -140,18 +147,29 @@ def _assign_df(spark, assign: dict) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
+def _driver_cc(spark, uv: DataFrame) -> DataFrame:
+    """Collect a driver-sized (u, v) edge frame and label it locally."""
+    pdf = uv.select("u", "v").toPandas()
+    return _assign_df(spark, _assign_from_edges(pdf[["u", "v"]].to_numpy()))
+
+
 def _cc_loop(edges: DataFrame, max_iter: int, n_partitions: int,
-             edges_canonical: bool = False) -> DataFrame:
+             edges_canonical: bool = False,
+             max_edges: int | None = None) -> DataFrame:
     from pyspark import StorageLevel
 
     spark = edges.sparkSession
+    raw = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    if max_edges is not None and max_edges <= DRIVER_FINALIZE_EDGES:
+        # the driver labeling is indifferent to duplicates, self-loops
+        # and orientation, so the raw edges skip the canonicalizing
+        # shuffle as well as the probe
+        return _driver_cc(spark, raw)
     # persist BEFORE the probe: on the big-graph branch the probe's partial
     # compute is reused by the localCheckpoint instead of re-deriving the
     # whole canon lineage (which may be an expensive pair-gen pipeline)
-    canon = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        if edges_canonical else _canon(edges)
-    ).persist(StorageLevel.DISK_ONLY)
+    canon = (raw if edges_canonical else _canon(edges)).persist(
+        StorageLevel.DISK_ONLY)
     # Fast path: small graphs skip the distributed rounds entirely.
     # Size test = count(), NOT limit(N+1).collect(): CollectLimit scale-up
     # runs a ladder of incremental jobs AND short-circuits partition
@@ -161,10 +179,10 @@ def _cc_loop(edges: DataFrame, max_iter: int, n_partitions: int,
     # materializes the cache; the Arrow collect then reads cache only.
     n_edges = canon.count()
     if n_edges <= DRIVER_FINALIZE_EDGES:
-        pdf = canon.toPandas()
-        canon.unpersist()
-        assign = _assign_from_edges(pdf[["u", "v"]].to_numpy())
-        return _assign_df(spark, assign)
+        try:
+            return _driver_cc(spark, canon)
+        finally:
+            canon.unpersist()
 
     # narrow the per-round shuffles ONLY NOW: canon above is materialized
     # at full session width (the override used to sit on the whole lineage,
@@ -210,9 +228,7 @@ def _cc_rounds(canon: DataFrame, max_iter: int, n_partitions: int) -> DataFrame:
         if sig[0] <= DRIVER_FINALIZE_EDGES:
             # small remainder: finish on the driver (saves the last few
             # rounds of stage-barrier latency)
-            pdf = e.select("u", "v").toPandas()
-            assign = _assign_from_edges(pdf[["u", "v"]].to_numpy())
-            return _assign_df(spark, assign)
+            return _driver_cc(spark, e)
     if not converged:
         # NEVER return silently-partial labels (the failure mode of the
         # round-2 one-hop contraction on long paths)
@@ -233,11 +249,14 @@ def _cc_rounds(canon: DataFrame, max_iter: int, n_partitions: int) -> DataFrame:
 
 def cluster_assignments(corpus_ids: DataFrame, edges: DataFrame,
                         max_iter: int = 25,
-                        edges_canonical: bool = False) -> DataFrame:
+                        edges_canonical: bool = False,
+                        max_edges: int | None = None) -> DataFrame:
     """All files → cluster id; files with no verified edge are singleton
-    clusters (cluster_id = own file_id)."""
+    clusters (cluster_id = own file_id). ``max_edges``: see
+    ``connected_components``."""
     cc = connected_components(edges, max_iter=max_iter,
-                              edges_canonical=edges_canonical)
+                              edges_canonical=edges_canonical,
+                              max_edges=max_edges)
     return (
         corpus_ids.select("file_id")
         .join(cc, "file_id", "left")

@@ -105,16 +105,22 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
                     prefilter: bool | None = None):
     """Distinct (src, dst) candidate pairs from banded MinHash.
 
-    One unified salted path: every bucket is split into
-    ``nb = ceil(size / max_bucket)`` blocks and every block pair (i ≤ j)
-    becomes its own aggregation group, so no task ever materializes more
-    than ~2·max_bucket members. ``nb = 1`` (the common case) degenerates to
-    plain in-bucket pair generation with zero replication, so small and hot
-    buckets share one plan: scan → window count (the only wide exchange) →
-    in-partition groupBy (prefix partitioning, no second exchange) → pair
-    explode → distinct. Buckets beyond ``max_bucket * salt`` are excluded
-    and surfaced in the metrics frame — explicit, logged skew handling
-    instead of a silent quadratic blow-up.
+    ``band_buckets`` explodes each signature into one (band_id,
+    band_hash, file_id) row per band; ``salted_pairs`` runs the skew
+    ladder over those buckets. Each bucket is counted by a window over an
+    explicit fixed-width repartition on the bucket key and split into
+    ``nb = ceil(size / max_bucket)`` blocks (``nb = 1``, the common case,
+    is plain in-bucket pair generation with no replication). Every block
+    pair (i ≤ j) is a key of a co-partitioned sort-merge SELF-JOIN on
+    (bucket key, i, j), so no task holds more than ~2·max_bucket members
+    and pairs stream out of the join with no per-task array. A
+    repartition + dropDuplicates on (src, dst) then removes pairs that
+    several bands found. Buckets beyond ``max_bucket * salt`` are
+    excluded — by a mega-bucket pre-filter (a groupBy count and a
+    broadcast anti-join ahead of the window) or, with it gated off, by a
+    cap inside the window pass — and surfaced in the metrics frame:
+    explicit, logged skew handling instead of a silent quadratic
+    blow-up.
 
     ``n_rows``: measured signature-row count, if the caller has one (the
     pipeline's cache-materialization barrier returns it for free). Small

@@ -60,18 +60,30 @@ def _local_dir() -> str:
         return os.environ.get("SPARK_LOCAL_DIRS", "/tmp")
 
 
-def _fd_safe_partitions(cores: int) -> int:
+def _fd_safe_partitions(cores: int) -> int | None:
     """Largest per-shuffle partition count the bypass writer can use with
     every core running a map task at once, against the process soft FD
     limit (4096 kept back for parquet footers, sockets, jars, spill
-    files)."""
+    files). ``None`` when the soft limit is unlimited (``RLIM_INFINITY``):
+    there is no FD ceiling then."""
     try:
         import resource
 
         soft = resource.getrlimit(resource.RLIMIT_NOFILE)[0]
+        if soft == resource.RLIM_INFINITY:
+            return None
     except Exception:
         soft = 1024
     return max(1, (soft - 4096) // max(1, cores))
+
+
+def _bypass_threshold(cores: int) -> int:
+    """``spark.shuffle.sort.bypassMergeThreshold`` for ``cores`` concurrent
+    map tasks: Spark's default 200 or ``cores * 32`` if larger, but never
+    more than the FD-safe partition count — the FD limit always wins."""
+    cap = max(200, cores * 32)
+    fd_safe = _fd_safe_partitions(cores)
+    return cap if fd_safe is None else min(cap, fd_safe)
 
 
 def get_spark(app: str = "dedup_spark", cores: int | None = None,
@@ -125,12 +137,13 @@ def get_spark(app: str = "dedup_spark", cores: int | None = None,
         # file per reducer per running task, so the ceiling is the
         # process FD limit, not memory (measured: cores*32=1024 at 32
         # concurrent tasks blew a 20k ulimit with "Too many open
-        # files"): allow up to cores*32 but never more than the soft
-        # FD limit minus headroom spread over the concurrent tasks.
-        # Wider exchanges than this fall back to the serialized-sort
-        # writer — batched files are the right trade there.
+        # files"): allow Spark's default 200 or cores*32, whichever is
+        # larger, but never more than the soft FD limit minus headroom
+        # spread over the concurrent tasks (_bypass_threshold). Wider
+        # exchanges than this fall back to the serialized-sort writer —
+        # batched files are the right trade there.
         .config("spark.shuffle.sort.bypassMergeThreshold",
-                str(max(200, min(cores * 32, _fd_safe_partitions(cores)))))
+                str(_bypass_threshold(cores)))
         # one BLAS/OMP thread per Python worker: N workers x N BLAS threads
         # oversubscribes quadratically on wide executors
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")

@@ -69,18 +69,24 @@ file_id-bucketed table); the wide cumulative ``signatures`` table is
 never re-shuffled — it is only consumed by the on-demand audit surfaces
 (``expanded_edges`` / ``current_clusters``).
 
-Fixed-cost budget (rounds 5-6 — the per-batch commit count is the small-
-batch throughput limiter): a fold is seven Spark jobs, four of them
-sequential barriers — signatures, born-rep sketches, one bucket-stats
-job that both materializes the narrow universe cache and returns every
-skew/row counter, and the verify+edges commit carrying the
-candidate-pair count as an observe() metric — plus CONCURRENT members,
-group-delta and bands commits (threads joined before the edges marker;
-born-group detection consumes the delta lineage over the committed
-signature partition, so nothing waits on the members or delta commits).
-Map-only state writes size their output files from measured input bytes
-(never a fixed fan-out), and each phase's wall lands in
-``metrics.jsonl`` as ``phase_ms``.
+Fixed-cost budget (the per-batch job count is the small-batch
+throughput limiter; at this scale CPU follows plans and jobs, not data).
+Three sequential commit barriers — signatures, born-rep sketches
+(repsigs) and the verify+edges commit — plus CONCURRENT members,
+group-delta and bands commits on writer threads joined before the edges
+marker. No job runs only to learn a schema or a size: every state read
+passes its pinned schema (``STATE_SCHEMAS``), the bucket-skew counters
+and the candidate-pair count are observe() metrics riding the edges
+commit, and the broadcast/prune gates read upper bounds summed from
+parquet footers (a job measures the exact size only when the bound is too
+loose to decide a gate). ``current_clusters`` bounds its CC input the
+same way and collects it with no probe job. Measured on the benchmark's
+``incremental_ingest`` op (a 100-file batch into a 1k-file state, 4
+cores, Spark event log): fold + serve went from 48 jobs (35 + 13, eight
+of them schema inference on state reads) to 28 (22 + 6). Map-only state
+writes size their output files from measured input bytes (never a fixed
+fan-out), and each phase's wall lands in ``metrics.jsonl`` as
+``phase_ms``.
 
 Skew + contraction parity with the batch path (operators/lsh.py +
 operators/groups.py): candidate pairs are generated between signature
@@ -110,16 +116,43 @@ from __future__ import annotations
 import json
 import os
 import re
-import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark import InheritableThread, StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
 from .operators.groups import group_star_pairs, sketch_groups, within_group_pairs
 from .operators.lsh import band_buckets
+from .operators.signatures import SIG_SCHEMA, compute_signatures
 from .operators.verify import verify_pairs
+
+# One pinned schema per state table (data columns only; hive partition
+# columns such as batch_id / bh<P> / fb<P> are still discovered from the
+# directory names). Every state read passes its table's schema, so no read
+# launches a parquet schema-inference job; tests pin each entry against
+# the schema a fresh fold writes, flat and bucketed.
+STATE_SCHEMAS = {
+    "signatures": SIG_SCHEMA,
+    "repsigs": SIG_SCHEMA,
+    "members": "file_id long, g1 long, g2 long",
+    "groups": "g1 long, g2 long, rep_delta long, cnt_delta long",
+    "bands": "file_id long, band_id int, band_hash long",
+    "edges": "src long, dst long, hamming int, jaccard double, "
+             "verified boolean",
+}
+
+
+def _read_state(spark: SparkSession, table: str, *paths: str,
+                base: str | None = None) -> DataFrame:
+    """Read state partitions (or a whole table root) of ``table`` under its
+    pinned schema; ``base`` sets the hive ``basePath``."""
+    reader = spark.read.schema(STATE_SCHEMAS[table])
+    if base is not None:
+        reader = reader.option("basePath", base)
+    return reader.parquet(*paths)
 
 
 def _batch_dirs(path: str) -> list[int]:
@@ -185,8 +218,6 @@ def incremental_update(new_corpus: DataFrame, state_dir: str,
     a batch whose edges partition already exists is skipped outright, and
     a half-written batch is recomputed into the same partition dirs.
     """
-    from .operators.signatures import compute_signatures
-
     cfg = cfg or DedupConfig()
     spark = new_corpus.sparkSession
     sig_path = os.path.join(state_dir, "signatures")
@@ -209,8 +240,8 @@ def incremental_update(new_corpus: DataFrame, state_dir: str,
             if b not in done and b > wmark:
                 _fold_batch(
                     spark, state_dir, cfg, b,
-                    spark.read.parquet(
-                        os.path.join(sig_path, f"batch_id={b}")),
+                    _read_state(spark, "signatures",
+                                os.path.join(sig_path, f"batch_id={b}")),
                     refold=True,
                 )
         batch_id = (existing[-1] + 1) if existing else 0
@@ -229,8 +260,8 @@ def incremental_update(new_corpus: DataFrame, state_dir: str,
     # fold from the committed partition (cuts the kernel lineage: every
     # downstream action reads parquet instead of re-running the kernel)
     _fold_batch(spark, state_dir, cfg, batch_id,
-                spark.read.parquet(sig_part), refold=was_partial,
-                phases=phases)
+                _read_state(spark, "signatures", sig_part),
+                refold=was_partial, phases=phases)
     return _state_frames(spark, state_dir)
 
 
@@ -242,9 +273,11 @@ def incremental_update(new_corpus: DataFrame, state_dir: str,
 _BROADCAST_MAX_BYTES = 48 * 1024 * 1024
 
 
-class _CapturingThread(threading.Thread):
+class _CapturingThread(InheritableThread):
     """Thread whose exception is re-raised at join() — a failed concurrent
-    state write must fail the fold, never be swallowed."""
+    state write must fail the fold, never be swallowed. It inherits the
+    caller's Spark local properties, so a writer's jobs land in the
+    caller's job group."""
 
     def run(self):
         self._exc = None
@@ -314,28 +347,32 @@ def _drop_layout_cols(df: DataFrame) -> DataFrame:
     ])
 
 
-def _read_bucketed_parts(spark: SparkSession, root: str, parts: list[str],
+def _read_bucketed_parts(spark: SparkSession, table: str, parts: list[str],
                          prefix: str,
                          touched_keys: list[int] | None = None):
-    """Read state partitions of ANY layout mix as one frame (layout
-    columns dropped). ``touched_keys`` (the distinct join-key values of
-    the current batch — band hashes for ``bh``, file ids for ``fb``)
-    enables partition pruning on bucketed parts: only buckets that can
-    contain a joinable row are read; flat parts are always scanned in
-    full. Returns ``(frame, buckets_read, buckets_total)`` where the
-    counts cover the bucketed parts only (equal when nothing pruned)."""
+    """Read partitions of state ``table`` in ANY layout mix as one frame
+    (layout columns dropped). ``touched_keys`` (the distinct join-key
+    values of the current batch — band hashes for ``bh``, file ids for
+    ``fb``) enables partition pruning on bucketed parts: only buckets
+    that can contain a joinable row are read; flat parts are always
+    scanned in full. Returns ``(frame, read_dirs, buckets_read,
+    buckets_total)``: ``read_dirs`` are the directories the scan opens
+    (their footers bound the frame's rows), and the counts cover the
+    bucketed parts only (equal when nothing pruned)."""
+    root = os.path.dirname(parts[0])
     by_scheme: dict[int | None, list[str]] = {}
     for p in parts:
         by_scheme.setdefault(_bucket_scheme(p, prefix), []).append(p)
-    frames = []
+    frames, read_dirs = [], []
     buckets_read = buckets_total = 0
     for scheme, group in by_scheme.items():
         if scheme is None:
-            frames.append(_drop_layout_cols(spark.read.parquet(*group)))
+            frames.append(_drop_layout_cols(_read_state(spark, table, *group)))
+            read_dirs += group
             continue
-        df = spark.read.option("basePath", root).parquet(*group)
+        df = _read_state(spark, table, *group, base=root)
         present = [
-            int(name.split("=", 1)[1])
+            (os.path.join(p, name), int(name.split("=", 1)[1]))
             for p in group for name in os.listdir(p)
             if (m := _BUCKET_RE.match(name)) and m.group(1) == prefix
         ]
@@ -344,14 +381,14 @@ def _read_bucketed_parts(spark: SparkSession, root: str, parts: list[str],
             touched = {k % scheme for k in touched_keys}
             df = df.where(F.col(f"{prefix}{scheme}").isin(sorted(touched)))
             # dirs actually read: present buckets ∩ touched, per part
-            buckets_read += sum(1 for b in present if b in touched)
-        else:
-            buckets_read += len(present)
+            present = [(d, b) for d, b in present if b in touched]
+        buckets_read += len(present)
+        read_dirs += [d for d, _ in present]
         frames.append(_drop_layout_cols(df))
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    return out, buckets_read, buckets_total
+    return out, read_dirs, buckets_read, buckets_total
 
 
 def _write_bucketed_part(df: DataFrame, path: str, key_col: str,
@@ -385,10 +422,11 @@ def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     (members always, group delta when ``groups_async``, bands when
     ``bands_async``) committing their partitions concurrently with the
     caller's jobs — the caller must ``join()`` each (surfacing its
-    error) before committing the batch's edges marker. With ``groups_async`` the born-group detection
-    consumes the delta LINEAGE over the committed members partition (a
-    narrow re-agg of 3-long rows ∝ batch) instead of waiting on the
-    delta commit, removing one sequential job barrier per fold."""
+    error) before committing the batch's edges marker. Born-group
+    detection consumes member/delta LINEAGE over the committed signature
+    partition (narrow aggregates of 3-long rows ∝ batch), so with
+    ``groups_async`` nothing waits on the delta commit — one sequential
+    job barrier less per fold."""
     from .operators.groups import group_keys
 
     phases = {} if phases is None else phases
@@ -416,7 +454,7 @@ def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     # signature group in the batch (shuffle ∝ batch rows). The members
     # COMMIT is pure state maintenance (only the serving queries read the
     # members table back) — it runs on a writer thread concurrent with
-    # the repsigs/stats jobs, and the fold's own consumers use the
+    # the repsigs/edges jobs, and the fold's own consumers use the
     # members LINEAGE over the committed signature partition instead.
     # That re-runs group_keys' xxhash64 over the batch's wide rows once
     # per consumer — strictly ∝ batch, measured cheaper than the commit
@@ -447,41 +485,51 @@ def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
 
     if groups_async:
         # the delta commit is pure state maintenance here: born-group
-        # detection below consumes the delta lineage, so the write
-        # overlaps the repsigs job. The re-agg it implies inside each
-        # consumer shuffles 3-long member rows (∝ batch) — never more
-        # than the batch's own signature partition.
+        # detection below consumes the member (or, with no prior state,
+        # the delta) lineage, so the write overlaps the repsigs job. The
+        # aggregation that implies shuffles 3-long member rows (∝ batch)
+        # — never more than the batch's own signature partition.
         groups_th = _CapturingThread(target=_write_groups)
         groups_th.start()
         threads.append(groups_th)
     else:
         _write_groups()
-        new_delta = spark.read.parquet(groups_part)
+        new_delta = _read_state(spark, "groups", groups_part)
 
     # 3. born-group detection against the PRIOR narrow deltas: scan old
-    # keys once, broadcast the batch's keys both ways — no wide shuffle
-    # of state. A giant bootstrap batch takes the no-prior branch; for a
-    # later batch too large to broadcast the hint is dropped and Spark
-    # shuffles BOTH narrow key tables — still rows of 2-4 longs, never
-    # the wide signature state. Gate bytes = batch rows × 24 B (the
-    # members row is 3 longs) from the committed signature footers — an
-    # exact-width bound that needs no wait on the async members commit.
+    # keys once, reduced by a semi-join on the batch's broadcast member
+    # keys (duplicate keys are harmless on a semi-join's build side, so
+    # they need no aggregate first) — no wide shuffle of state. ONE
+    # aggregation over the batch's member rows plus those touched prior
+    # rows then marks a key born when no prior row shares it, and takes
+    # its rep (the batch's min file_id): rows of 3 longs ∝ batch, and no
+    # second broadcast. A giant bootstrap batch takes the no-prior
+    # branch; for a later batch too large to broadcast the hint is
+    # dropped and Spark shuffles both narrow key tables — never the wide
+    # signature state. Gate bytes = batch rows × 24 B (the members row is
+    # 3 longs) from the committed signature footers — an exact-width
+    # bound that needs no wait on the async members commit.
     hint = (F.broadcast if 24 * _footer_rows(sig_part) <= _BROADCAST_MAX_BYTES
             else (lambda df: df))
     prior_groups = _prior_parts(state_dir, "groups", batch_id)
     if prior_groups:
-        old_touched = (
-            spark.read.parquet(*prior_groups)
-            .join(hint(new_delta.select("g1", "g2")), ["g1", "g2"])
-            .select("g1", "g2")
-            .distinct()
+        old = (
+            _read_state(spark, "groups", *prior_groups)
+            .join(hint(new_members.select("g1", "g2")), ["g1", "g2"],
+                  "left_semi")
+            .select("g1", "g2", F.lit(None).cast("long").alias("file_id"),
+                    F.lit(True).alias("old"))
         )
-        born = new_delta.join(
-            hint(old_touched), ["g1", "g2"], "left_anti"
+        born_reps = (
+            new_members.withColumn("old", F.lit(False))
+            .unionByName(old)
+            .groupBy("g1", "g2")
+            .agg(F.max("old").alias("old"), F.min("file_id").alias("file_id"))
+            .where(~F.col("old"))
+            .select("file_id")
         )
     else:
-        born = new_delta
-    born_reps = born.select(F.col("rep_delta").alias("file_id"))
+        born_reps = new_delta.select(F.col("rep_delta").alias("file_id"))
 
     # 4. newborn representatives' signature rows + their narrow band rows
     # become state; the rep is pinned at birth (membership-based
@@ -499,7 +547,8 @@ def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     # measured in round 6 and REVERTED: the overlapped jobs contend for
     # the same cores and the born-detection lineage re-runs per consumer
     # — fold wall grew ~15%, so the commit stays a barrier)
-    new_rep_sigs = _drop_layout_cols(spark.read.parquet(repsig_part))
+    new_rep_sigs = _drop_layout_cols(
+        _read_state(spark, "repsigs", repsig_part))
     new_bands = band_buckets(new_rep_sigs, cfg)
 
     def _write_bands():
@@ -537,8 +586,9 @@ def _migrate_state(spark: SparkSession, state_dir: str,
         if not os.path.exists(
                 os.path.join(state_dir, "groups", f"batch_id={b}",
                              "_SUCCESS")):
-            *_, threads = _index_batch(spark, state_dir, cfg, b,
-                                       spark.read.parquet(sig_part))
+            *_, threads = _index_batch(
+                spark, state_dir, cfg, b,
+                _read_state(spark, "signatures", sig_part))
             for th in threads:  # the members commit rides a writer thread
                 th.join()
         elif not os.path.exists(
@@ -549,7 +599,7 @@ def _migrate_state(spark: SparkSession, state_dir: str,
             from .operators.groups import group_keys
 
             group_keys(
-                spark.read.parquet(sig_part).drop("batch_id")
+                _read_state(spark, "signatures", sig_part)
             ).write.mode("overwrite").parquet(
                 os.path.join(state_dir, "members", f"batch_id={b}")
             )
@@ -571,8 +621,8 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     # groups_async/bands_async: the delta and bands commits are pure
     # state maintenance that nothing below reads (the fold consumes the
     # band LINEAGE over the committed repsigs partition, and born-group
-    # detection the delta lineage over committed members), so they
-    # overlap the repsigs/bucket-stats jobs; each is joined — errors
+    # detection the member lineage over committed signatures), so they
+    # overlap the repsigs/edges jobs; each is joined — errors
     # re-raised — before the edges marker.
     new_bands, groups_part, repsig_part, bands_part, threads = (
         _index_batch(spark, state_dir, cfg, batch_id, new_sigs, phases,
@@ -591,12 +641,16 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     salt_cap = cfg.max_bucket * max(1, cfg.salt)
     prior_bands = _prior_parts(state_dir, "bands", batch_id)
     buckets_read = buckets_total = 0
+    # exact band-key volume, driver-side: born reps (committed repsig
+    # footers) × bands/rep. The bands partition itself may still be
+    # committing on the async writer, so it cannot be measured here — but
+    # this product IS its row count. Added to the footer rows of every
+    # prior band file the scan below opens, it bounds the universe's rows
+    # from above without a job.
+    born_groups = _footer_rows(repsig_part)
+    band_rows = born_groups * cfg.bands
+    universe_bound = band_rows
     if prior_bands:
-        # exact band-key volume, driver-side: born reps (committed repsig
-        # footers) × bands/rep × ~24 B/row. The bands partition itself may
-        # still be committing on the async writer, so it cannot be
-        # measured here — but this product IS its row count.
-        band_rows = _footer_rows(repsig_part) * cfg.bands
         band_hint = (F.broadcast if 24 * band_rows <= _BROADCAST_MAX_BYTES
                      else (lambda df: df))
         # cost-gated partition pruning of the prior band index: one tiny
@@ -617,55 +671,56 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
                     new_bands.select("band_hash").distinct().collect,
                 )
             ]
-        prior_df, buckets_read, buckets_total = _read_bucketed_parts(
-            spark, os.path.join(state_dir, "bands"), prior_bands, "bh",
-            touched_hashes,
+        prior_df, read_dirs, buckets_read, buckets_total = (
+            _read_bucketed_parts(spark, "bands", prior_bands, "bh",
+                                 touched_hashes)
         )
+        universe_bound += sum(_footer_rows(d) for d in read_dirs)
+        # a semi-join: duplicate keys on the build side are harmless, so
+        # the key frame needs no distinct (and no exchange)
         touched_old = prior_df.join(
-            band_hint(new_bands.select("band_id", "band_hash").distinct()),
-            ["band_id", "band_hash"],
+            band_hint(new_bands.select("band_id", "band_hash")),
+            ["band_id", "band_hash"], "left_semi",
         )
         universe = touched_old.unionByName(new_bands)
     else:
         universe = new_bands
-    from pyspark import StorageLevel
 
-    # persist the universe: three consumers (the stats job, the pair join,
-    # the endpoint set) would otherwise each re-scan every prior bands
-    # partition and re-run the semi-join — the same multi-replan pattern
-    # the batch path closes with its materialization barriers. try/finally:
-    # a verify failure mid-fold (e.g. during stranded-batch recovery) must
-    # not leak the cached frame for the session lifetime.
-    universe = universe.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    # bucket sizes by ONE window over the universe (a single exchange on
+    # the bucket key), persisted: the pair join, the endpoint set and any
+    # gate probe below all read it, and would otherwise each re-scan every
+    # prior bands partition and re-run the semi-join. The skew statistics
+    # are observed on the rows flowing INTO the cache: building a cached
+    # partition consumes every row, so the counters are exact (unless a
+    # lost block is recomputed — the observe() caveat noted at the pair
+    # count below), and they ride the first action that scans the cache
+    # (normally the edges commit) — no stats job of its own. try/finally:
+    # a verify failure mid-fold (e.g. during stranded-batch recovery)
+    # must not leak the cached frame for the session lifetime.
+    in_bucket = Window.partitionBy("band_id", "band_hash").orderBy("file_id")
+    dropped = F.col("bucket_size") > salt_cap
+    bucket_metrics = [
+        F.count(F.lit(1)).alias("universe_rows"),
+        F.count(F.when(dropped, 1)).alias("dropped_rows"),
+        F.count(F.when(dropped & (F.col("bucket_rank") == 1), 1)).alias(
+            "dropped_buckets"),
+        # max over DROPPED buckets only — same semantics as the batch
+        # path's dropped_bucket_metrics frame (0 when nothing dropped)
+        F.coalesce(F.max(F.when(dropped, F.col("bucket_size"))),
+                   F.lit(0)).alias("max_bucket_size"),
+    ]
+    bucket_obs = Observation(f"fold_buckets_{batch_id}")
+    universe = universe.select(
+        "band_id", "band_hash", "file_id",
+        F.count(F.lit(1)).over(in_bucket.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing,
+        )).alias("bucket_size"),
+        F.row_number().over(in_bucket).alias("bucket_rank"),
+    ).observe(bucket_obs, *bucket_metrics).persist(
+        StorageLevel.MEMORY_AND_DISK_DESER)
     try:
-        # ONE small job both materializes the universe cache (its single
-        # linear branch cannot race itself, unlike the multi-consumer
-        # edges job below) and returns every bucket-size statistic: the
-        # dropped-skew counters AND the total row count (sum of all
-        # bucket sizes == universe rows — no separate count() barrier).
-        sizes = universe.groupBy("band_id", "band_hash").agg(
-            F.count("*").alias("bucket_size")
-        )
-        stats = _timed(phases, "bucket_stats", sizes.agg(
-            F.coalesce(F.sum("bucket_size"), F.lit(0)).alias("universe_rows"),
-            F.coalesce(F.sum(F.when(
-                F.col("bucket_size") > salt_cap, F.col("bucket_size")
-            )), F.lit(0)).alias("dropped_rows"),
-            F.count(F.when(
-                F.col("bucket_size") > salt_cap, F.lit(1)
-            )).alias("dropped_buckets"),
-            # max over DROPPED buckets only — same semantics as the batch
-            # path's dropped_bucket_metrics frame (0 when nothing dropped)
-            F.coalesce(F.max(F.when(
-                F.col("bucket_size") > salt_cap, F.col("bucket_size")
-            )), F.lit(0)).alias("max_bucket_size"),
-        ).first)
-        universe_rows = int(stats["universe_rows"])
-
-        ok_b = universe.join(
-            sizes.where(F.col("bucket_size") <= salt_cap).drop("bucket_size"),
-            ["band_id", "band_hash"],
-        )
+        ok_b = universe.where(~dropped).select(
+            "band_id", "band_hash", "file_id")
         new_b = new_bands.select(
             "band_id", "band_hash", F.col("file_id").alias("new_id")
         )
@@ -682,48 +737,58 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
         # dedicated count job. Task retries can inflate an observe()
         # accumulator, so it is a metric, never a gate (same rule as the
         # checkpoint cross-check in pipeline.py).
-        from pyspark.sql import Observation
-
-        obs = Observation(f"fold_pairs_{batch_id}")
-        pairs = pairs.observe(obs, F.count(F.lit(1)).alias("n_pairs"))
+        pair_obs = Observation(f"fold_pairs_{batch_id}")
+        pair_metrics = [F.count(F.lit(1)).alias("n_pairs")]
+        pairs = pairs.observe(pair_obs, *pair_metrics)
 
         # 6. verify: fetch endpoint sketches from the rep-signature state
-        # via a semi-join (scan-only; no shuffle of the wide state). The
-        # endpoint superset is the universe's FILE ids — derived from the
-        # persisted narrow frame, NOT from the pair set, so the pair join
-        # stays single-consumer inside the edges job (a pairs-derived
-        # endpoint set would put the unpopulated pair plan in two
-        # concurrent branches and double-compute it). Broadcast gate:
-        # ≤8 bytes per universe row against the common bytes cap.
+        # via a semi-join (scan-only; no shuffle of the wide state, and
+        # no distinct of the endpoint ids — duplicates are harmless on a
+        # semi-join's build side). The endpoint superset is the
+        # universe's FILE ids — derived from the persisted narrow frame,
+        # NOT from the pair set, so the pair join stays single-consumer
+        # inside the edges job (a pairs-derived endpoint set would put
+        # the unpopulated pair plan in two concurrent branches and
+        # double-compute it). Broadcast gate: 8 bytes per universe row
+        # against the common bytes cap.
         # Against fb-bucketed repsig partitions the read additionally
         # partition-prunes to the buckets an endpoint id can live in —
         # the semi-join then filters within the surviving buckets — so
         # the last WIDE prior-state scan term follows the batch, same
         # cost gate as the band-index pruning above.
-        ep_hint = (F.broadcast if 8 * universe_rows <= _BROADCAST_MAX_BYTES
-                   else (lambda df: df))
-        endpoint_ids = universe.select("file_id").distinct()
+        endpoint_ids = universe.select("file_id")
         repsig_parts = (
             _prior_parts(state_dir, "repsigs", batch_id) + [repsig_part]
         )
         rs_prunable = sum(
             _part_bytes(p) for p in repsig_parts if _bucket_scheme(p, "fb")
         )
+        # Both gates read the footer bound; only a bound too loose to
+        # decide them pays one job for the exact row count (which also
+        # builds the cache), so every decision equals the exact-count one.
+        gate_rows = _BROADCAST_MAX_BYTES // 8
+        if rs_prunable > _PRUNE_MIN_BYTES:
+            gate_rows = min(gate_rows, _PRUNE_MAX_HASHES)
+        universe_rows = universe_bound
+        if universe_bound > gate_rows:
+            universe_rows = _timed(phases, "universe_count", universe.count)
+        ep_hint = (F.broadcast if 8 * universe_rows <= _BROADCAST_MAX_BYTES
+                   else (lambda df: df))
         touched_ids = None
         if (rs_prunable > _PRUNE_MIN_BYTES
                 and universe_rows <= _PRUNE_MAX_HASHES):
             touched_ids = [
                 r[0] for r in _timed(
-                    phases, "touched_endpoints", endpoint_ids.collect,
+                    phases, "touched_endpoints",
+                    endpoint_ids.distinct().collect,
                 )
             ]
-        all_repsigs, rs_buckets_read, rs_buckets_total = (
-            _read_bucketed_parts(
-                spark, os.path.join(state_dir, "repsigs"), repsig_parts,
-                "fb", touched_ids,
-            )
+        all_repsigs, _, rs_buckets_read, rs_buckets_total = (
+            _read_bucketed_parts(spark, "repsigs", repsig_parts, "fb",
+                                 touched_ids)
         )
-        verify_side = all_repsigs.join(ep_hint(endpoint_ids), "file_id")
+        verify_side = all_repsigs.join(
+            ep_hint(endpoint_ids), "file_id", "left_semi")
         rep_edges = verify_pairs(
             pairs, verify_side, verify_side.select("file_id", "shingles"), cfg
         ).where("verified")
@@ -740,15 +805,18 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
         new_band_rows = _footer_rows(bands_part)
         _timed(phases, "edges_write",
                lambda: rep_edges.write.mode("overwrite").parquet(edge_part))
+        stats = _observed(bucket_obs, universe, bucket_metrics)
         meta = {
             "batch_id": batch_id,
             "new_rows": _footer_rows(os.path.join(
                 state_dir, "signatures", f"batch_id={batch_id}")),
             "new_edges": _footer_rows(edge_part),
             "new_groups": _footer_rows(groups_part),
-            "born_groups": _footer_rows(repsig_part),
-            "candidate_pairs": int(obs.get["n_pairs"]),
-            "touched_old_band_rows": universe_rows - new_band_rows,
+            "born_groups": born_groups,
+            "candidate_pairs": int(
+                _observed(pair_obs, pairs, pair_metrics)["n_pairs"]),
+            "touched_old_band_rows":
+                int(stats["universe_rows"]) - new_band_rows,
             "dropped_buckets": int(stats["dropped_buckets"]),
             "dropped_rows": int(stats["dropped_rows"]),
             "max_bucket_size": int(stats["max_bucket_size"]),
@@ -773,6 +841,18 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
                 except BaseException:
                     pass  # a primary exception is already propagating
         universe.unpersist()
+
+
+def _observed(obs: Observation, df: DataFrame, metrics: list) -> dict:
+    """The metrics ``obs`` collected during the first action over ``df``.
+    AQE drops operators above a relation it finds empty at run time; when
+    that removes every observed node from the executed plan the
+    observation reports nothing, and the same aggregates are computed
+    with one job instead."""
+    try:
+        return obs.get
+    except Py4JJavaError:
+        return df.agg(*metrics).first().asDict()
 
 
 def _watermark(state_dir: str) -> int:
@@ -873,7 +953,7 @@ def compact_state(spark: SparkSession, state_dir: str,
                 ("band_hash", "bh") if table == "bands"
                 else ("file_id", "fb")
             )
-            df, _, _ = _read_bucketed_parts(spark, tdir, dirs, prefix)
+            df, *_ = _read_bucketed_parts(spark, table, dirs, prefix)
             _write_bucketed_part(
                 df, tmp, key_col, prefix, cfg,
                 batch_rows=sum(_footer_rows(d) for d in dirs),
@@ -882,7 +962,7 @@ def compact_state(spark: SparkSession, state_dir: str,
                 ),
             )
             continue
-        df = spark.read.parquet(*dirs)
+        df = _read_state(spark, table, *dirs)
         if table == "groups":
             df = df.groupBy("g1", "g2").agg(
                 F.min("rep_delta").alias("rep_delta"),
@@ -934,12 +1014,10 @@ class _StateFrames(dict):
 
     def _build(self, key: str) -> DataFrame:
         _recover_compaction(self._state_dir)
-        if key == "signatures":
-            return self._spark.read.parquet(
-                os.path.join(self._state_dir, "signatures"))
-        if key == "edges_compact":
-            return self._spark.read.parquet(
-                os.path.join(self._state_dir, "edges"))
+        if key in ("signatures", "edges_compact"):
+            table = "edges" if key == "edges_compact" else key
+            return _read_state(self._spark, table,
+                               os.path.join(self._state_dir, table))
         if key == "edges":
             # member-level verified pair surface (lazy, quadratic in group
             # sizes — audits only, parity with run_pipeline()["edges"])
@@ -988,11 +1066,12 @@ def _groups_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
     before the members table existed."""
     mem_dir = os.path.join(state_dir, "members")
     if not os.path.isdir(mem_dir):
-        sigs = spark.read.parquet(os.path.join(state_dir, "signatures"))
+        sigs = _read_state(spark, "signatures",
+                           os.path.join(state_dir, "signatures"))
         return sketch_groups(sigs.drop("batch_id"))
     from pyspark.sql import Window
 
-    mem = spark.read.parquet(mem_dir).drop("batch_id")
+    mem = _read_state(spark, "members", mem_dir).drop("batch_id")
     w = Window.partitionBy("g1", "g2")
     return mem.select(
         "file_id", "g1", "g2",
@@ -1010,7 +1089,7 @@ def expanded_edges(spark: SparkSession, state_dir: str) -> DataFrame:
     endpoint is always some member of its group, but need not remain the
     group minimum once later batches add smaller file_ids."""
     _recover_compaction(state_dir)  # never read a half-compacted layout
-    rep_edges = spark.read.parquet(os.path.join(state_dir, "edges"))
+    rep_edges = _read_state(spark, "edges", os.path.join(state_dir, "edges"))
     groups = _groups_from_state(spark, state_dir)
     key = groups.select("file_id", "g1", "g2")
     mem = groups.select("g1", "g2", F.col("file_id").alias("member"))
@@ -1044,13 +1123,22 @@ def current_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     from .operators.cluster import cluster_assignments
 
     _recover_compaction(state_dir)  # never read a half-compacted layout
-    sigs = spark.read.parquet(os.path.join(state_dir, "signatures"))
-    rep_edges = spark.read.parquet(os.path.join(state_dir, "edges"))
+    sigs = _read_state(spark, "signatures",
+                       os.path.join(state_dir, "signatures"))
+    edge_dir = os.path.join(state_dir, "edges")
+    rep_edges = _read_state(spark, "edges", edge_dir)
     groups = _groups_from_state(spark, state_dir)
     cluster_input = group_star_pairs(groups).unionByName(
         rep_edges.select("src", "dst")
     )
-    return cluster_assignments(sigs.select("file_id"), cluster_input)
+    # footer-measured bound on the CC input: one star edge per non-rep
+    # member plus every stored rep edge. Under the driver-finalize cap
+    # the CC collects once instead of paying a persist + count probe.
+    mem_dir = os.path.join(state_dir, "members")
+    max_edges = (_footer_rows(mem_dir) + _footer_rows(edge_dir)
+                 if os.path.isdir(mem_dir) else None)
+    return cluster_assignments(sigs.select("file_id"), cluster_input,
+                               max_edges=max_edges)
 
 
 def stream_corpus(spark: SparkSession, input_dir: str, state_dir: str,

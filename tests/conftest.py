@@ -20,3 +20,16 @@ def corpus200(spark):
     from dedup_spark.synth import corpus_df
 
     return corpus_df(spark, 200, seed=42).cache()
+
+
+@pytest.fixture(scope="session")
+def synth_sample():
+    """Deterministic in-repo chunker input (~51 KB): 16 generated source
+    files (near-dup clusters included) followed by their zlib stream, so
+    both repetitive text and high-entropy bytes are covered."""
+    import zlib
+
+    from dedup_spark.synth import generate_corpus
+
+    text = "".join(r["content"] for r in generate_corpus(16, seed=7)).encode()
+    return text + zlib.compress(text, 9)

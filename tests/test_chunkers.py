@@ -50,8 +50,13 @@ GOLDEN_ENTROPY = [
 
 @pytest.fixture(scope="module")
 def sample_bytes():
-    with open(SAMPLE, "rb") as f:
-        return f.read()
+    """The reference sample the golden fragment vectors were cut from;
+    only those goldens need it, so they skip when it is absent."""
+    try:
+        with open(SAMPLE, "rb") as f:
+            return f.read()
+    except FileNotFoundError:
+        pytest.skip(f"reference golden data absent: {SAMPLE}")
 
 
 def _frag_tuples(frags, data):
@@ -80,7 +85,7 @@ def test_golden_entropy(sample_bytes, impl):
     assert [b[1] for b in bounds] == [g[0] for g in GOLDEN_ENTROPY]
 
 
-def test_fast_path_matches_py(sample_bytes):
+def test_fast_path_matches_py(synth_sample):
     """C kernel and Python kernel agree byte-for-byte on varied inputs."""
     import random
 
@@ -89,9 +94,9 @@ def test_fast_path_matches_py(sample_bytes):
         b"",
         b"x",
         bytes(50_000),
-        sample_bytes,
+        synth_sample,
         bytes(rng.randrange(256) for _ in range(200_000)),
-        (sample_bytes * 13)[:100_000],
+        (synth_sample * 13)[:100_000],
     ]
     for data in cases:
         for size in (512, 1024, 4096, 65536):
@@ -116,18 +121,20 @@ def test_splitter_zero_golden():
     assert sum(f["length"] for f in frags if f["new"]) == 1050
 
 
-def test_chunks_cover_input(sample_bytes):
+def test_chunks_cover_input(synth_sample):
     for mode in ("fixed", "dynamic", "entropy"):
-        bounds = ck.chunk_fn(mode)(sample_bytes, 1024)
+        bounds = ck.chunk_fn(mode)(synth_sample, 1024)
         pos = 0
         for off, length in bounds:
             assert off == pos and length > 0
             pos += length
-        assert pos == len(sample_bytes)
+        assert pos == len(synth_sample)
 
 
-def test_zpaq_block_size_bounds(sample_bytes):
-    for off, length in ck.zpaq_chunks(sample_bytes, 4096)[:-1]:
+def test_zpaq_block_size_bounds(synth_sample):
+    bounds = ck.zpaq_chunks(synth_sample, 4096)
+    assert len(bounds) > 1
+    for off, length in bounds[:-1]:
         assert 4096 // 64 <= length <= 4096
 
 

@@ -45,9 +45,8 @@ def test_format2_zero_golden():
 
 
 @pytest.mark.parametrize("mode", ["fixed", "dynamic", "entropy"])
-def test_roundtrip_sampledata(mode):
-    with open("/root/reference/testdata/sampledata.zip", "rb") as f:
-        data = f.read()
+def test_roundtrip_sampledata(mode, synth_sample):
+    data = synth_sample
     idx, dat = encode_format1(data, mode=mode, max_size=4096)
     assert decode_format1(idx, dat) == data
     s = encode_format2(data, mode=mode, max_size=4096, max_blocks=100)

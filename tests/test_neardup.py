@@ -501,7 +501,8 @@ def test_cc_edges_canonical_flag_equivalence(spark):
     """edges_canonical=True (pipeline fast path: skips the canonicalization
     exchange) must produce identical clusters to the default path when the
     input really is canonical — and the default path must canonicalize a
-    messy edge list (reversed, duplicated, self-loop) to the same answer."""
+    messy edge list (reversed, duplicated, self-loop) to the same answer,
+    as must the footer-bounded path that collects it uncanonicalized."""
     from dedup_spark.operators.cluster import cluster_assignments
 
     canonical = [(0, 1), (1, 2), (5, 6), (8, 9)]
@@ -521,5 +522,12 @@ def test_cc_edges_canonical_flag_equivalence(spark):
             ids, spark.createDataFrame(messy, "src long, dst long")
         ).collect()
     }
-    assert fast == safe
+    bounded = {
+        (r["file_id"], r["cluster_id"])
+        for r in cluster_assignments(
+            ids, spark.createDataFrame(messy, "src long, dst long"),
+            max_edges=len(messy),
+        ).collect()
+    }
+    assert fast == safe == bounded
     assert (2, 0) in fast and (9, 8) in fast and (7, 7) in fast

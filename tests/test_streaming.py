@@ -348,6 +348,31 @@ def test_bucketed_band_state_and_pruned_fold(spark, tmp_path_factory,
     assert _pairs(expanded_edges(spark, state).where("verified")) == batch_edges
 
 
+def test_loose_bound_measures_universe(spark, tmp_path_factory, monkeypatch):
+    """The fold's gates read a footer upper bound on the band universe.
+    When that bound is too loose to decide a gate, one job counts the
+    universe exactly, so the decision and every counter equal the
+    exact-count ones: here the exact count is over the endpoint-prune
+    cap, so the rep-sketch read is not pruned."""
+    from dedup_spark import streaming as st
+
+    cfg = DedupConfig(state_buckets=16, state_bucket_min_rows=0)
+    corpus = corpus_df(spark, 90, seed=67).cache()
+    state = str(tmp_path_factory.mktemp("state_bound"))
+    incremental_update(corpus.where("file_id < 80"), state, cfg)
+    monkeypatch.setattr(st, "_PRUNE_MIN_BYTES", 0)
+    monkeypatch.setattr(st, "_PRUNE_MAX_HASHES", 1)
+    incremental_update(corpus.where("file_id >= 80"), state, cfg)
+    with open(os.path.join(state, "metrics.jsonl")) as f:
+        m = [json.loads(ln) for ln in f][-1]
+    assert "universe_count" in m["phase_ms"]
+    assert "touched_endpoints" not in m["phase_ms"]
+    assert m["repsig_state_buckets_read"] == m["repsig_state_buckets_total"]
+    assert m["touched_old_band_rows"] > 0
+    batch_edges = _pairs(run_pipeline(corpus, CFG)["edges"].where("verified"))
+    assert _pairs(expanded_edges(spark, state).where("verified")) == batch_edges
+
+
 def test_concurrent_writer_failure_fails_fold(spark, tmp_path_factory,
                                               monkeypatch):
     """The group-delta and bands partitions commit on concurrent threads;
@@ -401,3 +426,101 @@ def test_structured_streaming_wrapper(spark, tmp_path_factory):
     # micro-batch boundaries may differ from the 60/60 split (file-based
     # triggers), but the cumulative edge set must equal the batch result
     assert got == batch_edges
+
+
+def test_fold_of_exact_copies_commits(spark, tmp_path_factory):
+    """A batch made only of exact copies of stored files births no group,
+    so its pair and bucket plans run over empty relations (AQE prunes the
+    observed operators). The fold must still commit, with zero counters,
+    and leave the clusters equal to the batch run's."""
+    corpus = corpus_df(spark, 60, seed=53).cache()
+    state = str(tmp_path_factory.mktemp("state_copies"))
+    incremental_update(corpus, state, CFG)
+    copies = corpus.where("file_id < 15").withColumn(
+        "file_id", F.col("file_id") + 1000)
+    incremental_update(copies, state, CFG)
+    with open(os.path.join(state, "metrics.jsonl")) as f:
+        m = [json.loads(ln) for ln in f][-1]
+    assert m["batch_id"] == 1 and m["born_groups"] == 0
+    assert m["candidate_pairs"] == 0 and m["touched_old_band_rows"] == 0
+    assert m["dropped_buckets"] == m["dropped_rows"] == 0
+    assert os.path.exists(
+        os.path.join(state, "edges", "batch_id=1", "_SUCCESS"))
+    both = corpus.unionByName(copies)
+    batch_cl = {r["file_id"]: r["cluster_id"]
+                for r in run_pipeline(both, CFG)["clusters"].collect()}
+    inc_cl = {r["file_id"]: r["cluster_id"]
+              for r in current_clusters(spark, state).collect()}
+    assert inc_cl == batch_cl
+
+
+@pytest.mark.parametrize("bucketed", [False, True], ids=["flat", "bucketed"])
+def test_pinned_state_schemas_match_written(spark, tmp_path_factory,
+                                            bucketed):
+    """Every state read passes a pinned schema instead of inferring one
+    (no schema-inference job). Each pinned schema must equal what a fresh
+    fold writes, in the flat and the bucketed (bh/fb) layouts."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from dedup_spark import streaming as st
+
+    cfg = (DedupConfig(state_buckets=8, state_bucket_min_rows=0)
+           if bucketed else CFG)
+    corpus = corpus_df(spark, 50, seed=59).cache()
+    state = str(tmp_path_factory.mktemp("state_schema"))
+    incremental_update(corpus.where("file_id < 30"), state, cfg)
+    incremental_update(corpus.where("file_id >= 30"), state, cfg)
+    assert set(st.STATE_SCHEMAS) == {
+        "signatures", "repsigs", "members", "groups", "bands", "edges"}
+    layouts = set()
+    for table, ddl in st.STATE_SCHEMAS.items():
+        part = os.path.join(state, table, "batch_id=1")
+        inferred = st._drop_layout_cols(spark.read.parquet(part)).schema
+        assert inferred == _parse_datatype_string(ddl), table
+        layouts |= {n.split("=")[0][:2] for n in os.listdir(part)
+                    if "=" in n}
+        # the pinned reader sees the same rows as the inferring one
+        pinned = st._drop_layout_cols(st._read_state(spark, table, part))
+        assert pinned.count() == spark.read.parquet(part).count()
+    assert layouts == ({"bh", "fb"} if bucketed else set())
+
+
+def _group_jobs(spark, group: str) -> int:
+    """Jobs recorded for ``group``, once the listener bus has caught up."""
+    import time
+
+    tracker = spark.sparkContext.statusTracker()
+    seen, stable_since = -1, time.time()
+    while time.time() - stable_since < 0.5:
+        n = len(tracker.getJobIdsForGroup(group))
+        if n != seen:
+            seen, stable_since = n, time.time()
+        time.sleep(0.05)
+    return seen
+
+
+# Spark jobs of one small-batch fold + current_clusters on the fixed state
+# below (8 cores, 8 shuffle partitions): 43 while every state read
+# inferred its schema and the fold and CC ran their size probes, 23 since.
+FOLD_SERVE_JOB_FLOOR = 23
+
+
+def test_fold_and_serve_job_floor(spark, tmp_path_factory):
+    """Fixed cost of the incremental path, counted in Spark jobs: one
+    fold of a small batch into a fixed state plus one current_clusters.
+    No probe job (schema inference, bucket-stats barrier, CC size count)
+    may come back silently."""
+    corpus = corpus_df(spark, 80, seed=61).cache()
+    corpus.count()  # the input cache is not part of the fold
+    state = str(tmp_path_factory.mktemp("state_floor"))
+    incremental_update(corpus.where("file_id < 60"), state, CFG)
+    batch = corpus.where("file_id >= 60")
+    sc = spark.sparkContext
+    sc.setJobGroup("fold_serve_floor", "fold + serve job floor")
+    try:
+        incremental_update(batch, state, CFG)
+        current_clusters(spark, state)  # the driver CC collects here
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _group_jobs(spark, "fold_serve_floor") <= FOLD_SERVE_JOB_FLOOR
