@@ -874,13 +874,19 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             a.hint("merge")
             .join(b, "gh")
             .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            # length filter (exact, output-preserving at ANY scale): for a
-            # pair with gram-set sizes n_a, n_b and any overlap c,
-            # jaccard = c/(n_a+n_b-c) <= min(n)/max(n), so a pair with
-            # 10*min(n) < 3*max(n) can never reach the 0.3 threshold and
+            # length filter: for a pair with gram-set sizes n_a, n_b and
+            # any overlap c, jaccard = c/(n_a+n_b-c) <= min(n)/max(n), so
+            # a pair with 10*min(n) < 3*max(n) has exact jaccard < 0.3 and
             # every one of its instances (n_src/n_dst are pair constants)
-            # is dropped BEFORE the pair exchange — integer arithmetic,
-            # no float boundary (guide §2.3: shuffle fewer rows).
+            # is dropped BEFORE the pair exchange — integer arithmetic
+            # (guide §2.3: shuffle fewer rows). Caveat: the output
+            # predicate is round(jaccard, 6) >= 0.3, not jaccard >= 0.3.
+            # A dropped pair sits at least 1/(10*max(n)) below 0.3, which
+            # exceeds the 5e-7 rounding margin unless max(n) >= 200,000
+            # grams; only there can a pair that would round up to 0.3 be
+            # lost. The parity twin caps a document at 9,999 grams
+            # (generate_series(1, 9999) in _NGRAM_SQL), so that case is
+            # unreachable on any input the oracle can check.
             .where(
                 F.least("a.n", "b.n") * F.lit(10)
                 >= F.greatest("a.n", "b.n") * F.lit(3)

@@ -101,8 +101,7 @@ PREFILTER_MIN_BAND_ROWS = 5_000_000
 
 def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
                     return_metrics: bool = False,
-                    n_rows: int | None = None,
-                    prefilter: bool | None = None):
+                    n_rows: int | None = None):
     """Distinct (src, dst) candidate pairs from banded MinHash.
 
     ``band_buckets`` explodes each signature into one (band_id,
@@ -126,14 +125,9 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     pipeline's cache-materialization barrier returns it for free). Small
     measured inputs drop the mega-bucket pre-filter job — the cap itself
     still applies inside the window pass, so the pair OUTPUT is identical
-    either way; only the plan shape changes. An explicit ``prefilter``
-    overrides the row-count heuristic (the pipeline's overlapped-tail
-    path decides from driver-measured corpus bytes before any count
-    exists).
+    either way; only the plan shape changes.
     """
-    if prefilter is None:
-        prefilter = (n_rows is None
-                     or n_rows * cfg.bands > PREFILTER_MIN_BAND_ROWS)
+    prefilter = n_rows is None or n_rows * cfg.bands > PREFILTER_MIN_BAND_ROWS
     return salted_pairs(
         band_buckets(signatures, cfg), cfg.max_bucket, cfg.salt,
         return_metrics=return_metrics, prefilter=prefilter,

@@ -114,8 +114,8 @@ def minhash_simhash(x: np.ndarray, a: np.ndarray, b: np.ndarray):
 
 
 def _sig_record_batch(ids, contents, a, b, cfg) -> pa.RecordBatch:
-    """Kernel loop shared by both feed paths: (file_id, bytes) rows →
-    one signature RecordBatch."""
+    """Kernel loop of ``compute_signatures``: (file_id, bytes) rows → one
+    signature RecordBatch."""
     o_id, o_nc, o_ns, o_mh, o_sh, o_sg = [], [], [], [], [], []
     for fid, data in zip(ids, contents):
         data = data or b""
@@ -171,183 +171,6 @@ def compute_signatures(corpus: DataFrame, cfg: DedupConfig,
         # bytes JVM-side; the kernel needs bytes, never str
         F.col(content_col).cast("binary").alias("content"),
     ).mapInArrow(sig_batches, SIG_SCHEMA)
-
-
-def parquet_scan_tasks(corpus_path: str) -> list:
-    """Driver-side split planning for the Python-native feed: one
-    (path, row_group, uncompressed_bytes) triple per parquet row group
-    (footer metadata only — no data read). The Iceberg analog lists data
-    files + split offsets from the catalog manifest."""
-    import os
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.parquet as pq
-
-    def footer(fp):
-        md = pq.ParquetFile(fp).metadata
-        return [
-            (fp, rg, md.row_group(rg).total_byte_size)
-            for rg in range(md.num_row_groups)
-        ]
-
-    paths = [
-        os.path.join(corpus_path, name)
-        for name in sorted(os.listdir(corpus_path))
-        if name.endswith(".parquet")
-    ]
-    # serial footer opens cost ~5 ms each — 1.4 s of dead driver time on a
-    # 256-file corpus (event-log measured); a thread pool makes it ~0.1 s
-    with ThreadPoolExecutor(max_workers=16) as ex:
-        return [t for ts in ex.map(footer, paths) for t in ts]
-
-
-def _pack_tasks(tasks: list, n_buckets: int) -> list:
-    """Greedy size-balanced bin packing (largest first, into the lightest
-    bucket) — the same job Spark's FilePartition packing does for JVM
-    scans. Returns a list of [(path, rg), ...] buckets."""
-    import heapq
-
-    n_buckets = max(1, min(n_buckets, len(tasks)))
-    heap = [(0, i) for i in range(n_buckets)]  # (bytes, bucket)
-    heapq.heapify(heap)
-    buckets = [[] for _ in range(n_buckets)]
-    for path, rg, sz in sorted(tasks, key=lambda t: (-t[2], t[0], t[1])):
-        filled, i = heapq.heappop(heap)
-        buckets[i].append((path, rg))
-        heapq.heappush(heap, (filled + sz, i))
-    return [b for b in buckets if b]
-
-
-def compute_signatures_direct(spark, corpus_path: str, cfg: DedupConfig,
-                              content_col: str = "content",
-                              id_col: str = "file_id",
-                              rows_per_kernel_batch: int = 64,
-                              n_tasks: int | None = None) -> DataFrame:
-    """Signatures with a PYTHON-NATIVE parquet feed: tasks carry (file,
-    row_group) coordinates; each Python worker opens its split with
-    pyarrow and streams bytes straight into the kernel.
-
-    Why this exists (measured, BENCH/BASELINE.md §4): the JVM-scan path
-    copies every corpus byte ~6× (parquet decompress → UTF8String →
-    binary → Arrow IPC → local socket → Python), and with 8 concurrent
-    Arrow feed streams in one JVM that path hits a machine-level per-byte
-    floor that caps stage scaling at ~0.83 regardless of kernel speed.
-    Reading the columnar split in the worker (pyarrow C++, zero JVM
-    involvement) makes the feed scale with the workers themselves. This
-    is the standard Spark pattern for Python-heavy columnar stages
-    (file-list DataFrame + mapInArrow reader — same shape petastorm/NVT
-    use); Spark still owns scheduling, retries, and everything downstream
-    of the signature rows. Column pruning is explicit (``columns=[id,
-    content]``), predicate pushdown is irrelevant (the kernel reads every
-    row), and the output is row-for-row identical to
-    ``compute_signatures`` (equivalence-tested).
-    """
-    a_list, b_list = minhash_coeffs(cfg.num_perm, cfg.seed)
-    tasks = parquet_scan_tasks(corpus_path)
-    if not tasks:
-        raise FileNotFoundError(f"no parquet files under {corpus_path}")
-    # Task granularity matters twice (measured): mapInArrow pays a fixed
-    # per-task cost (~0.14 s even with worker reuse), so row-group-per-task
-    # over small row groups drowns in setup; and a python-RDD-backed task
-    # frame (createDataFrame over parallelize) adds a whole extra
-    # pickled-conversion pass per partition (~10 s on a 256-task corpus).
-    # So: greedy size-balanced buckets, ONE LocalRelation row per bucket
-    # (driver→JVM directly, no python-RDD path), round-robin repartition
-    # to exactly one task per bucket.
-    if n_tasks is None:
-        par = spark.sparkContext.defaultParallelism
-        total = sum(t[2] for t in tasks)
-        # ~2 waves of core-count tasks (uniform corpora: full waves, no
-        # straggler tail), floored by a bytes target for huge inputs;
-        # rounded up to a multiple of the core count so every wave is full
-        n_raw = max(2 * par, int(total // (512 << 20)) + 1)
-        n_tasks = ((n_raw + par - 1) // par) * par
-    buckets = _pack_tasks(tasks, n_tasks)
-
-    bc_buckets = spark.sparkContext.broadcast(buckets)
-    # worker wall/CPU totals ride accumulators (per-task delivery, ~zero
-    # overhead): feed_metrics()["cpu_s"] after an action gives the exact
-    # Python-side cost of the feed+kernel — the mid-run host-health
-    # signal an endpoint canary cannot see (this VM's host flips
-    # performance modes mid-run; BENCH/BASELINE.md §4).
-    wall_acc = spark.sparkContext.accumulator(0.0)
-    cpu_acc = spark.sparkContext.accumulator(0.0)
-    global _LAST_FEED_ACCS
-    _LAST_FEED_ACCS = {"wall_s": wall_acc, "cpu_s": cpu_acc}
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import json
-        import os
-        import time
-
-        import pyarrow.parquet as pq
-
-        # env-gated worker-side profiling (scaling forensics): one jsonl
-        # line per bucket with wall + process-CPU, written outside the
-        # data path. Zero overhead when SIG_PROF is unset.
-        prof_dir = os.environ.get("SIG_PROF")
-
-        a = np.asarray(a_list, dtype=np.int64)
-        b = np.asarray(b_list, dtype=np.int64)
-        for batch in batches:
-            for bucket_id in batch.column(0).to_pylist():
-                t0w, t0c = time.time(), time.process_time()
-                for path, rg in bc_buckets.value[bucket_id]:
-                    pf = pq.ParquetFile(path)
-                    # bounded batches: a row group may decompress to
-                    # hundreds of MB; use_threads=False — one core per
-                    # worker, the parallelism is Spark's
-                    for tb in pf.iter_batches(
-                        batch_size=rows_per_kernel_batch,
-                        row_groups=[rg],
-                        columns=[id_col, content_col],
-                        use_threads=False,
-                    ):
-                        ids = tb.column(0).to_pylist()
-                        col = tb.column(1)
-                        if pa.types.is_string(col.type):
-                            col = col.cast(pa.binary())  # zero-copy view
-                        elif pa.types.is_large_string(col.type):
-                            col = col.cast(pa.large_binary())
-                        yield _sig_record_batch(
-                            ids, col.to_pylist(), a, b, cfg
-                        )
-                dw = time.time() - t0w
-                dc = time.process_time() - t0c
-                wall_acc.add(dw)
-                cpu_acc.add(dc)
-                if prof_dir:
-                    line = json.dumps({
-                        "bucket": bucket_id, "pid": os.getpid(),
-                        "wall": round(dw, 3), "cpu": round(dc, 3),
-                        "end": round(time.time(), 3),
-                    })
-                    os.makedirs(prof_dir, exist_ok=True)
-                    with open(os.path.join(
-                            prof_dir, f"{os.getpid()}.jsonl"), "a") as fh:
-                        fh.write(line + "\n")
-
-    # exactly ONE bucket per task, with NO shuffle and NO sampling job:
-    # spark.range(n, numPartitions=n) is a leaf with one id per partition
-    # (round-robin repartition collided — event-log audit found 0-bucket
-    # and 2-bucket tasks, a whole straggler wave at 8 cores — and
-    # repartitionByRange costs a separate range-sampling job); the bucket
-    # payload rides a broadcast, not the rows.
-    tasks_df = spark.range(0, len(buckets), 1, len(buckets))
-    return tasks_df.mapInArrow(run, SIG_SCHEMA)
-
-
-_LAST_FEED_ACCS: dict | None = None
-
-
-def feed_metrics() -> dict | None:
-    """Worker wall/CPU totals of the most recent
-    ``compute_signatures_direct`` plan, valid after an action has run it:
-    ``{"wall_s": float, "cpu_s": float}``. None if the direct feed has
-    not been built in this process."""
-    if _LAST_FEED_ACCS is None:
-        return None
-    return {k: round(float(v.value), 2) for k, v in _LAST_FEED_ACCS.items()}
 
 
 def minhash_jaccard_est(col_a: str, col_b: str, k: int):

@@ -15,8 +15,6 @@ Three gates, cheapest first:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 
 from pyspark.sql import DataFrame
@@ -25,53 +23,12 @@ from pyspark.sql import functions as F
 from ..config import DedupConfig
 
 
-def shingle_sets(corpus: DataFrame, cfg: DedupConfig,
-                 content_col: str = "content",
-                 id_col: str = "file_id") -> DataFrame:
-    """(file_id, shingles array<long>) via the signature kernel's shingler."""
-    import pyarrow as pa
-
-    from .signatures import shingle_hashes
-
-    def batches(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            contents = batch.column(1).to_pylist()  # binary → bytes
-            o_id, o_sh = [], []
-            for fid, data in zip(ids, contents):
-                data = data or b""
-                x, _ = shingle_hashes(data, cfg)
-                u = np.unique(x)[:cfg.max_shingles]  # bottom-k sketch
-                o_id.append(fid)
-                o_sh.append(u.astype(np.int64).tolist())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, pa.int64()),
-                 pa.array(o_sh, pa.list_(pa.int64()))],
-                names=["file_id", "shingles"],
-            )
-
-    return corpus.select(
-        F.col(id_col).alias("file_id"),
-        F.col(content_col).cast("binary").alias("content"),
-    ).mapInArrow(batches, "file_id long, shingles array<long>")
-
-
 def verify_pairs(pairs: DataFrame, signatures: DataFrame,
                  shingles: DataFrame, cfg: DedupConfig,
-                 two_phase: bool | None = None,
-                 broadcast_pairs: bool = False) -> DataFrame:
+                 two_phase: bool | None = None) -> DataFrame:
     """pairs (src,dst) → verified edges with exact Jaccard.
 
     Returns (src, dst, hamming, jaccard, verified).
-
-    ``broadcast_pairs`` pins the pair side of the sketch joins as the
-    broadcast build side — the choice Catalyst's statistics make anyway
-    once the signature cache is materialized. Callers pass it for
-    measured-small corpora so the physical plan is IDENTICAL whether it
-    is frozen before or after the cache populates (what makes the
-    pipeline's construct-during-bulk overlap safe); it must stay False
-    when candidate volume is unbounded (pairs at 100 TB scale are not a
-    driver-sized relation).
 
     Size-tiered shuffle (the 100 TB lever on the verify stage): when the
     hamming gate is active (``simhash_hamming_max < 64``) the pair rows
@@ -83,8 +40,6 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
     Jaccard) two narrow extra joins buy nothing, so the single-phase plan
     is kept; ``two_phase`` overrides the auto choice for A/B measurement.
     """
-    if broadcast_pairs:
-        pairs = F.broadcast(pairs)
     if two_phase is None:
         two_phase = cfg.simhash_hamming_max < 64
     # simhash and the shingle set come from the same signature row; in the

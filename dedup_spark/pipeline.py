@@ -18,50 +18,13 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-
-# Corpora whose driver-measured parquet footprint is at or under this are
-# "tail-latency" runs: the pipeline overlaps the cache-materialization
-# count with tail-plan construction and pins the pair-side broadcast +
-# drops the mega-bucket pre-filter job (all output-identical plan-shape
-# choices). Compressed bytes, so ~2 GB ≈ a few tens of GB of text — well
-# inside what a bounded candidate set can broadcast; everything larger
-# keeps the strict stats-driven 100 TB plan shape.
-SMALL_TAIL_MAX_BYTES = 2 << 30
-
-
-def _dir_parquet_bytes(path: str) -> int:
-    """Committed parquet bytes under a LOCAL directory — driver-side
-    metadata only, no Spark job. Returns 0 when the path is not locally
-    walkable (object-store URI, missing dir): ``os.walk`` yields nothing
-    there, and callers MUST treat 0 as unmeasured-therefore-LARGE — a
-    100 TB ``s3://`` corpus must never classify as a small-tail run just
-    because the driver can't stat it."""
-    total = 0
-    for dirpath, _, names in os.walk(path):
-        total += sum(
-            os.path.getsize(os.path.join(dirpath, n))
-            for n in names if n.endswith(".parquet")
-        )
-    return total
-
-
-def _small_tail_gate(corpus_path: str | None, cfg: DedupConfig) -> bool:
-    """True only for a POSITIVELY-measured small local corpus with the
-    LCS gate off. No path, an unwalkable path (object-store URI), or an
-    empty measurement all mean unmeasured → strict stats-driven planning;
-    min_lcs > 0 keeps the strict path because the LCS stage joins the
-    corpus itself, a stats-sensitive choice the small-tail overlap would
-    otherwise freeze against unpopulated estimates."""
-    if corpus_path is None or cfg.min_lcs > 0:
-        return False
-    return 0 < _dir_parquet_bytes(corpus_path) <= SMALL_TAIL_MAX_BYTES
 
 # Bump whenever a checkpointed stage's SEMANTICS change (round 2: stages
 # moved from member-level to representative-level frames). Folded into the
@@ -201,16 +164,16 @@ def run_pipeline(
     resume: bool = True,
     content_col: str = "content",
     id_col: str = "file_id",
-    corpus_path: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full near-dup pipeline.
 
-    ``corpus_path`` (optional): parquet directory backing ``corpus``.
-    When given, the signature stage uses the Python-native columnar feed
-    (``compute_signatures_direct`` — workers read their own row-group
-    splits with pyarrow instead of being fed over JVM→Python Arrow IPC;
-    row-for-row identical output, measured materially better feed
-    scaling). All other stages consume ``corpus`` as usual.
+    One plan: the signature stage is a single ``mapInArrow`` pass over
+    ``corpus`` (``compute_signatures``). Without a ``workdir`` the
+    signature+group frame is persisted and materialized by one count
+    before any tail frame is built, so every tail plan choice (the LSH
+    pre-filter gate, the verify join strategy) is made against a
+    populated cache and its measured row count. With a ``workdir`` each
+    stage is checkpointed to parquet instead and resumable on its own.
 
     Returned frames:
       signatures   per-file MinHash/SimHash/shingle-sketch rows
@@ -226,16 +189,12 @@ def run_pipeline(
     """
     from .operators.cluster import cluster_assignments
     from .operators.lsh import candidate_pairs, dropped_bucket_metrics
-    from .operators.signatures import (
-        compute_signatures, compute_signatures_direct,
-    )
+    from .operators.signatures import compute_signatures
     from .operators.verify import verify_pairs
 
     cfg = cfg or DedupConfig()
     spark = corpus.sparkSession
     ckpt = Checkpointer(spark, workdir, config_fingerprint(cfg))
-
-    from pyspark import StorageLevel
 
     def stage(name: str, build, persist: bool = True):
         t0 = time.time()
@@ -254,11 +213,8 @@ def run_pipeline(
         # counts): the persisted signature frame is bounded by the sketch
         # caps (~10 KB/row whatever the file sizes), so it always fits the
         # heap, and the serialized-batch disk round-trip per tail scan was
-        # pure overhead. The env knob exists for memory-tight deployments.
-        lvl = getattr(StorageLevel,
-                      os.environ.get("DEDUP_PERSIST_LEVEL",
-                                     "MEMORY_AND_DISK_DESER"))
-        return df.persist(lvl)
+        # pure overhead.
+        return df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
 
     from .operators.groups import (
         expand_group_edges, group_star_pairs, representative_ids,
@@ -268,10 +224,6 @@ def run_pipeline(
     _GROUP_COLS = ["g1", "g2", "rep", "group_size"]
 
     def _signatures():
-        if corpus_path is not None:
-            return compute_signatures_direct(
-                spark, corpus_path, cfg, content_col, id_col
-            )
         return compute_signatures(corpus, cfg, content_col, id_col)
 
     # signatures carry the distinct shingle sets too — ONE corpus scan
@@ -288,8 +240,6 @@ def run_pipeline(
         rep_sigs = signatures.join(representative_ids(groups), "file_id")
         verify_side = rep_sigs
         n_sigs = None  # not measured on this path: pre-filter stays on
-        small_tail = False
-        count_thread = None
     else:
         # fused plan: ONE wide exchange (window over the full signature
         # rows) yields signatures, groups, and rep_sigs as projections of
@@ -310,28 +260,7 @@ def run_pipeline(
         # (A separate narrow "core" cache without the shingle arrays was
         # measured too: the extra cache-build pass cost more than the
         # narrower tail scans saved.)
-        #
-        # Measured-SMALL corpora (driver-side parquet footprint — known
-        # before any job) additionally OVERLAP the count with the tail's
-        # DataFrame construction: ~1-1.4 s of py4j round-trips + per-frame
-        # analysis otherwise sit between the bulk job and the first tail
-        # job (event-log gap), at every parallelism level. The overlap is
-        # safe only because the one stats-sensitive physical choice in
-        # the tail — the pair side of the verify joins — is PINNED by an
-        # explicit broadcast hint on this path, so the edges_rep plan
-        # frozen at persist-registration (against the not-yet-populated
-        # cache) is identical to the plan the post-count statistics would
-        # pick. Large or UNMEASURED corpora keep the strict count-first
-        # sequencing and fully stats-driven planning (see
-        # _small_tail_gate for the full opt-in conditions).
-        small_tail = _small_tail_gate(corpus_path, cfg)
-        count_thread = None
-        if small_tail:
-            count_thread = threading.Thread(target=sig_groups.count)
-            count_thread.start()
-            n_sigs = None  # unknown during overlapped construction
-        else:
-            n_sigs = sig_groups.count()
+        n_sigs = sig_groups.count()
         signatures = sig_groups.drop(*_GROUP_COLS)
         groups = sig_groups.select("file_id", *_GROUP_COLS)
         rep_sigs = sig_groups.where(
@@ -341,14 +270,10 @@ def run_pipeline(
     shingles = verify_side.select("file_id", "shingles")
     # the cache-materialization count doubles as the measured row count
     # that cost-gates the mega-bucket pre-filter (small measured inputs
-    # drop its dedicated job + broadcast future; output identical); on
-    # the overlapped path the same gate decides from corpus bytes
+    # drop its dedicated job + broadcast future; output identical)
     pairs = stage(
         "candidates",
-        lambda: candidate_pairs(
-            rep_sigs, cfg, n_rows=n_sigs,
-            prefilter=False if small_tail else None,
-        ),
+        lambda: candidate_pairs(rep_sigs, cfg, n_rows=n_sigs),
         persist=False,
     )
     # stage name is "edges_rep", NOT round-1's "edges": the frame holds
@@ -357,8 +282,7 @@ def run_pipeline(
     # whose non-representative endpoints vanish in the expansion join.
     edges_rep = stage(
         "edges_rep",
-        lambda: verify_pairs(pairs, verify_side, shingles, cfg,
-                             broadcast_pairs=small_tail),
+        lambda: verify_pairs(pairs, verify_side, shingles, cfg),
     )
 
     if cfg.min_lcs > 0:
@@ -396,14 +320,6 @@ def run_pipeline(
     # (least/greatest distinct, cross-group) are canonical and disjoint by
     # construction, so CC may skip its canonicalization exchange; the
     # LCS-gated member-level set is not proven so and keeps the default.
-    if count_thread is not None:
-        # overlapped path: the cache MUST be fully populated before the
-        # first tail action runs (the clusters stage below) — an
-        # unpopulated multi-consumer cache double-computes the kernel
-        # under concurrent broadcast futures. (If construction above
-        # raises first, the thread just finishes its count on its own —
-        # no state to clean up.)
-        count_thread.join()
     clusters = stage(
         "clusters",
         lambda: cluster_assignments(

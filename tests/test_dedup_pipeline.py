@@ -259,73 +259,3 @@ def test_dup_injection_is_nonvacuous(spark):
     dm = e.q_doc_manifest(spark, sf_dir)
     assert dm.where("NOT is_new").count() == 72
     assert dm.where("backref IS NOT NULL").count() == 72
-
-
-def test_direct_parquet_feed_equivalence(spark, corpus200, tmp_path):
-    """compute_signatures_direct (Python-native pyarrow row-group feed)
-    must be row-for-row identical to the JVM-scan path, and the pipeline
-    must produce identical clusters through it."""
-    from dedup_spark.config import DedupConfig
-    from dedup_spark.operators.signatures import (
-        compute_signatures, compute_signatures_direct,
-    )
-    from dedup_spark.pipeline import run_pipeline
-
-    cfg = DedupConfig()
-    path = str(tmp_path / "corpus_pq")
-    corpus200.repartition(7).write.parquet(path)
-    pq_corpus = spark.read.parquet(path)
-
-    def rows(df):
-        return sorted(
-            (r["file_id"], r["n_chunks"], r["n_shingles"],
-             tuple(r["minhash"]), r["simhash"], tuple(r["shingles"]))
-            for r in df.collect()
-        )
-
-    jvm = rows(compute_signatures(pq_corpus, cfg))
-    direct = rows(compute_signatures_direct(spark, path, cfg))
-    assert direct == jvm
-
-    want = {(r["file_id"], r["cluster_id"])
-            for r in run_pipeline(pq_corpus, cfg)["clusters"].collect()}
-    res = run_pipeline(pq_corpus, cfg, corpus_path=path)
-    got = {(r["file_id"], r["cluster_id"])
-           for r in res["clusters"].collect()}
-    assert got == want
-    # corpus_path also marks the corpus measured-small here, so this run
-    # took the OVERLAPPED tail path (count concurrent with tail-plan
-    # construction): the pair side of the verify joins must be pinned as
-    # the broadcast build side — the invariant that makes plan freezing
-    # against the unpopulated cache equal to stats-driven planning
-    plan = res["edges_rep"]._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # and the mega-bucket pre-filter job is gated off (no anti-join)
-    assert "LeftAnti" not in plan
-
-
-def test_small_tail_gate_requires_positive_local_measurement(tmp_path):
-    """The small-tail plan shape (pinned pair broadcast, pre-filter off)
-    may only be chosen from a POSITIVE driver-side measurement. A path
-    os.walk can't see — an object-store URI at real scale, a missing dir,
-    or an empty one — must classify LARGE, never small."""
-    from dedup_spark.config import DedupConfig
-    from dedup_spark.pipeline import _small_tail_gate
-
-    cfg = DedupConfig()
-    # unmeasurable paths → strict planning
-    assert _small_tail_gate(None, cfg) is False
-    assert _small_tail_gate("s3://bucket/100tb-corpus", cfg) is False
-    assert _small_tail_gate(str(tmp_path / "missing"), cfg) is False
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert _small_tail_gate(str(empty), cfg) is False
-    # a real small local parquet footprint opts in ...
-    small = tmp_path / "small"
-    small.mkdir()
-    (small / "part-0.parquet").write_bytes(b"x" * 1024)
-    assert _small_tail_gate(str(small), cfg) is True
-    # ... unless the LCS gate is on (stats-sensitive corpus join)
-    import dataclasses
-    assert _small_tail_gate(
-        str(small), dataclasses.replace(cfg, min_lcs=16)) is False

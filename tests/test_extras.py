@@ -196,6 +196,44 @@ def test_entry_persist_cache_stable(spark):
     assert e._FRAME_CACHE == {}
 
 
+def test_band_query_size_gates_equivalent(spark, monkeypatch):
+    """Both size gates of q_minhash_band_candidates are plan choices, not
+    semantics: the defaults at sf0.01 (fused expansion, mega-bucket
+    pre-filter off) and both gates forced the other way (unfused
+    exchanges, pre-filter on) must emit the same (src, dst) set."""
+    import os
+    import re
+
+    import __spark_entry__ as e
+    from dedup_spark.operators import lsh
+
+    sf = "/root/testdata/sf0.01"
+    if not os.path.exists(sf):
+        pytest.skip("driver testdata not present")
+
+    def run():
+        e.release_caches()
+        try:
+            df = e.q_minhash_band_candidates(spark, sf)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            return sorted((r["src"], r["dst"]) for r in df.collect()), plan
+        finally:
+            e.release_caches()
+
+    default_pairs, default_plan = run()
+    monkeypatch.setattr(e, "_BAND_FUSED_MAX_PAIRS", 0)
+    monkeypatch.setattr(lsh, "PREFILTER_MIN_BAND_ROWS", 0)
+    gated_pairs, gated_plan = run()
+    assert default_pairs  # non-vacuous: sf0.01 has band candidates
+    assert gated_pairs == default_pairs
+    # the two runs really took different branches of both gates: the
+    # pre-filter's anti-join, and the unfused path's (dst, src) exchange
+    fusion_break = re.compile(r"hashpartitioning\(dst#\d+L?, src#")
+    assert "LeftAnti" not in default_plan and "LeftAnti" in gated_plan
+    assert not fusion_break.search(default_plan)
+    assert fusion_break.search(gated_plan)
+
+
 def test_multimodal_decoder_dispatch():
     """The decode kernel is selected by import probe: real when PIL is
     importable, deterministic fake otherwise — the 'one-function swap'

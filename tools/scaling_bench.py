@@ -111,22 +111,15 @@ n = corpus.count()
 run_pipeline(corpus.limit(400), DedupConfig())["clusters"].count()
 c_before = calib()
 t0 = time.time()
-# corpus_path engages the Python-native columnar feed for the signature
-# stage (pyarrow row-group reads in the workers — no JVM Arrow-IPC feed)
-res = run_pipeline(corpus, DedupConfig(), corpus_path=sys.argv[2])
+res = run_pipeline(corpus, DedupConfig())
 nc = res["clusters"].select("cluster_id").distinct().count()
 # deliverables are cluster assignments + the COMPACT verified edge set
 # (representative-level); the quadratic expanded pair surface stays lazy
 ne = res["edges_rep"].where("verified").count()
 wall = time.time() - t0
-from dedup_spark.operators.signatures import feed_metrics
 print(json.dumps({"cores": cores, "wall": round(wall, 1),
                   "files_per_sec": round(n / wall, 1),
                   "calib": [c_before, calib()],
-                  # exact Python-side feed+kernel cost of THIS run — the
-                  # in-run host-health record (identical work across runs,
-                  # so cpu_s inflation = host degradation, not code)
-                  "feed_workers": feed_metrics(),
                   "n": n, "edges": ne, "clusters": nc}))
 spark.stop()
 """
@@ -206,7 +199,7 @@ def main():
         "clean_window_efficiency": clean_eff,
         "clean_reps": [len(clean_lo), len(clean_hi)],
         "deterministic_output": len(sanity) == 1,
-        "feed": "direct",  # protocol tag: python-native columnar feed
+        "feed": "jvm",  # protocol tag: JVM-scan Arrow feed (the CLI path)
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     out_path = os.path.join(REPO, "BENCH", "scaling_runs.json")
@@ -231,7 +224,7 @@ def main():
     effs = sorted(
         s_["summary"]["scaling_efficiency"] for s_ in sweeps
         if s_["summary"].get("cores") == [lo, hi]
-        and s_["summary"].get("feed") == "direct"
+        and s_["summary"].get("feed") == "jvm"
         and s_["summary"].get("n_files") == n_files
         and s_["summary"].get("file_chars") == target
     )
