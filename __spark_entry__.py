@@ -494,10 +494,6 @@ def _minhash_sql() -> str:
 
 _MAX_BAND_BUCKET = 1000   # direct pair-gen cap per LSH bucket
 _BAND_SALT = 10           # salted ceiling = 10,000 members per bucket
-# worst-case expanded-pair count under which the expansion may run fully
-# fused (no fusion-break / spread exchanges) — ~50M narrow rows of
-# copy-buffering, sub-second; see q_minhash_band_candidates
-_BAND_FUSED_MAX_PAIRS = 50_000_000
 
 
 def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -518,6 +514,9 @@ def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics frame; none exist at driver SFs). No trailing orderBy — the
     driver's value hash is order-insensitive, and a global sort of the
     pair set is a wasted exchange at scale."""
+    from dedup_spark.operators.groups import (
+        expand_member_pairs, within_group_pairs,
+    )
     from dedup_spark.operators.lsh import salted_pairs
 
     # four consumers (reps→bands, mem twice, within) would each replan the
@@ -537,12 +536,13 @@ def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # explicitly-numbered repartition: the window exchange is tiny in
         # bytes, and AQE would otherwise coalesce it to ~1 task — the
-        # cached frame then serves every consumer window (rep min here,
-        # block counts in the pair query) at that width (guide §2.5)
+        # cached frame then serves every consumer (rep min and group
+        # size here, the member expansion below) at that width (guide §2.5)
         w = Window.partitionBy("gid")
         p = spark.sparkContext.defaultParallelism * 2
         return keyed.repartition(p, "gid").select(
             "doc_id", "gid", F.min("doc_id").over(w).alias("rep"),
+            F.count("*").over(w).alias("group_size"),
             *[f"mh{i}" for i in range(_K16)],
         )
 
@@ -568,21 +568,6 @@ def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = reps.select("doc_id", F.explode(band_arr).alias("b")).select(
         "doc_id", "b.band_id", "b.band_val"
     )
-    # the pair ladder ends in the dedupe HashAggregate, and when that
-    # aggregate fuses into the same codegen stage as the expansion below,
-    # its map-iterator output forces needCopyResult on the whole stage —
-    # every one of the ~666M expanded rows is then copy-buffered
-    # (JFR-measured 17 GB of UnsafeRow.copy + 12 GB of LinkedList nodes,
-    # >1,400 s GC at sf1.0). A narrow 16 B/row exchange on (dst, src) is
-    # the stage boundary that keeps the expansion stage to joins/explodes
-    # only, and — unlike the session-cache + eager-count barrier it
-    # replaced — it stays INSIDE the one save job: ladder, fusion break
-    # and expansion schedule as consecutive stages with no driver
-    # job-submission gaps (event-log measured ~2.4 s of extra wall for
-    # the cache+count jobs at sf1.0; the query is the frame's only
-    # consumer, so the cache bought nothing). Keyed (dst, src) — NOT the
-    # dedupe exchange's (src, dst), which Catalyst would treat as already
-    # satisfied and elide, re-fusing the stages.
     # mega-bucket pre-filter gated by the MEASURED member count (the cache
     # barrier's count(), kept in _FRAME_ROWS — free): band rows = reps*4
     # <= members*4, and below lsh.PREFILTER_MIN_BAND_ROWS the pre-filter's
@@ -596,82 +581,18 @@ def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_members = _FRAME_ROWS.get((sf_dir, "band_members"))
     pf = (n_members is None
           or n_members * 4 > PREFILTER_MIN_BAND_ROWS)
-    # the two fusion/spread exchanges below are pure repartitions — the
-    # pair multiset is identical with or without them — and they only
-    # pay for themselves when the expanded output is large. Gate them on
-    # the WORST-CASE expansion C(n_members, 2) (every pair emitted):
-    # under _BAND_FUSED_MAX_PAIRS rows, fully fused codegen copy-buffers
-    # at most ~50M narrow rows (sub-second), while the exchanges cost
-    # ~0.8 s of barrier + shuffle wall (A/B at sf0.1: 4.0 -> 3.2 s warm).
-    # Unknown count -> keep the exchanges (the safe 100 TB posture).
-    fused = (n_members is not None
-             and n_members * (n_members - 1) // 2 <= _BAND_FUSED_MAX_PAIRS)
-    p2 = spark.sparkContext.defaultParallelism * 2
     rep_pairs = salted_pairs(
         bands, _MAX_BAND_BUCKET, _BAND_SALT,
         key_cols=("band_id", "band_val"), id_col="doc_id",
         prefilter=pf,
     )
-    if not fused:
-        rep_pairs = rep_pairs.repartition(p2, "dst", "src")
-    # rep pairs → member pairs via BLOCKED per-group id arrays + codegen
-    # explode, not a row-level membership join: the row join emitted each
-    # of the ~666M expanded pairs (sf1.0) through a hash-relation probe
-    # iterator — microbenched 26 s for the same row count that a
-    # list-join + two Generate explodes emits in ~3 s (both measured on
-    # this host, 32 cores). Arrays are salted into ≤_MAX_BAND_BUCKET-id
-    # blocks (same bound as the pair ladder), so no single cached array
-    # row grows with a mega-group; the block join fans out ≤ nb rows per
-    # rep before the explodes. Join strategy is left to the planner:
-    # the block table is one narrow array row per ~1000 members
-    # (broadcast here; a shuffle join at fleet scale).
-    gw = Window.partitionBy("gid")
-    nb = F.ceil(F.count("*").over(gw) / _MAX_BAND_BUCKET).cast("int")
-    mem_blocks = (
-        members.select(
-            "rep", "doc_id",
-            F.pmod(F.xxhash64("doc_id"), nb).cast("int").alias("blk"),
-        )
-        .groupBy("rep", "blk")
-        .agg(F.collect_list("doc_id").alias("ids"))
-        .drop("blk")
-    )
-    # ONE Generate per codegen stage, with an explicit exchange between
-    # the two explode passes. Two chained explodes in a single stage
-    # buffer the whole nested |A|×|B| product of each input row through
-    # BufferedRowIterator — every output row is UnsafeRow.copy()-ed into
-    # a LinkedList before the parent drains it (JFR-measured 17 GB of
-    # row copies + 12 GB of list nodes, >1,400 s of GC at sf1.0, and
-    # reproduced in isolation: the same chain over ~900-element arrays
-    # runs 23 s fused vs 2.4 s split). The intermediate exchange keys on
-    # (dst, a), so a mega-group destination's expansion spreads across
-    # every task instead of hammering one (guide §2.5).
-    p = spark.sparkContext.defaultParallelism * 2
-    half = (
-        rep_pairs
-        .join(mem_blocks.withColumnsRenamed({"rep": "src", "ids": "a_ids"}),
-              "src")
-        .select("dst", F.explode("a_ids").alias("a"))
-    )
-    if not fused:
-        half = half.repartition(p, "dst", "a")
-    cross = (
-        half
-        .join(mem_blocks.withColumnsRenamed({"rep": "dst", "ids": "b_ids"}),
-              "dst")
-        .select("a", F.explode("b_ids").alias("b"))
-        .select(F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst"))
-    )
-    # within-exact-group pairs through the SAME ladder, uncapped
-    # (VERDICT r4 #1): parity demands the complete pair set, but a
-    # pathological exact-dup cluster must not flatten C(n,2) pairs in one
-    # task — salted blocks bound every task at ~2·max_bucket members. No
-    # distinct needed: gid partitions the docs, each pair lands in exactly
-    # one block-pair task.
-    within = salted_pairs(
-        members.select("gid", "doc_id"), _MAX_BAND_BUCKET, None,
-        key_cols=("gid",), id_col="doc_id", dedupe=False,
-    )
+    # rep pairs → member pairs and all within-group pairs: the library's
+    # blocked expansion, fused or behind its exchanges by the same
+    # measured member count (operators/groups.py)
+    groups = members.select(F.col("doc_id").alias("file_id"), "rep",
+                            "group_size")
+    cross = expand_member_pairs(rep_pairs, groups, n_members)
+    within = within_group_pairs(groups).select("src", "dst")
     return cross.unionAll(within)
 
 

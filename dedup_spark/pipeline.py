@@ -167,13 +167,20 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full near-dup pipeline.
 
-    One plan: the signature stage is a single ``mapInArrow`` pass over
-    ``corpus`` (``compute_signatures``). Without a ``workdir`` the
-    signature+group frame is persisted and materialized by one count
-    before any tail frame is built, so every tail plan choice (the LSH
-    pre-filter gate, the verify join strategy) is made against a
-    populated cache and its measured row count. With a ``workdir`` each
-    stage is checkpointed to parquet instead and resumable on its own.
+    One contraction plan: the signature stage is a single ``mapInArrow``
+    pass over ``corpus`` (``compute_signatures``), and the group window
+    runs over its full rows (``groups.with_groups``) as ONE stage,
+    ``sig_groups``. Its count is taken before any tail frame is built:
+    without a ``workdir`` it populates the persisted frame, with one it
+    reads the parquet checkpoint back. Either way every tail plan choice
+    (the LSH pre-filter gate, the verify join strategy, the edge
+    expansion's fusion gate) is made against that measured row count.
+    Signatures, groups and representative signatures are projections of
+    ``sig_groups``.
+
+    Checkpoint stages under ``workdir`` (each resumable on its own):
+    ``sig_groups``, ``candidates``, ``edges_rep``, ``edges_lcs`` (only
+    with ``min_lcs > 0``) and ``clusters``.
 
     Returned frames:
       signatures   per-file MinHash/SimHash/shingle-sketch rows
@@ -217,57 +224,44 @@ def run_pipeline(
         return df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
 
     from .operators.groups import (
-        expand_group_edges, group_star_pairs, representative_ids,
-        sketch_groups, with_groups,
+        expand_group_edges, group_star_pairs, with_groups,
     )
 
     _GROUP_COLS = ["g1", "g2", "rep", "group_size"]
-
-    def _signatures():
-        return compute_signatures(corpus, cfg, content_col, id_col)
 
     # signatures carry the distinct shingle sets too — ONE corpus scan
     # feeds both LSH banding and exact-Jaccard verification. Exact-sketch
     # group contraction (operators/groups.py — the 100 TB lever against
     # exact-copy-heavy corpora) makes LSH + verify run on one
     # representative per identical-signature group; candidate coverage and
-    # pair jaccard are provably unchanged.
-    if workdir:
-        # checkpoint layout: narrow 'groups' stage + join-back (each stage
-        # readable/resumable on its own)
-        signatures = stage("signatures", _signatures)
-        groups = stage("groups", lambda: sketch_groups(signatures))
-        rep_sigs = signatures.join(representative_ids(groups), "file_id")
-        verify_side = rep_sigs
-        n_sigs = None  # not measured on this path: pre-filter stays on
-    else:
-        # fused plan: ONE wide exchange (window over the full signature
-        # rows) yields signatures, groups, and rep_sigs as projections of
-        # a single persisted frame — the narrow-window + wide-join layout
-        # costs an extra exchange of the signature table for nothing when
-        # no checkpoint needs the narrow frame on disk
-        sig_groups = stage(
-            "sig_groups", lambda: with_groups(_signatures())
-        )
-        # Materialize the persist NOW, in one dedicated job: the first
-        # downstream action otherwise races its non-AQE broadcast-subquery
-        # futures (LSH over-cap key scan) against its own main job, and
-        # two concurrent jobs pulling an unpopulated cache compute the
-        # signature kernel twice while thrashing the executor cores
-        # (event-log measured: two overlapping ~10 s jobs at local[8]).
-        # count() scans every partition fully, unlike a limit probe, so
-        # the cache is complete before any consumer plans against it.
-        # (A separate narrow "core" cache without the shingle arrays was
-        # measured too: the extra cache-build pass cost more than the
-        # narrower tail scans saved.)
-        n_sigs = sig_groups.count()
-        signatures = sig_groups.drop(*_GROUP_COLS)
-        groups = sig_groups.select("file_id", *_GROUP_COLS)
-        rep_sigs = sig_groups.where(
-            F.col("file_id") == F.col("rep")
-        ).drop(*_GROUP_COLS)
-        verify_side = rep_sigs
-    shingles = verify_side.select("file_id", "shingles")
+    # pair jaccard are provably unchanged. ONE wide exchange (the group
+    # window over the full signature rows) yields signatures, groups and
+    # rep_sigs as projections of a single staged frame.
+    sig_groups = stage(
+        "sig_groups",
+        lambda: with_groups(
+            compute_signatures(corpus, cfg, content_col, id_col)
+        ),
+    )
+    # Materialize the stage NOW, in one dedicated job: the first
+    # downstream action otherwise races its non-AQE broadcast-subquery
+    # futures (LSH over-cap key scan) against its own main job, and
+    # two concurrent jobs pulling an unpopulated cache compute the
+    # signature kernel twice while thrashing the executor cores
+    # (event-log measured: two overlapping ~10 s jobs at local[8]).
+    # count() scans every partition fully, unlike a limit probe, so
+    # the cache is complete before any consumer plans against it.
+    # (A separate narrow "core" cache without the shingle arrays was
+    # measured too: the extra cache-build pass cost more than the
+    # narrower tail scans saved.) On a checkpointed stage the count
+    # reads the parquet checkpoint back.
+    n_sigs = sig_groups.count()
+    signatures = sig_groups.drop(*_GROUP_COLS)
+    groups = sig_groups.select("file_id", *_GROUP_COLS)
+    rep_sigs = sig_groups.where(
+        F.col("file_id") == F.col("rep")
+    ).drop(*_GROUP_COLS)
+    shingles = rep_sigs.select("file_id", "shingles")
     # the cache-materialization count doubles as the measured row count
     # that cost-gates the mega-bucket pre-filter (small measured inputs
     # drop its dedicated job + broadcast future; output identical)
@@ -282,7 +276,7 @@ def run_pipeline(
     # whose non-representative endpoints vanish in the expansion join.
     edges_rep = stage(
         "edges_rep",
-        lambda: verify_pairs(pairs, verify_side, shingles, cfg),
+        lambda: verify_pairs(pairs, rep_sigs, shingles, cfg),
     )
 
     if cfg.min_lcs > 0:
@@ -294,7 +288,7 @@ def run_pipeline(
         edges_out = stage(
             "edges_lcs",
             lambda: apply_lcs_gate(
-                expand_group_edges(edges_rep, groups),
+                expand_group_edges(edges_rep, groups, n_sigs),
                 corpus, cfg, content_col, id_col,
             ),
         )
@@ -303,27 +297,23 @@ def run_pipeline(
         # lazy quadratic pair surface for audits; clustering uses the
         # LINEAR compact set (group spanning stars + verified rep pairs) —
         # identical components by construction.
-        edges_out = expand_group_edges(edges_rep, groups)
+        edges_out = expand_group_edges(edges_rep, groups, n_sigs)
         cluster_input = group_star_pairs(groups).unionByName(
             edges_rep.where("verified").select("src", "dst")
         )
 
-    # cluster over ids from the signature-derived frames (one row per
-    # corpus row by construction of the kernel) — re-scanning the corpus
-    # parquet for one column costs a listing + footer + scan pass per run.
-    # with_groups keeps zero-shingle files (unique group keys), so the
-    # no-workdir 'groups' projection is a complete id universe; the
-    # checkpointed sketch_groups frame excludes them, so the workdir path
-    # reads ids off the signatures checkpoint instead.
-    id_frame = signatures if workdir else groups
-    # star pairs (rep=group-min < member) and verified rep edges
-    # (least/greatest distinct, cross-group) are canonical and disjoint by
-    # construction, so CC may skip its canonicalization exchange; the
-    # LCS-gated member-level set is not proven so and keeps the default.
+    # cluster over the ids of the staged groups frame (one row per corpus
+    # row: with_groups keeps zero-shingle files under unique group keys)
+    # — re-scanning the corpus parquet for one column costs a listing +
+    # footer + scan pass per run. Star pairs (rep=group-min < member) and
+    # verified rep edges (least/greatest distinct, cross-group) are
+    # canonical and disjoint by construction, so CC may skip its
+    # canonicalization exchange; the LCS-gated member-level set is not
+    # proven so and keeps the default.
     clusters = stage(
         "clusters",
         lambda: cluster_assignments(
-            id_frame.select("file_id"), cluster_input,
+            groups.select("file_id"), cluster_input,
             edges_canonical=cfg.min_lcs <= 0
         ),
     )

@@ -124,7 +124,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .operators.groups import group_star_pairs, sketch_groups, within_group_pairs
+from .operators.groups import (
+    expand_group_edges, group_star_pairs, group_window, sketch_groups,
+)
 from .operators.lsh import band_buckets
 from .operators.signatures import SIG_SCHEMA, compute_signatures
 from .operators.verify import verify_pairs
@@ -998,7 +1000,7 @@ def compact_state(spark: SparkSession, state_dir: str,
 
 class _StateFrames(dict):
     """Lazy read-view over the dedup state. Building the DataFrame PLANS
-    (especially the expanded_edges multi-join) costs ~0.4-0.5 s of driver
+    (especially the expanded_edges expansion) costs ~0.4-0.5 s of driver
     py4j round-trips, which every incremental_update used to pay even when
     the caller never touched the returned frames (the common steady-state
     fold loop). Each frame is constructed on first access and memoized;
@@ -1069,49 +1071,34 @@ def _groups_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
         sigs = _read_state(spark, "signatures",
                            os.path.join(state_dir, "signatures"))
         return sketch_groups(sigs.drop("batch_id"))
-    from pyspark.sql import Window
-
     mem = _read_state(spark, "members", mem_dir).drop("batch_id")
-    w = Window.partitionBy("g1", "g2")
-    return mem.select(
-        "file_id", "g1", "g2",
-        F.min("file_id").over(w).alias("rep"),
-        F.count("*").over(w).alias("group_size"),
-    )
+    return group_window(mem)
 
 
 def expanded_edges(spark: SparkSession, state_dir: str) -> DataFrame:
     """Member-level verified pair surface from compact state: stored rep
     edges fan out through signature-group membership, plus all
-    within-group (jaccard exactly 1) pairs.
+    within-group (jaccard exactly 1) pairs — ``groups.expand_group_edges``,
+    the same expansion as ``run_pipeline()["edges"]``.
 
-    Expansion joins endpoints by group MEMBERSHIP, not rep-ness: a stored
-    endpoint is always some member of its group, but need not remain the
-    group minimum once later batches add smaller file_ids."""
+    A stored endpoint is pinned at birth: it is always some member of its
+    group, but need not remain the group minimum once later batches add
+    smaller file_ids, so each endpoint is first mapped to its group's
+    current ``rep``."""
     _recover_compaction(state_dir)  # never read a half-compacted layout
     rep_edges = _read_state(spark, "edges", os.path.join(state_dir, "edges"))
     groups = _groups_from_state(spark, state_dir)
-    key = groups.select("file_id", "g1", "g2")
-    mem = groups.select("g1", "g2", F.col("file_id").alias("member"))
-    cross = (
+    rep_of = groups.select("file_id", "rep")
+    edges = (
         rep_edges.drop("batch_id")
-        .join(key.withColumnsRenamed(
-            {"file_id": "src", "g1": "a1", "g2": "a2"}), "src")
-        .join(key.withColumnsRenamed(
-            {"file_id": "dst", "g1": "b1", "g2": "b2"}), "dst")
-        .join(mem.withColumnsRenamed(
-            {"g1": "a1", "g2": "a2", "member": "ma"}), ["a1", "a2"])
-        .join(mem.withColumnsRenamed(
-            {"g1": "b1", "g2": "b2", "member": "mb"}), ["b1", "b2"])
-        .select(
-            F.least("ma", "mb").alias("src"),
-            F.greatest("ma", "mb").alias("dst"),
-            "hamming",
-            "jaccard",
-            "verified",
-        )
+        .join(rep_of.withColumnsRenamed({"file_id": "src", "rep": "a"}), "src")
+        .join(rep_of.withColumnsRenamed({"file_id": "dst", "rep": "b"}), "dst")
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"),
+                "hamming", "jaccard", "verified")
     )
-    return cross.unionByName(within_group_pairs(groups))
+    mem_dir = os.path.join(state_dir, "members")
+    n_members = _footer_rows(mem_dir) if os.path.isdir(mem_dir) else None
+    return expand_group_edges(edges, groups, n_members)
 
 
 def current_clusters(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -23,7 +23,7 @@ from dedup_spark.session import get_spark
 from dedup_spark.synth import corpus_df
 from dedup_spark.config import DedupConfig
 from dedup_spark.operators.signatures import compute_signatures
-from dedup_spark.operators.groups import sketch_groups, representative_ids
+from dedup_spark.operators.groups import with_groups
 from dedup_spark.operators.lsh import candidate_pairs
 
 n_files = int(sys.argv[1])
@@ -40,8 +40,8 @@ if file_chars:
         f"substring(repeat(content, int({file_chars}/"
         f"greatest(length(content),1))+1), 1, {file_chars})"))
 sigs = compute_signatures(corpus, cfg).cache()
-reps = representative_ids(sketch_groups(sigs))
-rep_sigs = sigs.join(reps, "file_id")
+rep_sigs = with_groups(sigs).where("file_id = rep").drop(
+    "g1", "g2", "rep", "group_size")
 rep_sigs.write.mode("overwrite").parquet("/tmp/verify_ab/rep_sigs")
 candidate_pairs(rep_sigs, cfg).write.mode("overwrite").parquet(
     "/tmp/verify_ab/pairs")
