@@ -578,9 +578,8 @@ def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is large and the pre-filter stays on — the correct 100 TB posture.
     from dedup_spark.operators.lsh import PREFILTER_MIN_BAND_ROWS
 
-    n_members = _FRAME_ROWS.get((sf_dir, "band_members"))
-    pf = (n_members is None
-          or n_members * 4 > PREFILTER_MIN_BAND_ROWS)
+    n_members = _FRAME_ROWS[(sf_dir, "band_members")]
+    pf = n_members * 4 > PREFILTER_MIN_BAND_ROWS
     rep_pairs = salted_pairs(
         bands, _MAX_BAND_BUCKET, _BAND_SALT,
         key_cols=("band_id", "band_val"), id_col="doc_id",

@@ -30,10 +30,11 @@ blocks bound every array row, so no row grows with a mega-group. Two
 chained explodes in one codegen stage copy-buffer their whole nested
 product (JFR: 17 GB of row copies, >1,400 s of GC at sf1.0), so the two
 Generates sit in separate stages behind ``(dst, src)`` / ``(dst, a)``
-exchanges — unless a MEASURED member count proves the worst case
+exchanges — unless the MEASURED member count proves the worst case
 C(n, 2) is at most ``FUSED_MAX_PAIRS``, where fused codegen is
-sub-second and the exchanges only add barrier wall. An unknown count
-keeps the exchanges.
+sub-second and the exchanges only add barrier wall. Every caller has that
+count (the pipeline's cache count, the incremental members footers, the
+band query's cache count), so the gate decides from measured sizes only.
 
 Correctness: the group key covers the FULL signature row — shingle
 sketch, MinHash vector, and SimHash. (Sketch equality alone does NOT
@@ -73,11 +74,11 @@ def _keys() -> tuple[Column, Column]:
 
 def group_keys(signatures: DataFrame) -> DataFrame:
     """(file_id, g1, g2): the 128-bit full-signature group key, computed
-    PER ROW with no shuffle — the narrow building block shared by
-    ``sketch_groups`` (batch) and the incremental fold's group-delta state
-    (streaming.py), which folds per-batch key aggregates instead of
-    re-windowing the cumulative signature table. Files with no shingles
-    are excluded (they never participate in matching)."""
+    PER ROW with no shuffle — the building block of the incremental
+    fold's members and group-delta state (streaming.py), which folds
+    per-batch key aggregates instead of re-windowing the cumulative
+    signature table. Files with no shingles are excluded (they never
+    participate in matching)."""
     g1, g2 = _keys()
     return signatures.where(F.col("n_shingles") > 0).select(
         "file_id", g1.alias("g1"), g2.alias("g2")
@@ -95,13 +96,6 @@ def group_window(keyed: DataFrame) -> DataFrame:
         F.min("file_id").over(w).alias("rep"),
         F.count("*").over(w).alias("group_size"),
     )
-
-
-def sketch_groups(signatures: DataFrame) -> DataFrame:
-    """(file_id, g1, g2, rep, group_size): rep = min file_id among files
-    with an identical full signature (sketch + minhash + simhash). Files
-    with no shingles are excluded (they never participate in matching)."""
-    return group_window(group_keys(signatures))
 
 
 def with_groups(signatures: DataFrame) -> DataFrame:
@@ -159,19 +153,18 @@ def within_group_pairs(groups: DataFrame) -> DataFrame:
 
 
 def expand_member_pairs(rep_pairs: DataFrame, groups: DataFrame,
-                        n_members: int | None = None) -> DataFrame:
+                        n_members: int) -> DataFrame:
     """Representative pairs → member pairs: (src, dst, *extra) rows whose
     endpoints are group reps become one row per (member of src's group,
     member of dst's group), as (least, greatest, *extra). Every other
     column of ``rep_pairs`` is carried unchanged.
 
     ``groups`` holds (file_id, rep, group_size) per member. ``n_members``
-    is a measured member count, if the caller has one: it decides whether
-    the two Generates may fuse (module docstring). Both plan shapes emit
-    the same rows."""
+    is a measured upper bound on the member count: it decides whether the
+    two Generates may fuse (module docstring). Both plan shapes emit the
+    same rows."""
     extra = [c for c in rep_pairs.columns if c not in ("src", "dst")]
-    fused = (n_members is not None
-             and n_members * (n_members - 1) // 2 <= FUSED_MAX_PAIRS)
+    fused = n_members * (n_members - 1) // 2 <= FUSED_MAX_PAIRS
     p = rep_pairs.sparkSession.sparkContext.defaultParallelism * 2
     nb = F.ceil(F.col("group_size") / MEMBER_BLOCK).cast("int")
     blocks = (
@@ -209,7 +202,7 @@ def expand_member_pairs(rep_pairs: DataFrame, groups: DataFrame,
 
 
 def expand_group_edges(edges_rep: DataFrame, groups: DataFrame,
-                       n_members: int | None = None) -> DataFrame:
+                       n_members: int) -> DataFrame:
     """Representative-level edges → member-level pair list:
 
     * verified rep pairs fan out to every (member of src-group, member of

@@ -172,18 +172,3 @@ def compute_signatures(corpus: DataFrame, cfg: DedupConfig,
         F.col(content_col).cast("binary").alias("content"),
     ).mapInArrow(sig_batches, SIG_SCHEMA)
 
-
-def minhash_jaccard_est(col_a: str, col_b: str, k: int):
-    """Estimated Jaccard = fraction of agreeing MinHash components —
-    pure JVM expression (zip_with + aggregate)."""
-    return (
-        F.aggregate(
-            F.zip_with(
-                F.col(col_a), F.col(col_b),
-                lambda x, y: F.when(x == y, 1).otherwise(0),
-            ),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ).cast("double")
-        / k
-    )

@@ -24,8 +24,7 @@ from ..config import DedupConfig
 
 
 def verify_pairs(pairs: DataFrame, signatures: DataFrame,
-                 shingles: DataFrame, cfg: DedupConfig,
-                 two_phase: bool | None = None) -> DataFrame:
+                 shingles: DataFrame, cfg: DedupConfig) -> DataFrame:
     """pairs (src,dst) → verified edges with exact Jaccard.
 
     Returns (src, dst, hamming, jaccard, verified).
@@ -38,16 +37,14 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
     wide joins drops from ~2·8 KB·|pairs| to ~16 B·|pairs| +
     8 KB·|survivors|. With the gate off (the default decider is exact
     Jaccard) two narrow extra joins buy nothing, so the single-phase plan
-    is kept; ``two_phase`` overrides the auto choice for A/B measurement.
+    is kept.
     """
-    if two_phase is None:
-        two_phase = cfg.simhash_hamming_max < 64
     # simhash and the shingle set come from the same signature row; in the
     # single-phase plan they ride one join per pair side. The kernel emits
     # shingle sketches via np.unique (sorted + distinct already), so no
     # array_distinct pass is needed here.
     has_sketch = "shingles" in signatures.columns
-    if two_phase:
+    if cfg.simhash_hamming_max < 64:
         narrow = signatures.select("file_id", "simhash")
         gated = (
             pairs

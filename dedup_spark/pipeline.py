@@ -52,7 +52,7 @@ def config_fingerprint(cfg: DedupConfig) -> str:
 
 class Checkpointer:
     def __init__(self, spark: SparkSession, workdir: str | None,
-                 fingerprint: str | None = None):
+                 fingerprint: str):
         self.spark = spark
         self.workdir = workdir
         self.fingerprint = fingerprint
@@ -66,14 +66,12 @@ class Checkpointer:
         if not (self.workdir and os.path.exists(
                 os.path.join(self._path(stage), "_SUCCESS"))):
             return False
-        if self.fingerprint is None:
-            return True
         fp_file = os.path.join(self._path(stage), "_fingerprint.json")
         try:
             with open(fp_file) as f:
                 return f.read() == self.fingerprint
         except OSError:
-            return False  # pre-fingerprint checkpoint: recompute
+            return False  # fingerprint never landed: recompute
 
     def read(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._path(stage))
@@ -130,9 +128,9 @@ class Checkpointer:
         # per attempt).
         if meta["rows"] > observed_rows:
             # remove the _SUCCESS marker BEFORE raising: the dir is already
-            # committed, and a Checkpointer built without a fingerprint
-            # would otherwise happily resume the checkpoint this check just
-            # declared corrupt (ADVICE r4).
+            # committed, and the marker must not outlive the check that
+            # just declared it corrupt, whatever else guards resume
+            # (ADVICE r4).
             try:
                 os.remove(os.path.join(path, "_SUCCESS"))
             except OSError:
@@ -151,9 +149,8 @@ class Checkpointer:
                 "observation; recorded in metrics.jsonl)",
                 stacklevel=2,
             )
-        if self.fingerprint is not None:
-            with open(os.path.join(path, "_fingerprint.json"), "w") as f:
-                f.write(self.fingerprint)
+        with open(os.path.join(path, "_fingerprint.json"), "w") as f:
+            f.write(self.fingerprint)
         return out
 
 

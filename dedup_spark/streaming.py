@@ -56,8 +56,8 @@ re-folded before a new id is assigned — crash recovery works in both id
 modes, not just explicit replay.
 
 Per-batch cost model (VERDICT r3 "What's wrong" #3 — the round-3 fold
-re-ran ``sketch_groups`` over the FULL cumulative signature table every
-batch, an O(state-rows) wide shuffle of ~10 KB signature rows): shuffles
+re-grouped the FULL cumulative signature table every batch, an
+O(state-rows) wide shuffle of ~10 KB signature rows): shuffles
 now touch only (a) the batch's own rows, (b) the narrow group-key deltas
 of the batch, and (c) members of band buckets actually TOUCHED by the
 batch's newborn groups. Prior state is read as NARROW tables (group
@@ -125,7 +125,7 @@ from pyspark.sql import functions as F
 
 from .config import DedupConfig
 from .operators.groups import (
-    expand_group_edges, group_star_pairs, group_window, sketch_groups,
+    expand_group_edges, group_keys, group_star_pairs, group_window,
 )
 from .operators.lsh import band_buckets
 from .operators.signatures import SIG_SCHEMA, compute_signatures
@@ -194,17 +194,6 @@ def _part_bytes(path: str) -> int:
     return sum(os.path.getsize(f) for f in _parquet_files(path))
 
 
-def _part_hint(path: str):
-    """Broadcast hint for a COMMITTED partition, gated on its measured
-    footer bytes (VERDICT r4 #3: a row-count gate lets a wide-key future
-    schema smuggle a multi-hundred-MB broadcast past a 2M-row cap; bytes
-    are what the driver actually pays). Parquet compresses ~2-4× vs the
-    in-memory relation, so the cap is set well under the ~1 GB driver
-    comfort zone even after expansion."""
-    return (F.broadcast if _part_bytes(path) <= _BROADCAST_MAX_BYTES
-            else (lambda df: df))
-
-
 def incremental_update(new_corpus: DataFrame, state_dir: str,
                        cfg: DedupConfig | None = None,
                        content_col: str = "content",
@@ -215,7 +204,10 @@ def incremental_update(new_corpus: DataFrame, state_dir: str,
     ``batch_id=None`` assigns the next free id — after first re-folding
     any STRANDED batch (signatures committed, edges missing, e.g. a crash
     mid-fold), so a half-written batch can never silently age into the
-    'old' window with its edges permanently missing. Passing an explicit
+    'old' window with its edges permanently missing. The re-fold rebuilds
+    the batch's whole narrow index from its stored signatures, so a crash
+    anywhere between the signatures and edges commits leaves nothing
+    missing. Passing an explicit
     id (the Structured Streaming micro-batch id) makes replay idempotent:
     a batch whose edges partition already exists is skipped outright, and
     a half-written batch is recomputed into the same partition dirs.
@@ -227,7 +219,6 @@ def incremental_update(new_corpus: DataFrame, state_dir: str,
 
     if os.path.isdir(state_dir):
         _recover_compaction(state_dir)  # finish any interrupted compaction
-        _migrate_state(spark, state_dir, cfg)  # backfill narrow indexes
     wmark = _watermark(state_dir)
     done = set(_batch_dirs(edge_path))
     if batch_id is None:
@@ -411,27 +402,22 @@ def _write_bucketed_part(df: DataFrame, path: str, key_col: str,
 
 
 def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
-                 batch_id: int, new_sigs: DataFrame,
-                 phases: dict | None = None, bands_async: bool = False,
-                 groups_async: bool = False):
-    """Build/rebuild one batch's NARROW index partitions (members, group
-    delta, born-rep sketches, born-rep bands) from its signature rows.
-    Deterministic in (prior narrow state, batch rows). Returns
+                 batch_id: int, new_sigs: DataFrame, phases: dict):
+    """Build one batch's NARROW index partitions (members, group delta,
+    born-rep sketches, born-rep bands) from its signature rows.
+    Deterministic in (prior narrow state, batch rows), so a re-fold of a
+    stranded batch rewrites the same rows. Returns
     ``(new_bands, groups_part, repsig_part, bands_part, threads)``
     where ``new_bands`` is the band LINEAGE over the committed repsigs
     partition (column-pruned parquet scan, identical rows to the bands
     partition) and ``threads`` holds the started writer threads
-    (members always, group delta when ``groups_async``, bands when
-    ``bands_async``) committing their partitions concurrently with the
-    caller's jobs — the caller must ``join()`` each (surfacing its
-    error) before committing the batch's edges marker. Born-group
-    detection consumes member/delta LINEAGE over the committed signature
-    partition (narrow aggregates of 3-long rows ∝ batch), so with
-    ``groups_async`` nothing waits on the delta commit — one sequential
-    job barrier less per fold."""
-    from .operators.groups import group_keys
-
-    phases = {} if phases is None else phases
+    committing the members, group-delta and bands partitions concurrently
+    with the caller's jobs — the caller must ``join()`` each (surfacing
+    its error) before committing the batch's edges marker. Nothing in the
+    fold reads those three partitions back: born-group detection consumes
+    member/delta LINEAGE over the committed signature partition (narrow
+    aggregates of 3-long rows ∝ batch) and the fold's band consumers the
+    band lineage, so only the repsigs commit is a job barrier."""
     groups_part = os.path.join(state_dir, "groups", f"batch_id={batch_id}")
     repsig_part = os.path.join(state_dir, "repsigs", f"batch_id={batch_id}")
     bands_part = os.path.join(state_dir, "bands", f"batch_id={batch_id}")
@@ -485,18 +471,14 @@ def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
         _timed(phases, "groups_write", lambda: new_delta.write.mode(
             "overwrite").parquet(groups_part))
 
-    if groups_async:
-        # the delta commit is pure state maintenance here: born-group
-        # detection below consumes the member (or, with no prior state,
-        # the delta) lineage, so the write overlaps the repsigs job. The
-        # aggregation that implies shuffles 3-long member rows (∝ batch)
-        # — never more than the batch's own signature partition.
-        groups_th = _CapturingThread(target=_write_groups)
-        groups_th.start()
-        threads.append(groups_th)
-    else:
-        _write_groups()
-        new_delta = _read_state(spark, "groups", groups_part)
+    # the delta commit is pure state maintenance: born-group detection
+    # below consumes the member (or, with no prior state, the delta)
+    # lineage, so the write overlaps the repsigs job. The aggregation
+    # that implies shuffles 3-long member rows (∝ batch) — never more
+    # than the batch's own signature partition.
+    groups_th = _CapturingThread(target=_write_groups)
+    groups_th.start()
+    threads.append(groups_th)
 
     # 3. born-group detection against the PRIOR narrow deltas: scan old
     # keys once, reduced by a semi-join on the batch's broadcast member
@@ -560,51 +542,10 @@ def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
             flat_coalesce=_k(repsig_part),
         ))
 
-    if bands_async:
-        bands_th = _CapturingThread(target=_write_bands)
-        bands_th.start()
-        threads.append(bands_th)
-    else:
-        _write_bands()
+    bands_th = _CapturingThread(target=_write_bands)
+    bands_th.start()
+    threads.append(bands_th)
     return new_bands, groups_part, repsig_part, bands_part, threads
-
-
-def _migrate_state(spark: SparkSession, state_dir: str,
-                   cfg: DedupConfig) -> None:
-    """Rebuild missing narrow index partitions for committed batches —
-    states written by earlier releases held only signatures + edges, and
-    folding a new batch against them without the narrow tables would
-    silently pair against nothing. Idempotent and deterministic: each
-    batch's index is a pure function of (prior narrow state, its stored
-    signature rows), rebuilt strictly in batch order. Edges are never
-    recomputed (they are committed results). Batches at or below the
-    compaction watermark are skipped — their index rows live in the
-    merged base partition, not in per-batch dirs."""
-    wmark = _watermark(state_dir)
-    for b in _batch_dirs(os.path.join(state_dir, "signatures")):
-        if b <= wmark:
-            continue
-        sig_part = os.path.join(state_dir, "signatures", f"batch_id={b}")
-        if not os.path.exists(
-                os.path.join(state_dir, "groups", f"batch_id={b}",
-                             "_SUCCESS")):
-            *_, threads = _index_batch(
-                spark, state_dir, cfg, b,
-                _read_state(spark, "signatures", sig_part))
-            for th in threads:  # the members commit rides a writer thread
-                th.join()
-        elif not os.path.exists(
-                os.path.join(state_dir, "members", f"batch_id={b}",
-                             "_SUCCESS")):
-            # mid-format state: group/band index exists, membership
-            # map does not — rebuild just the members partition
-            from .operators.groups import group_keys
-
-            group_keys(
-                _read_state(spark, "signatures", sig_part)
-            ).write.mode("overwrite").parquet(
-                os.path.join(state_dir, "members", f"batch_id={b}")
-            )
 
 
 def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
@@ -620,15 +561,8 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     batch_id line from a first fold."""
     phases = {} if phases is None else phases
     edge_part = os.path.join(state_dir, "edges", f"batch_id={batch_id}")
-    # groups_async/bands_async: the delta and bands commits are pure
-    # state maintenance that nothing below reads (the fold consumes the
-    # band LINEAGE over the committed repsigs partition, and born-group
-    # detection the member lineage over committed signatures), so they
-    # overlap the repsigs/edges jobs; each is joined — errors
-    # re-raised — before the edges marker.
     new_bands, groups_part, repsig_part, bands_part, threads = (
-        _index_batch(spark, state_dir, cfg, batch_id, new_sigs, phases,
-                     bands_async=True, groups_async=True)
+        _index_batch(spark, state_dir, cfg, batch_id, new_sigs, phases)
     )
 
     # 5. candidate pairs: newborn reps vs members of the band buckets
@@ -1062,17 +996,12 @@ def _state_frames(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
 
 def _groups_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """(file_id, g1, g2, rep, group_size) rebuilt from the NARROW members
-    state (3 longs/row) — same output as ``sketch_groups`` over the wide
-    cumulative signature table, without re-reading or re-hashing the
-    ~10 KB signature rows. Falls back to the wide path for states written
-    before the members table existed."""
-    mem_dir = os.path.join(state_dir, "members")
-    if not os.path.isdir(mem_dir):
-        sigs = _read_state(spark, "signatures",
-                           os.path.join(state_dir, "signatures"))
-        return sketch_groups(sigs.drop("batch_id"))
-    mem = _read_state(spark, "members", mem_dir).drop("batch_id")
-    return group_window(mem)
+    state (3 longs/row) by the one group window — the same groups the
+    batch path forms over the full signature rows, without re-reading or
+    re-hashing the ~10 KB signature rows. Every committed batch has a
+    members partition: the fold writes it before the edges marker."""
+    mem = _read_state(spark, "members", os.path.join(state_dir, "members"))
+    return group_window(mem.drop("batch_id"))
 
 
 def expanded_edges(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1096,8 +1025,7 @@ def expanded_edges(spark: SparkSession, state_dir: str) -> DataFrame:
         .select(F.col("a").alias("src"), F.col("b").alias("dst"),
                 "hamming", "jaccard", "verified")
     )
-    mem_dir = os.path.join(state_dir, "members")
-    n_members = _footer_rows(mem_dir) if os.path.isdir(mem_dir) else None
+    n_members = _footer_rows(os.path.join(state_dir, "members"))
     return expand_group_edges(edges, groups, n_members)
 
 
@@ -1121,9 +1049,8 @@ def current_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     # footer-measured bound on the CC input: one star edge per non-rep
     # member plus every stored rep edge. Under the driver-finalize cap
     # the CC collects once instead of paying a persist + count probe.
-    mem_dir = os.path.join(state_dir, "members")
-    max_edges = (_footer_rows(mem_dir) + _footer_rows(edge_dir)
-                 if os.path.isdir(mem_dir) else None)
+    max_edges = (_footer_rows(os.path.join(state_dir, "members"))
+                 + _footer_rows(edge_dir))
     return cluster_assignments(sigs.select("file_id"), cluster_input,
                                max_edges=max_edges)
 

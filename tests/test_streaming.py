@@ -218,24 +218,28 @@ def test_state_compaction(spark, tmp_path_factory):
     assert inc_cl == batch_cl
 
 
-def test_old_format_state_migration(spark, tmp_path_factory):
-    """A state holding only signatures+edges (the pre-narrow-index layout)
-    must be transparently migrated at the next fold: the narrow index
-    partitions are rebuilt in batch order from the stored signatures, and
-    the subsequent batch pairs against ALL prior state, not just itself."""
+@pytest.mark.parametrize("removed", [
+    ("edges",),
+    ("edges", "groups", "members", "repsigs", "bands"),
+], ids=["edges", "edges_and_index"])
+def test_stranded_index_rebuilt(spark, tmp_path_factory, removed):
+    """A crash after batch 1's signatures committed but before its edges
+    marker may leave any of its index partitions missing too. The next
+    auto-id fold re-folds batch 1 from its stored signatures, rebuilding
+    every index table, and the later batch pairs against ALL prior
+    state."""
     import shutil
 
     corpus = corpus_df(spark, 120, seed=47).cache()
-    state = str(tmp_path_factory.mktemp("state_mig"))
+    state = str(tmp_path_factory.mktemp("state_index"))
     incremental_update(corpus.where("file_id < 50"), state, CFG)
     incremental_update(corpus.where("file_id >= 50 AND file_id < 90"),
                        state, CFG)
-    # strip the narrow index tables — what an old-release state dir holds
-    for table in ("groups", "members", "repsigs", "bands"):
-        shutil.rmtree(os.path.join(state, table))
+    for table in removed:
+        shutil.rmtree(os.path.join(state, table, "batch_id=1"))
 
     incremental_update(corpus.where("file_id >= 90"), state, CFG)
-    for table in ("groups", "members", "repsigs", "bands"):
+    for table in ("groups", "members", "repsigs", "bands", "edges"):
         assert sorted(os.listdir(os.path.join(state, table))) == [
             "batch_id=0", "batch_id=1", "batch_id=2",
         ], table
@@ -260,31 +264,6 @@ def test_state_frames_lazy_mapping(spark, tmp_path_factory):
     assert out["signatures"].count() == 60
     # memoized: second access returns the same DataFrame object
     assert out["edges"] is out["edges"]
-
-
-def test_broadcast_gate_is_bytes_based(spark, tmp_path_factory, monkeypatch):
-    """VERDICT r4 #3: the explicit-broadcast gate measures committed
-    parquet BYTES, so a wide-key schema cannot smuggle an oversized
-    broadcast past a row-count cap — few rows but fat payload must drop
-    the hint."""
-    from dedup_spark import streaming as st
-
-    p = os.path.join(str(tmp_path_factory.mktemp("wide")), "part")
-    spark.range(64).select(
-        "id",
-        F.sha2(F.col("id").cast("string"), 512).alias("wide_key"),
-    ).write.mode("overwrite").parquet(p)
-    committed = st._part_bytes(p)
-    assert committed > 0
-    # cap below the committed size: hint must degrade to identity even
-    # though the row count (64) is trivially broadcastable
-    monkeypatch.setattr(st, "_BROADCAST_MAX_BYTES", committed - 1)
-    assert st._part_hint(p) is not F.broadcast
-    df = spark.range(3)
-    assert st._part_hint(p)(df) is df  # identity, not a hinted copy
-    # cap above: broadcast allowed
-    monkeypatch.setattr(st, "_BROADCAST_MAX_BYTES", committed + 1)
-    assert st._part_hint(p) is F.broadcast
 
 
 def test_bucketed_band_state_and_pruned_fold(spark, tmp_path_factory,

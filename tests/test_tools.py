@@ -14,7 +14,7 @@ TOOLS = os.path.join(
 )
 # tools whose measurement runs in a fresh interpreter from a module-level
 # script string (``subprocess.run([python, "-c", SCRIPT])``)
-CHILD_SCRIPT_TOOLS = ("scaling_bench.py", "verify_ab.py")
+CHILD_SCRIPT_TOOLS = ("scaling_bench.py",)
 
 
 def _child_scripts(tree: ast.Module) -> list[ast.Module]:
