@@ -74,9 +74,10 @@ def dropped_bucket_metrics(signatures: DataFrame,
                            cfg: DedupConfig) -> DataFrame:
     """The candidate ladder's dropped-bucket accounting as a standalone
     LAZY one-row frame (dropped_buckets, dropped_rows, max_bucket_size) —
-    ``run_pipeline`` returns it so batch runs surface the capped-bucket
-    regime the same way the incremental fold's metrics.jsonl does; it
-    costs a job only when actually collected."""
+    ``run_pipeline`` returns it as ``candidate_metrics`` (planned on first
+    read) so batch runs surface the capped-bucket regime the same way the
+    incremental fold's metrics.jsonl does; it costs a job only when
+    collected."""
     salt_cap = cfg.max_bucket * max(1, cfg.salt)
     return bucket_stats(band_buckets(signatures, cfg)).where(
         F.col("bucket_size") > salt_cap
@@ -93,15 +94,12 @@ def dropped_bucket_metrics(signatures: DataFrame,
 # buffering a whole boilerplate bucket in a spillable array before the
 # cap drops it — is bounded by TOTAL band rows, i.e. ≤ ~80 MB of 16-byte
 # rows at this threshold (linear scan + spill, not a quadratic blow-up).
-# Callers that KNOW the row count (the pipeline measures it when
-# materializing the signature cache) pass it; unknown defaults to the
-# pre-filter staying on, which is the correct 100 TB posture.
+# Callers pass a measured row count (the pipeline's cache barrier count).
 PREFILTER_MIN_BAND_ROWS = 5_000_000
 
 
-def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
-                    return_metrics: bool = False,
-                    n_rows: int | None = None):
+def candidate_pairs(signatures: DataFrame, cfg: DedupConfig, n_rows: int,
+                    return_metrics: bool = False):
     """Distinct (src, dst) candidate pairs from banded MinHash.
 
     ``band_buckets`` explodes each signature into one (band_id,
@@ -121,13 +119,12 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     explicit, logged skew handling instead of a silent quadratic
     blow-up.
 
-    ``n_rows``: measured signature-row count, if the caller has one (the
-    pipeline's cache-materialization barrier returns it for free). Small
-    measured inputs drop the mega-bucket pre-filter job — the cap itself
-    still applies inside the window pass, so the pair OUTPUT is identical
-    either way; only the plan shape changes.
+    ``n_rows``: measured signature-row count (the pipeline's cache barrier
+    returns it for free). Small measured inputs drop the mega-bucket
+    pre-filter job — the cap still applies inside the window pass, so the
+    pair OUTPUT is identical; only the plan shape changes.
     """
-    prefilter = n_rows is None or n_rows * cfg.bands > PREFILTER_MIN_BAND_ROWS
+    prefilter = n_rows * cfg.bands > PREFILTER_MIN_BAND_ROWS
     return salted_pairs(
         band_buckets(signatures, cfg), cfg.max_bucket, cfg.salt,
         return_metrics=return_metrics, prefilter=prefilter,

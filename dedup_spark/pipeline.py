@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable, Mapping
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -154,6 +155,45 @@ class Checkpointer:
         return out
 
 
+class Frames(Mapping):
+    """The frames ``run_pipeline`` and ``incremental_update`` return. A
+    zero-argument function value is planned on first read and memoized
+    (``in``/``len``/iteration build nothing); ``release()``, also run on
+    leaving ``with``, unpersists the frames the producer registered — the
+    owner of the buffers frees them, as on the reference's ``Close``."""
+
+    def __init__(self, frames: dict[str, DataFrame | Callable[[], DataFrame]],
+                 persisted=()):
+        self._frames = dict(frames)
+        self._persisted = list(persisted)
+
+    def __getitem__(self, key: str) -> DataFrame:
+        v = self._frames[key]
+        if callable(v):
+            v = self._frames[key] = v()
+        return v
+
+    def __contains__(self, key) -> bool:
+        return key in self._frames
+
+    def __iter__(self):
+        return iter(self._frames)
+
+    def __len__(self) -> int:
+        return len(self._frames)
+
+    def release(self) -> None:
+        # newest first, so no dependent cache entry is re-planned
+        while self._persisted:
+            self._persisted.pop().unpersist()
+
+    def __enter__(self) -> Frames:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
+
+
 def run_pipeline(
     corpus: DataFrame,
     cfg: DedupConfig | None = None,
@@ -161,7 +201,7 @@ def run_pipeline(
     resume: bool = True,
     content_col: str = "content",
     id_col: str = "file_id",
-) -> dict[str, DataFrame]:
+) -> Frames:
     """Run (or resume) the full near-dup pipeline.
 
     One contraction plan: the signature stage is a single ``mapInArrow``
@@ -179,17 +219,20 @@ def run_pipeline(
     ``sig_groups``, ``candidates``, ``edges_rep``, ``edges_lcs`` (only
     with ``min_lcs > 0``) and ``clusters``.
 
-    Returned frames:
+    Returned ``Frames`` (``*`` = planned on first read, never if unread;
+    without a ``workdir`` it owns the stage persists, which ``release()``
+    or leaving ``with run_pipeline(...) as res:`` unpersists):
       signatures   per-file MinHash/SimHash/shingle-sketch rows
       groups       exact-sketch group membership (file_id → rep)
       candidates   representative-level LSH candidate pairs
       edges_rep    representative-level verified/rejected edges (COMPACT —
                    the artifact to persist at corpus scale)
-      edges        member-level pair surface: within-group pairs (jaccard
+      edges*       member-level pair surface: within-group pairs (jaccard
                    1) + verified rep pairs fanned out through membership —
-                   lazy and quadratic in group sizes; collect/materialize
-                   only for pair-level audits (the recall gate)
+                   quadratic in group sizes, for pair-level audits (the
+                   recall gate); eager (the CC input) when ``min_lcs > 0``
       clusters     (file_id, cluster_id) for every corpus row
+      candidate_metrics*  ``lsh.dropped_bucket_metrics``
     """
     from .operators.cluster import cluster_assignments
     from .operators.lsh import candidate_pairs, dropped_bucket_metrics
@@ -199,6 +242,7 @@ def run_pipeline(
     cfg = cfg or DedupConfig()
     spark = corpus.sparkSession
     ckpt = Checkpointer(spark, workdir, config_fingerprint(cfg))
+    persisted: list[DataFrame] = []
 
     def stage(name: str, build, persist: bool = True):
         t0 = time.time()
@@ -218,7 +262,8 @@ def run_pipeline(
         # caps (~10 KB/row whatever the file sizes), so it always fits the
         # heap, and the serialized-batch disk round-trip per tail scan was
         # pure overhead.
-        return df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        persisted.append(df.persist(StorageLevel.MEMORY_AND_DISK_DESER))
+        return persisted[-1]
 
     from .operators.groups import (
         expand_group_edges, group_star_pairs, with_groups,
@@ -291,10 +336,11 @@ def run_pipeline(
         )
         cluster_input = edges_out.where("verified")
     else:
-        # lazy quadratic pair surface for audits; clustering uses the
-        # LINEAR compact set (group spanning stars + verified rep pairs) —
-        # identical components by construction.
-        edges_out = expand_group_edges(edges_rep, groups, n_sigs)
+        # quadratic pair surface for audits, planned on first read;
+        # clustering uses the LINEAR compact set (group spanning stars +
+        # verified rep pairs) — identical components by construction.
+        def edges_out():
+            return expand_group_edges(edges_rep, groups, n_sigs)
         cluster_input = group_star_pairs(groups).unionByName(
             edges_rep.where("verified").select("src", "dst")
         )
@@ -314,7 +360,7 @@ def run_pipeline(
             edges_canonical=cfg.min_lcs <= 0
         ),
     )
-    return {
+    return Frames({
         "signatures": signatures,
         "groups": groups,
         "shingles": shingles,
@@ -322,8 +368,7 @@ def run_pipeline(
         "edges_rep": edges_rep,
         "edges": edges_out,
         "clusters": clusters,
-        # lazy one-row dropped-bucket accounting (no job unless collected):
         # the batch-path twin of the incremental fold's metrics.jsonl skew
         # counters — no silent truncation on either path
-        "candidate_metrics": dropped_bucket_metrics(rep_sigs, cfg),
-    }
+        "candidate_metrics": lambda: dropped_bucket_metrics(rep_sigs, cfg),
+    }, persisted)

@@ -130,6 +130,7 @@ from .operators.groups import (
 from .operators.lsh import band_buckets
 from .operators.signatures import SIG_SCHEMA, compute_signatures
 from .operators.verify import verify_pairs
+from .pipeline import Frames
 
 # One pinned schema per state table (data columns only; hive partition
 # columns such as batch_id / bh<P> / fb<P> are still discovered from the
@@ -198,7 +199,7 @@ def incremental_update(new_corpus: DataFrame, state_dir: str,
                        cfg: DedupConfig | None = None,
                        content_col: str = "content",
                        id_col: str = "file_id",
-                       batch_id: int | None = None) -> dict[str, DataFrame]:
+                       batch_id: int | None = None) -> Frames:
     """Fold a batch of NEW files into the dedup state.
 
     ``batch_id=None`` assigns the next free id — after first re-folding
@@ -932,66 +933,21 @@ def compact_state(spark: SparkSession, state_dir: str,
     return {"through": w, "merged_batches": len(merged_ids)}
 
 
-class _StateFrames(dict):
-    """Lazy read-view over the dedup state. Building the DataFrame PLANS
-    (especially the expanded_edges expansion) costs ~0.4-0.5 s of driver
-    py4j round-trips, which every incremental_update used to pay even when
-    the caller never touched the returned frames (the common steady-state
-    fold loop). Each frame is constructed on first access and memoized;
-    compaction recovery runs before any read so a half-compacted layout is
-    never served."""
+def _state_frames(spark: SparkSession, state_dir: str) -> Frames:
+    """Lazy read-view over the dedup state: planning the frames (above
+    all the expanded_edges expansion) costs ~0.4-0.5 s of py4j round trips
+    that the steady-state fold loop never reads. Compaction recovery runs
+    before any read, so a half-compacted layout is never served."""
+    def read(table: str) -> DataFrame:
+        _recover_compaction(state_dir)
+        return _read_state(spark, table, os.path.join(state_dir, table))
 
-    _KEYS = ("signatures", "edges_compact", "edges")
-
-    def __init__(self, spark: SparkSession, state_dir: str):
-        super().__init__()
-        self._spark = spark
-        self._state_dir = state_dir
-
-    def _build(self, key: str) -> DataFrame:
-        _recover_compaction(self._state_dir)
-        if key in ("signatures", "edges_compact"):
-            table = "edges" if key == "edges_compact" else key
-            return _read_state(self._spark, table,
-                               os.path.join(self._state_dir, table))
-        if key == "edges":
-            # member-level verified pair surface (lazy, quadratic in group
-            # sizes — audits only, parity with run_pipeline()["edges"])
-            return expanded_edges(self._spark, self._state_dir)
-        raise KeyError(key)
-
-    def __getitem__(self, key: str) -> DataFrame:
-        if not super().__contains__(key):
-            super().__setitem__(key, self._build(key))
-        return super().__getitem__(key)
-
-    # every read path must funnel through the lazy __getitem__ — the
-    # plain-dict implementations would silently return the (empty)
-    # underlying storage
-    def get(self, key, default=None):
-        return self[key] if key in self._KEYS else default
-
-    def __contains__(self, key) -> bool:
-        return key in self._KEYS
-
-    def keys(self):
-        return self._KEYS
-
-    def items(self):
-        return [(k, self[k]) for k in self._KEYS]
-
-    def values(self):
-        return [self[k] for k in self._KEYS]
-
-    def __iter__(self):
-        return iter(self._KEYS)
-
-    def __len__(self) -> int:
-        return len(self._KEYS)
-
-
-def _state_frames(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
-    return _StateFrames(spark, state_dir)
+    return Frames({
+        "signatures": lambda: read("signatures"),
+        "edges_compact": lambda: read("edges"),
+        # member-level pairs, parity with run_pipeline()["edges"]
+        "edges": lambda: expanded_edges(spark, state_dir),
+    })
 
 
 def _groups_from_state(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -97,7 +97,8 @@ def test_skew_guard_metrics(spark, corpus):
 
     tiny = DedupConfig(max_bucket=4, salt=1)  # salt=1 → drop above max_bucket
     sigs = compute_signatures(corpus, tiny)
-    pairs, metrics = candidate_pairs(sigs, tiny, return_metrics=True)
+    pairs, metrics = candidate_pairs(sigs, tiny, n_rows=sigs.count(),
+                                     return_metrics=True)
     m = metrics.collect()[0]
     assert m["dropped_buckets"] > 0  # the giant injected cluster trips the cap
     assert pairs.count() >= 0
@@ -114,10 +115,11 @@ def test_salted_pairs_recall_neutral(spark, corpus):
     # max_bucket=4 forces nearly every real bucket through the salted path
     salted_cfg = DedupConfig(max_bucket=4, salt=1_000_000)
     uncapped = DedupConfig(max_bucket=1_000_000, salt=1)
+    n = sigs.count()
     got = {(r["src"], r["dst"])
-           for r in candidate_pairs(sigs, salted_cfg).collect()}
+           for r in candidate_pairs(sigs, salted_cfg, n_rows=n).collect()}
     want = {(r["src"], r["dst"])
-            for r in candidate_pairs(sigs, uncapped).collect()}
+            for r in candidate_pairs(sigs, uncapped, n_rows=n).collect()}
     assert got == want
     assert len(want) > 100
     sigs.unpersist()
@@ -297,6 +299,38 @@ def test_capped_bucket_regime_e2e(spark, corpus, tmp_path_factory):
     # before a bucket crossed the cap — never fewer than the one-shot run
     assert inc >= capped
     assert inc <= uncapped
+
+
+def test_result_plans_audits_lazily_and_releases(spark, corpus,
+                                                 monkeypatch):
+    """``run_pipeline`` plans the quadratic ``edges`` expansion only on
+    its first read, and ``release()`` unpersists every stage persist the
+    call took: three calls on distinct inputs leave the session's
+    persisted-RDD count where it started (unreleased, it grew by three
+    per input: sig_groups, edges_rep, clusters)."""
+    from dedup_spark.operators import groups
+
+    calls = []
+    expand = groups.expand_group_edges
+
+    def counting(*args):
+        calls.append(1)
+        return expand(*args)
+
+    monkeypatch.setattr(groups, "expand_group_edges", counting)
+    jsc = spark.sparkContext._jsc
+    corpus.count()  # the fixture's own cache is not the result's
+    before = jsc.getPersistentRDDs().size()
+    for k in range(3):
+        res = run_pipeline(corpus.where(f"file_id % 3 = {k}"), CFG)
+        assert res["clusters"].count() > 0
+        assert jsc.getPersistentRDDs().size() > before
+        if k == 0:
+            assert "edges" in res and calls == []  # `in` plans nothing
+            edges = res["edges"]
+            assert len(calls) == 1 and res["edges"] is edges
+        res.release()
+        assert jsc.getPersistentRDDs().size() == before
 
 
 def test_verify_two_phase_equivalence(result):

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dedup_spark.config import DedupConfig
-from dedup_spark.pipeline import run_pipeline
+from dedup_spark.pipeline import Frames, run_pipeline
 from dedup_spark.streaming import (
     compact_state, current_clusters, expanded_edges, incremental_update,
     stream_corpus,
@@ -247,23 +247,33 @@ def test_stranded_index_rebuilt(spark, tmp_path_factory, removed):
     assert _pairs(expanded_edges(spark, state).where("verified")) == batch_edges
 
 
-def test_state_frames_lazy_mapping(spark, tmp_path_factory):
-    """incremental_update returns a LAZY frame mapping (plan construction
-    deferred to first access); every dict-style read path must go through
-    the lazy builder — a plain dict .get/.items would silently return
-    nothing."""
+@pytest.mark.parametrize("producer", ["incremental_update", "run_pipeline"])
+def test_state_frames_lazy_mapping(spark, tmp_path_factory, producer):
+    """Both CLI paths return the one LAZY frame mapping, ``Frames`` (plan
+    construction deferred to first access); every dict-style read path
+    must go through the lazy builder — a plain dict .get/.items would
+    silently return nothing."""
     corpus = corpus_df(spark, 60, seed=3).cache()
-    state = str(tmp_path_factory.mktemp("state_lazy"))
-    out = incremental_update(corpus, state, CFG)
-    assert set(out.keys()) == {"signatures", "edges_compact", "edges"}
-    assert len(out) == 3 and "edges" in out
-    assert out.get("edges") is not None
-    assert out.get("nope", 42) == 42
-    assert {k for k, _ in out.items()} == set(out.keys())
-    assert all(v is not None for v in out.values())
-    assert out["signatures"].count() == 60
-    # memoized: second access returns the same DataFrame object
-    assert out["edges"] is out["edges"]
+    if producer == "run_pipeline":
+        out = run_pipeline(corpus, CFG)
+        keys = {"signatures", "groups", "shingles", "candidates",
+                "edges_rep", "edges", "clusters", "candidate_metrics"}
+    else:
+        state = str(tmp_path_factory.mktemp("state_lazy"))
+        out = incremental_update(corpus, state, CFG)
+        keys = {"signatures", "edges_compact", "edges"}
+    assert type(out) is Frames
+    with out:
+        assert set(out.keys()) == keys
+        assert len(out) == len(keys) and "edges" in out
+        assert "nope" not in out
+        assert out.get("edges") is not None
+        assert out.get("nope", 42) == 42
+        assert {k for k, _ in out.items()} == keys
+        assert all(v is not None for v in out.values())
+        assert out["signatures"].count() == 60
+        # memoized: second access returns the same DataFrame object
+        assert out["edges"] is out["edges"]
 
 
 def test_bucketed_band_state_and_pruned_fold(spark, tmp_path_factory,

@@ -1,7 +1,9 @@
-"""Import hygiene for ``tools/``: every ``from dedup_spark... import name``
-in a tool script, or in a child script it embeds as a string constant,
-must resolve against the current package. A deleted operator then cannot
-leave a tool that only fails when someone runs it."""
+"""Import hygiene for ``tools/`` and the benchmark drivers (``bench.py``,
+``bench_extra.py``, ``perfbench/``): every ``from dedup_spark... import
+name`` in one of those scripts — function-local imports included — or in
+a child script it embeds as a string constant, must resolve against the
+current package. A deleted or renamed operator then cannot leave a tool or
+a benchmark that only fails when someone runs it."""
 
 import ast
 import importlib
@@ -9,12 +11,10 @@ import os
 
 import pytest
 
-TOOLS = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # tools whose measurement runs in a fresh interpreter from a module-level
 # script string (``subprocess.run([python, "-c", SCRIPT])``)
-CHILD_SCRIPT_TOOLS = ("scaling_bench.py",)
+CHILD_SCRIPT_TOOLS = ("tools/scaling_bench.py",)
 
 
 def _child_scripts(tree: ast.Module) -> list[ast.Module]:
@@ -54,12 +54,19 @@ def _resolves(module: str, name: str | None) -> bool:
         return False
 
 
-TOOL_FILES = sorted(f for f in os.listdir(TOOLS) if f.endswith(".py"))
+def _scripts(subdir: str) -> list[str]:
+    files = os.listdir(os.path.join(ROOT, subdir))
+    return sorted(f"{subdir}/{f}" for f in files if f.endswith(".py"))
 
 
-@pytest.mark.parametrize("tool", TOOL_FILES)
+SCRIPTS = [*_scripts("tools"), "bench.py", "bench_extra.py",
+           *_scripts("perfbench")]
+
+
+@pytest.mark.parametrize("tool", SCRIPTS,
+                         ids=lambda p: p.removeprefix("tools/"))
 def test_tool_package_imports_resolve(tool):
-    with open(os.path.join(TOOLS, tool)) as f:
+    with open(os.path.join(ROOT, tool)) as f:
         tree = ast.parse(f.read(), filename=tool)
     scripts = _child_scripts(tree)
     if tool in CHILD_SCRIPT_TOOLS:

@@ -106,9 +106,11 @@ spark.sparkContext.addPyFile(package_zip())
 corpus = spark.read.parquet(sys.argv[2])
 n = corpus.count()
 # untimed warmup pass (small slice): JIT + Python-worker startup is a
-# once-per-JVM cost a production job amortizes; without it the fixed
-# ~5 s warmup loads the two parallelism levels asymmetrically.
-run_pipeline(corpus.limit(400), DedupConfig())["clusters"].count()
+# once-per-JVM cost a production job amortizes (released, so its persists
+# leave the executors before the timed run); without it the fixed ~5 s
+# warmup loads the two parallelism levels asymmetrically.
+with run_pipeline(corpus.limit(400), DedupConfig()) as r:
+    r["clusters"].count()
 c_before = calib()
 t0 = time.time()
 res = run_pipeline(corpus, DedupConfig())
