@@ -69,25 +69,6 @@ class DedupConfig:
                                    # for large-corpus runs.
     min_lcs: int = 0               # optional suffix-array LCS gate (0 = off)
 
-    # incremental-state layout (NOT semantics-bearing: every layout is
-    # readable forever and results are identical — excluded from the
-    # config fingerprint so changing them never invalidates checkpoints)
-    state_buckets: int = 64        # band-hash bucket count for the bucketed
-                                   # bands-state layout (hive subdirs
-                                   # bh<P>=K, self-describing — the bucket
-                                   # count is encoded in the partition
-                                   # column name). At deployment scale set
-                                   # to thousands: a small batch's fold then
-                                   # reads only the touched buckets of the
-                                   # prior band index instead of scanning
-                                   # all of it (the one per-batch O(state)
-                                   # term the append-only design had left).
-    state_bucket_min_rows: int = 20_000  # batches below this many signature
-                                   # rows keep the flat single-dir bands
-                                   # layout (bucketing a tiny batch buys
-                                   # nothing and costs P near-empty files);
-                                   # readers handle mixed layouts natively.
-
     @property
     def rows_per_band(self) -> int:
         # ValueError, not assert: asserts vanish under `python -O`, and an

@@ -63,16 +63,18 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25,
-                         n_partitions: int | None = None,
-                         edges_canonical: bool = False,
+# Round cap of the distributed star rounds: a run that has not converged
+# after this many rounds raises instead of returning partial labels.
+MAX_CC_ROUNDS = 25
+
+
+def connected_components(edges: DataFrame, edges_canonical: bool = False,
                          max_edges: int | None = None) -> DataFrame:
     """Return (file_id, cluster_id) for every vertex appearing in edges.
 
-    ``n_partitions`` sizes the per-round shuffles. The star rounds flatten
-    the edge set drastically after round one, so a small fixed width avoids
-    paying hundreds of near-empty tasks per round; at true cluster scale
-    pass something proportional to the edge count.
+    The per-round shuffles are max(8, parallelism / 4) wide: the star
+    rounds flatten the edge set drastically after round one, so a small
+    fixed width avoids paying hundreds of near-empty tasks per round.
 
     ``edges_canonical``: caller guarantees (src < dst, no self-loops, no
     duplicates) — skips the canonicalization shuffle (one exchange + agg
@@ -87,10 +89,45 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     are collected once as they are, with no canonicalization and no
     persist + count probe; ``None`` (the batch path) keeps the probe.
     """
+    from pyspark import StorageLevel
+
     spark = edges.sparkSession
-    if n_partitions is None:
-        n_partitions = max(8, spark.sparkContext.defaultParallelism // 4)
-    return _cc_loop(edges, max_iter, n_partitions, edges_canonical, max_edges)
+    raw = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    if max_edges is not None and max_edges <= DRIVER_FINALIZE_EDGES:
+        # the driver labeling is indifferent to duplicates, self-loops
+        # and orientation, so the raw edges skip the canonicalizing
+        # shuffle as well as the probe
+        return _driver_cc(spark, raw)
+    # persist BEFORE the probe: on the big-graph branch the probe's partial
+    # compute is reused by the localCheckpoint instead of re-deriving the
+    # whole canon lineage (which may be an expensive pair-gen pipeline)
+    canon = (raw if edges_canonical else _canon(edges)).persist(
+        StorageLevel.DISK_ONLY)
+    # Fast path: small graphs skip the distributed rounds entirely.
+    # Size test = count(), NOT limit(N+1).collect(): CollectLimit scale-up
+    # runs a ladder of incremental jobs AND short-circuits partition
+    # iterators, so the persist is left partially populated and every rung
+    # re-derives upstream (event-log measured: 6 jobs, ~4.4 s of re-scan
+    # at 8 cores on a 66k-edge graph). count() is one clean job that fully
+    # materializes the cache; the Arrow collect then reads cache only.
+    n_edges = canon.count()
+    if n_edges <= DRIVER_FINALIZE_EDGES:
+        try:
+            return _driver_cc(spark, canon)
+        finally:
+            canon.unpersist()
+
+    # narrow the per-round shuffles ONLY NOW: canon above is materialized
+    # at full session width (the override used to sit on the whole lineage,
+    # throttling the upstream pair-gen of the edge set to n_partitions —
+    # measured 8-task stages carrying ~50 s of 32-core work at sf1.0)
+    n_partitions = max(8, spark.sparkContext.defaultParallelism // 4)
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
+    try:
+        return _cc_rounds(canon, n_partitions)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 DRIVER_FINALIZE_EDGES = 500_000  # collect threshold: ~8 MB of (u,v) longs
@@ -153,50 +190,7 @@ def _driver_cc(spark, uv: DataFrame) -> DataFrame:
     return _assign_df(spark, _assign_from_edges(pdf[["u", "v"]].to_numpy()))
 
 
-def _cc_loop(edges: DataFrame, max_iter: int, n_partitions: int,
-             edges_canonical: bool = False,
-             max_edges: int | None = None) -> DataFrame:
-    from pyspark import StorageLevel
-
-    spark = edges.sparkSession
-    raw = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    if max_edges is not None and max_edges <= DRIVER_FINALIZE_EDGES:
-        # the driver labeling is indifferent to duplicates, self-loops
-        # and orientation, so the raw edges skip the canonicalizing
-        # shuffle as well as the probe
-        return _driver_cc(spark, raw)
-    # persist BEFORE the probe: on the big-graph branch the probe's partial
-    # compute is reused by the localCheckpoint instead of re-deriving the
-    # whole canon lineage (which may be an expensive pair-gen pipeline)
-    canon = (raw if edges_canonical else _canon(edges)).persist(
-        StorageLevel.DISK_ONLY)
-    # Fast path: small graphs skip the distributed rounds entirely.
-    # Size test = count(), NOT limit(N+1).collect(): CollectLimit scale-up
-    # runs a ladder of incremental jobs AND short-circuits partition
-    # iterators, so the persist is left partially populated and every rung
-    # re-derives upstream (event-log measured: 6 jobs, ~4.4 s of re-scan
-    # at 8 cores on a 66k-edge graph). count() is one clean job that fully
-    # materializes the cache; the Arrow collect then reads cache only.
-    n_edges = canon.count()
-    if n_edges <= DRIVER_FINALIZE_EDGES:
-        try:
-            return _driver_cc(spark, canon)
-        finally:
-            canon.unpersist()
-
-    # narrow the per-round shuffles ONLY NOW: canon above is materialized
-    # at full session width (the override used to sit on the whole lineage,
-    # throttling the upstream pair-gen of the edge set to n_partitions —
-    # measured 8-task stages carrying ~50 s of 32-core work at sf1.0)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
-    try:
-        return _cc_rounds(canon, max_iter, n_partitions)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-def _cc_rounds(canon: DataFrame, max_iter: int, n_partitions: int) -> DataFrame:
+def _cc_rounds(canon: DataFrame, n_partitions: int) -> DataFrame:
     spark = canon.sparkSession
     e = canon.repartition(n_partitions).localCheckpoint(eager=True)
     canon.unpersist()
@@ -207,7 +201,7 @@ def _cc_rounds(canon: DataFrame, max_iter: int, n_partitions: int) -> DataFrame:
     # labeling read assignments straight off it.
     prev_sig = None
     converged = False
-    for _ in range(max_iter):
+    for _ in range(MAX_CC_ROUNDS):
         e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
         # count + order-independent XOR of per-edge hashes: an unchanged
         # pair means an unchanged (distinct) edge set. bit_xor, not sum —
@@ -233,7 +227,8 @@ def _cc_rounds(canon: DataFrame, max_iter: int, n_partitions: int) -> DataFrame:
         # NEVER return silently-partial labels (the failure mode of the
         # round-2 one-hop contraction on long paths)
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {MAX_CC_ROUNDS} "
+            "rounds"
         )
     # fixpoint: every component is a star (center=min). Validate before
     # trusting the labels — star-ness means no vertex is both a leaf and a
@@ -248,14 +243,12 @@ def _cc_rounds(canon: DataFrame, max_iter: int, n_partitions: int) -> DataFrame:
 
 
 def cluster_assignments(corpus_ids: DataFrame, edges: DataFrame,
-                        max_iter: int = 25,
                         edges_canonical: bool = False,
                         max_edges: int | None = None) -> DataFrame:
     """All files → cluster id; files with no verified edge are singleton
     clusters (cluster_id = own file_id). ``max_edges``: see
     ``connected_components``."""
-    cc = connected_components(edges, max_iter=max_iter,
-                              edges_canonical=edges_canonical,
+    cc = connected_components(edges, edges_canonical=edges_canonical,
                               max_edges=max_edges)
     return (
         corpus_ids.select("file_id")

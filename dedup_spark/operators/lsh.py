@@ -233,14 +233,13 @@ def salted_pairs(buckets: DataFrame, max_b: int, salt: int | None,
 
 
 def _block_sides(cold: DataFrame, max_b: int, keys: list[str],
-                 id_col: str, cap: int | None = None,
-                 n_partitions: int | None = None):
+                 id_col: str, cap: int | None = None):
     """Bucket members → the two sides of the block-pair join (see
-    ``_block_pairs``). Split out so tests can assert the per-task
-    member-count bound directly. ``cap``: drop buckets larger than this
-    AFTER the window count (the no-pre-filter plan shape)."""
-    if n_partitions is None:
-        n_partitions = cold.sparkSession.sparkContext.defaultParallelism * 2
+    ``_block_pairs``) and the width of its explicit exchanges. Split out
+    so tests can assert the per-task member-count bound directly.
+    ``cap``: drop buckets larger than this AFTER the window count (the
+    no-pre-filter plan shape)."""
+    n_partitions = cold.sparkSession.sparkContext.defaultParallelism * 2
     # bucket sizes via a window over an EXPLICIT fixed-width repartition:
     # with a plain shuffle AQE coalesces this exchange by its (tiny) input
     # bytes — measured: one task carrying the whole giant-bucket block

@@ -43,11 +43,6 @@ def config_fingerprint(cfg: DedupConfig) -> str:
     import dataclasses
 
     d = dataclasses.asdict(cfg)
-    # state-layout knobs are not semantics-bearing (every layout remains
-    # readable and results are identical), so they never invalidate a
-    # checkpoint
-    for k in ("state_buckets", "state_bucket_min_rows"):
-        d.pop(k, None)
     return json.dumps({"semver": PIPELINE_SEMVER, **d}, sort_keys=True)
 
 

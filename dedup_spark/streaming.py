@@ -22,29 +22,23 @@ corpus, so committed batch partitions are immutable):
                            expanded_edges) avoid re-hashing the wide
                            signature rows
   repsigs/batch_id=K/      signature rows of the group representatives
-                           BORN in this batch (one per new group).
-                           Batches over ``state_bucket_min_rows`` commit
-                           it BUCKETED on file_id (``fb<P>=K`` subdirs)
-                           so later folds' verify-endpoint fetch prunes
-                           to the buckets its endpoints can live in —
-                           the local analog of an Iceberg table bucketed
-                           by file_id serving point-lookups
+                           BORN in this batch (one per new group); every
+                           later fold scans all of it (WIDE, O(state))
   bands/batch_id=K/        (band_id, band_hash, file_id) of the born
-                           representatives — the narrow LSH index state.
-                           Batches over ``state_bucket_min_rows`` commit
-                           it BUCKETED (hive subdirs ``bh<P>=K``, K =
-                           band_hash mod P, P = ``state_buckets`` encoded
-                           in the column name so layouts self-describe
-                           and mix freely): the fold's touched-bucket
-                           read then partition-prunes to the buckets the
-                           batch can join, so the one remaining O(state)
-                           scan term follows the batch instead
+                           representatives — the narrow LSH index state;
+                           every later fold scans all of it (NARROW,
+                           O(state))
   edges/batch_id=K/        verified representative-level edges discovered
                            by this batch (compact — the within-group
                            connectivity is derivable from membership and
                            is never materialized as state)
   metrics.jsonl            per-batch lineage: rows, pairs, dropped
                            buckets, state-proportionality counters
+
+Every partition is FLAT: parquet files directly in the batch dir, never
+hive subdirectories. State written in the retired bucketed bands/repsigs
+layout (``bh<P>=`` / ``fb<P>=`` subdirs) is refused before any job runs
+(``_reject_bucketed_layout``); there is no migration.
 
 Each batch writes ONLY its own partition directories; replaying a batch
 id (Structured Streaming restart) overwrites those same dirs and nothing
@@ -60,14 +54,25 @@ re-grouped the FULL cumulative signature table every batch, an
 O(state-rows) wide shuffle of ~10 KB signature rows): shuffles
 now touch only (a) the batch's own rows, (b) the narrow group-key deltas
 of the batch, and (c) members of band buckets actually TOUCHED by the
-batch's newborn groups. Prior state is read as NARROW tables (group
-deltas: 4 longs/row; bands: 3 longs/row) plus a bucket-pruned read of
-``repsigs`` restricted by a broadcast semi-join for the verify-endpoint
-sketch fetch (fb-bucketed partitions are opened only where an endpoint
-id can live — the local analog of Iceberg point-lookups on a
-file_id-bucketed table); the wide cumulative ``signatures`` table is
-never re-shuffled — it is only consumed by the on-demand audit surfaces
-(``expanded_edges`` / ``current_clusters``).
+batch's newborn groups. Prior state is SCANNED in full: the group
+deltas (4 longs/row) and the band index (3 longs/row) are narrow scans
+reduced by semi-joins on the batch's keys (broadcast while those keys
+are small), and ``repsigs`` — the one WIDE prior-state read — is
+restricted by a semi-join on the verify endpoints. These scans
+therefore grow with the state: narrow for the deltas and bands, wide for
+repsigs. The wide cumulative ``signatures`` table is never re-read by the fold — it
+is only consumed by the on-demand audit surfaces (``expanded_edges`` /
+``current_clusters``).
+
+A bucketed bands/repsigs layout pruned to the buckets a batch touches
+was measured and removed: a batch with k band hashes touches
+1 − (1 − 1/P)^k of P buckets, so pruning needs P ≫ k, while every
+bucketed batch writes P directories per table. On the benchmark's
+incremental shape (a 1,000-file base, then a 100-file batch with 88 born
+groups, 4 cores, pruning forced on) the fold read 64 of 64 band buckets
+and 103 of 110 rep-sketch buckets at P=64 in 12.3 s against 5.5 s flat;
+at P=1024 it still read 956 of 1,024 band buckets, took 31.5 s and left
+5,855 state files against 57.
 
 Fixed-cost budget (the per-batch job count is the small-batch
 throughput limiter; at this scale CPU follows plans and jobs, not data).
@@ -77,7 +82,7 @@ group-delta and bands commits on writer threads joined before the edges
 marker. No job runs only to learn a schema or a size: every state read
 passes its pinned schema (``STATE_SCHEMAS``), the bucket-skew counters
 and the candidate-pair count are observe() metrics riding the edges
-commit, and the broadcast/prune gates read upper bounds summed from
+commit, and the broadcast gates read upper bounds summed from
 parquet footers (a job measures the exact size only when the bound is too
 loose to decide a gate). ``current_clusters`` bounds its CC input the
 same way and collects it with no probe job. Measured on the benchmark's
@@ -132,11 +137,11 @@ from .operators.signatures import SIG_SCHEMA, compute_signatures
 from .operators.verify import verify_pairs
 from .pipeline import Frames
 
-# One pinned schema per state table (data columns only; hive partition
-# columns such as batch_id / bh<P> / fb<P> are still discovered from the
-# directory names). Every state read passes its table's schema, so no read
-# launches a parquet schema-inference job; tests pin each entry against
-# the schema a fresh fold writes, flat and bucketed.
+# One pinned schema per state table (data columns only; the hive
+# partition column batch_id is still discovered from the directory names).
+# Every state read passes its table's schema, so no read launches a
+# parquet schema-inference job; a test pins each entry against the schema
+# a fresh fold writes.
 STATE_SCHEMAS = {
     "signatures": SIG_SCHEMA,
     "repsigs": SIG_SCHEMA,
@@ -148,14 +153,10 @@ STATE_SCHEMAS = {
 }
 
 
-def _read_state(spark: SparkSession, table: str, *paths: str,
-                base: str | None = None) -> DataFrame:
+def _read_state(spark: SparkSession, table: str, *paths: str) -> DataFrame:
     """Read state partitions (or a whole table root) of ``table`` under its
-    pinned schema; ``base`` sets the hive ``basePath``."""
-    reader = spark.read.schema(STATE_SCHEMAS[table])
-    if base is not None:
-        reader = reader.option("basePath", base)
-    return reader.parquet(*paths)
+    pinned schema."""
+    return spark.read.schema(STATE_SCHEMAS[table]).parquet(*paths)
 
 
 def _batch_dirs(path: str) -> list[int]:
@@ -170,13 +171,16 @@ def _batch_dirs(path: str) -> list[int]:
 
 
 def _parquet_files(path: str) -> list[str]:
-    """All parquet data files under a committed partition, recursing into
-    hive-style subdirectories (the bucketed bands layout)."""
+    """The parquet data files of one flat committed partition (a single
+    directory listing), or of a table root's partitions (``batch_id=*``
+    subdirectories, one listing each)."""
     out = []
-    for dirpath, _, names in os.walk(path):
-        out.extend(
-            os.path.join(dirpath, n) for n in names if n.endswith(".parquet")
-        )
+    for name in os.listdir(path):
+        full = os.path.join(path, name)
+        if name.endswith(".parquet"):
+            out.append(full)
+        elif name.startswith("batch_id="):
+            out.extend(_parquet_files(full))
     return out
 
 
@@ -219,6 +223,7 @@ def incremental_update(new_corpus: DataFrame, state_dir: str,
     edge_path = os.path.join(state_dir, "edges")
 
     if os.path.isdir(state_dir):
+        _reject_bucketed_layout(state_dir)
         _recover_compaction(state_dir)  # finish any interrupted compaction
     wmark = _watermark(state_dir)
     done = set(_batch_dirs(edge_path))
@@ -304,102 +309,28 @@ def _prior_parts(state_dir: str, table: str, batch_id: int) -> list[str]:
     ]
 
 
-# --- bucketed state layout ---------------------------------------------
-# A state partition is either FLAT (parquet files directly in the batch
-# dir — small batches, the historical layout) or BUCKETED: hive subdirs
-# ``<prefix><P>=K`` where K = key mod P (``bh`` buckets the bands table
-# on band_hash, ``fb`` buckets repsigs on file_id). The layout is
-# self-describing (P is encoded in the partition-column name), so
-# partitions written under different ``state_buckets`` settings coexist
-# and no sidecar metadata can go stale. Bucketing exists for ONE reason:
-# the fold used to SCAN all prior band rows (narrow, O(state)) and all
-# prior rep sketches (WIDE, O(state)) every batch; against bucketed
-# partitions the reader prunes to the buckets the batch can actually
-# join, so prior-state scan cost follows the batch.
-_BUCKET_RE = re.compile(r"(bh|fb)(\d+)=")
-# don't pay the touched-bucket job until the prunable state is big enough
-# for the saved scan to dwarf one tiny Spark job (~0.3 s)
-_PRUNE_MIN_BYTES = 64 * 1024 * 1024
-# and never collect an unbounded key list to the driver: past this many
-# keys the batch touches ~every bucket anyway (the touched SET stays
-# ≤ P, but the collect itself would ship every key)
-_PRUNE_MAX_HASHES = 100_000
-
-
-def _bucket_scheme(path: str, prefix: str) -> int | None:
-    """P if the committed partition uses the bucketed layout, else None."""
-    for name in os.listdir(path):
-        m = _BUCKET_RE.match(name)
-        if m and m.group(1) == prefix:
-            return int(m.group(2))
-    return None
-
-
-def _drop_layout_cols(df: DataFrame) -> DataFrame:
-    return df.drop("batch_id", *[
-        c for c in df.columns if re.fullmatch(r"(bh|fb)\d+", c)
-    ])
-
-
-def _read_bucketed_parts(spark: SparkSession, table: str, parts: list[str],
-                         prefix: str,
-                         touched_keys: list[int] | None = None):
-    """Read partitions of state ``table`` in ANY layout mix as one frame
-    (layout columns dropped). ``touched_keys`` (the distinct join-key
-    values of the current batch — band hashes for ``bh``, file ids for
-    ``fb``) enables partition pruning on bucketed parts: only buckets
-    that can contain a joinable row are read; flat parts are always
-    scanned in full. Returns ``(frame, read_dirs, buckets_read,
-    buckets_total)``: ``read_dirs`` are the directories the scan opens
-    (their footers bound the frame's rows), and the counts cover the
-    bucketed parts only (equal when nothing pruned)."""
-    root = os.path.dirname(parts[0])
-    by_scheme: dict[int | None, list[str]] = {}
-    for p in parts:
-        by_scheme.setdefault(_bucket_scheme(p, prefix), []).append(p)
-    frames, read_dirs = [], []
-    buckets_read = buckets_total = 0
-    for scheme, group in by_scheme.items():
-        if scheme is None:
-            frames.append(_drop_layout_cols(_read_state(spark, table, *group)))
-            read_dirs += group
+def _reject_bucketed_layout(state_dir: str) -> None:
+    """Refuse state holding the retired bucketed bands/repsigs layout
+    (hive ``bh<P>=`` / ``fb<P>=`` subdirectories inside a partition):
+    the fold reads and writes only flat partitions, so such a partition
+    would be misread. One driver-side listing per partition, no Spark
+    job; called before the fold or a compaction writes anything."""
+    for table in ("bands", "repsigs"):
+        tdir = os.path.join(state_dir, table)
+        if not os.path.isdir(tdir):
             continue
-        df = _read_state(spark, table, *group, base=root)
-        present = [
-            (os.path.join(p, name), int(name.split("=", 1)[1]))
-            for p in group for name in os.listdir(p)
-            if (m := _BUCKET_RE.match(name)) and m.group(1) == prefix
-        ]
-        buckets_total += len(present)
-        if touched_keys is not None:
-            touched = {k % scheme for k in touched_keys}
-            df = df.where(F.col(f"{prefix}{scheme}").isin(sorted(touched)))
-            # dirs actually read: present buckets ∩ touched, per part
-            present = [(d, b) for d, b in present if b in touched]
-        buckets_read += len(present)
-        read_dirs += [d for d, _ in present]
-        frames.append(_drop_layout_cols(df))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out, read_dirs, buckets_read, buckets_total
-
-
-def _write_bucketed_part(df: DataFrame, path: str, key_col: str,
-                         prefix: str, cfg: DedupConfig, batch_rows: int,
-                         flat_coalesce: int) -> None:
-    """Commit one state partition in the layout the batch size warrants:
-    bucketed (hive ``<prefix><P>=`` subdirs, ≤1 file per bucket via a
-    narrow repartition on the bucket column) when the batch clears
-    ``state_bucket_min_rows``, else the flat single-dir layout."""
-    P = cfg.state_buckets
-    if P > 1 and batch_rows >= cfg.state_bucket_min_rows:
-        col = f"{prefix}{P}"
-        (df.withColumn(col, F.pmod(F.col(key_col), F.lit(P)).cast("int"))
-           .repartition(col)
-           .write.mode("overwrite").partitionBy(col).parquet(path))
-    else:
-        df.coalesce(flat_coalesce).write.mode("overwrite").parquet(path)
+        for part in os.listdir(tdir):
+            pdir = os.path.join(tdir, part)
+            if not os.path.isdir(pdir):
+                continue
+            sub = [n for n in os.listdir(pdir) if "=" in n
+                   and os.path.isdir(os.path.join(pdir, n))]
+            if sub:
+                raise RuntimeError(
+                    f"state partition {pdir} holds a bucketed subdirectory "
+                    f"({sorted(sub)[0]}); only the flat layout is "
+                    "supported — fold the corpus into a fresh state_dir"
+                )
 
 
 def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
@@ -518,30 +449,20 @@ def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
 
     # 4. newborn representatives' signature rows + their narrow band rows
     # become state; the rep is pinned at birth (membership-based
-    # expansion makes the endpoint choice irrelevant downstream). Large
-    # batches commit repsigs BUCKETED on file_id (``fb`` layout) so later
-    # folds' verify-endpoint fetch — the one WIDE prior-state read left —
-    # partition-prunes to the buckets its endpoints can live in.
-    batch_rows = _footer_rows(sig_part)
-    _timed(phases, "repsigs_write", lambda: _write_bucketed_part(
-        new_sigs.drop("batch_id").join(hint(born_reps), "file_id"),
-        repsig_part, "file_id", "fb", cfg,
-        batch_rows=batch_rows, flat_coalesce=_k(sig_part),
-    ))
+    # expansion makes the endpoint choice irrelevant downstream).
+    _timed(phases, "repsigs_write", lambda: new_sigs.drop("batch_id").join(
+        hint(born_reps), "file_id"
+    ).coalesce(_k(sig_part)).write.mode("overwrite").parquet(repsig_part))
     # (an async repsigs commit with lineage-based band consumers was
     # measured in round 6 and REVERTED: the overlapped jobs contend for
     # the same cores and the born-detection lineage re-runs per consumer
     # — fold wall grew ~15%, so the commit stays a barrier)
-    new_rep_sigs = _drop_layout_cols(
-        _read_state(spark, "repsigs", repsig_part))
-    new_bands = band_buckets(new_rep_sigs, cfg)
+    new_bands = band_buckets(_read_state(spark, "repsigs", repsig_part), cfg)
 
     def _write_bands():
-        _timed(phases, "bands_write", lambda: _write_bucketed_part(
-            new_bands, bands_part, "band_hash", "bh", cfg,
-            batch_rows=batch_rows,
-            flat_coalesce=_k(repsig_part),
-        ))
+        _timed(phases, "bands_write", lambda: new_bands.coalesce(
+            _k(repsig_part)
+        ).write.mode("overwrite").parquet(bands_part))
 
     bands_th = _CapturingThread(target=_write_bands)
     bands_th.start()
@@ -577,45 +498,22 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     # band-key rows).
     salt_cap = cfg.max_bucket * max(1, cfg.salt)
     prior_bands = _prior_parts(state_dir, "bands", batch_id)
-    buckets_read = buckets_total = 0
     # exact band-key volume, driver-side: born reps (committed repsig
     # footers) × bands/rep. The bands partition itself may still be
     # committing on the async writer, so it cannot be measured here — but
     # this product IS its row count. Added to the footer rows of every
-    # prior band file the scan below opens, it bounds the universe's rows
-    # from above without a job.
+    # prior bands partition the scan below opens, it bounds the universe's
+    # rows from above without a job.
     born_groups = _footer_rows(repsig_part)
     band_rows = born_groups * cfg.bands
     universe_bound = band_rows
     if prior_bands:
         band_hint = (F.broadcast if 24 * band_rows <= _BROADCAST_MAX_BYTES
                      else (lambda df: df))
-        # cost-gated partition pruning of the prior band index: one tiny
-        # job collects the batch's distinct band hashes (bounded by
-        # band_rows — the gate keeps it far under the bucket count, where
-        # pruning can't pay anyway) and bucketed prior partitions are
-        # then read only where a joinable row can live. Paid only when
-        # the prunable state is big enough that the saved scan dwarfs
-        # the job; flat partitions always scan in full.
-        prunable = sum(
-            _part_bytes(p) for p in prior_bands if _bucket_scheme(p, "bh")
-        )
-        touched_hashes = None
-        if prunable > _PRUNE_MIN_BYTES and band_rows <= _PRUNE_MAX_HASHES:
-            touched_hashes = [
-                r[0] for r in _timed(
-                    phases, "touched_buckets",
-                    new_bands.select("band_hash").distinct().collect,
-                )
-            ]
-        prior_df, read_dirs, buckets_read, buckets_total = (
-            _read_bucketed_parts(spark, "bands", prior_bands, "bh",
-                                 touched_hashes)
-        )
-        universe_bound += sum(_footer_rows(d) for d in read_dirs)
+        universe_bound += sum(_footer_rows(p) for p in prior_bands)
         # a semi-join: duplicate keys on the build side are harmless, so
         # the key frame needs no distinct (and no exchange)
-        touched_old = prior_df.join(
+        touched_old = _read_state(spark, "bands", *prior_bands).join(
             band_hint(new_bands.select("band_id", "band_hash")),
             ["band_id", "band_hash"], "left_semi",
         )
@@ -687,42 +585,19 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
         # inside the edges job (a pairs-derived endpoint set would put
         # the unpopulated pair plan in two concurrent branches and
         # double-compute it). Broadcast gate: 8 bytes per universe row
-        # against the common bytes cap.
-        # Against fb-bucketed repsig partitions the read additionally
-        # partition-prunes to the buckets an endpoint id can live in —
-        # the semi-join then filters within the surviving buckets — so
-        # the last WIDE prior-state scan term follows the batch, same
-        # cost gate as the band-index pruning above.
+        # against the common bytes cap, read off the footer bound; only a
+        # bound too loose to decide it pays one job for the exact row
+        # count (which also builds the cache), so the decision equals the
+        # exact-count one.
         endpoint_ids = universe.select("file_id")
-        repsig_parts = (
-            _prior_parts(state_dir, "repsigs", batch_id) + [repsig_part]
-        )
-        rs_prunable = sum(
-            _part_bytes(p) for p in repsig_parts if _bucket_scheme(p, "fb")
-        )
-        # Both gates read the footer bound; only a bound too loose to
-        # decide them pays one job for the exact row count (which also
-        # builds the cache), so every decision equals the exact-count one.
-        gate_rows = _BROADCAST_MAX_BYTES // 8
-        if rs_prunable > _PRUNE_MIN_BYTES:
-            gate_rows = min(gate_rows, _PRUNE_MAX_HASHES)
         universe_rows = universe_bound
-        if universe_bound > gate_rows:
+        if universe_bound > _BROADCAST_MAX_BYTES // 8:
             universe_rows = _timed(phases, "universe_count", universe.count)
         ep_hint = (F.broadcast if 8 * universe_rows <= _BROADCAST_MAX_BYTES
                    else (lambda df: df))
-        touched_ids = None
-        if (rs_prunable > _PRUNE_MIN_BYTES
-                and universe_rows <= _PRUNE_MAX_HASHES):
-            touched_ids = [
-                r[0] for r in _timed(
-                    phases, "touched_endpoints",
-                    endpoint_ids.distinct().collect,
-                )
-            ]
-        all_repsigs, _, rs_buckets_read, rs_buckets_total = (
-            _read_bucketed_parts(spark, "repsigs", repsig_parts, "fb",
-                                 touched_ids)
+        all_repsigs = _read_state(
+            spark, "repsigs",
+            *_prior_parts(state_dir, "repsigs", batch_id), repsig_part,
         )
         verify_side = all_repsigs.join(
             ep_hint(endpoint_ids), "file_id", "left_semi")
@@ -757,13 +632,6 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
             "dropped_buckets": int(stats["dropped_buckets"]),
             "dropped_rows": int(stats["dropped_rows"]),
             "max_bucket_size": int(stats["max_bucket_size"]),
-            # state-scan accountability: of the prior band index's hive
-            # bucket dirs, how many this fold actually read (read==total
-            # when pruning was gated off or the layout is flat)
-            "band_state_buckets_read": buckets_read,
-            "band_state_buckets_total": buckets_total,
-            "repsig_state_buckets_read": rs_buckets_read,
-            "repsig_state_buckets_total": rs_buckets_total,
             "phase_ms": phases,
         }
         if refold:
@@ -839,8 +707,7 @@ def _recover_compaction(state_dir: str) -> None:
     os.remove(jpath)
 
 
-def compact_state(spark: SparkSession, state_dir: str,
-                  cfg: DedupConfig | None = None) -> dict:
+def compact_state(spark: SparkSession, state_dir: str) -> dict:
     """Log-structured maintenance compaction (run out of band, like an
     Iceberg rewrite): merge every committed batch's NARROW delta
     partitions (groups / members / repsigs / bands / edges) into one base partition
@@ -850,15 +717,17 @@ def compact_state(spark: SparkSession, state_dir: str,
     surface. Fold semantics are preserved exactly: born-group detection
     needs key PRESENCE in any prior delta (the groups merge keeps one row
     per key: min rep_delta, summed cnt_delta), and repsigs/bands/edges
-    rows are disjoint across batches so their merge is a plain union.
+    rows are disjoint across batches so their merge is a plain union,
+    written flat like every other partition.
 
     Crash safety: merged bases are written to a hidden tmp dir first, a
     journal records the install + deletes, and every fold start finishes
     an interrupted compaction idempotently before touching state. Refuses
-    to run while any batch is stranded (signatures without edges)."""
+    to run while any batch is stranded (signatures without edges), or on
+    state holding the retired bucketed layout."""
     import shutil
 
-    cfg = cfg or DedupConfig()
+    _reject_bucketed_layout(state_dir)
     _recover_compaction(state_dir)
     sig_ids = _batch_dirs(os.path.join(state_dir, "signatures"))
     done = set(_batch_dirs(os.path.join(state_dir, "edges")))
@@ -882,23 +751,6 @@ def compact_state(spark: SparkSession, state_dir: str,
         merged_ids = sorted(set(merged_ids) | set(ids))
         dirs = [os.path.join(tdir, f"batch_id={b}") for b in ids]
         tmp = os.path.join(tdir, ".compact_tmp")
-        if table in ("bands", "repsigs"):
-            # layout-aware read (flat and bucketed partitions may
-            # coexist); the merged base is where bucketing pays most, so
-            # it is written bucketed whenever the merged volume warrants
-            key_col, prefix = (
-                ("band_hash", "bh") if table == "bands"
-                else ("file_id", "fb")
-            )
-            df, *_ = _read_bucketed_parts(spark, table, dirs, prefix)
-            _write_bucketed_part(
-                df, tmp, key_col, prefix, cfg,
-                batch_rows=sum(_footer_rows(d) for d in dirs),
-                flat_coalesce=max(
-                    1, sum(_part_bytes(d) for d in dirs) // (64 << 20)
-                ),
-            )
-            continue
         df = _read_state(spark, table, *dirs)
         if table == "groups":
             df = df.groupBy("g1", "g2").agg(

@@ -276,90 +276,54 @@ def test_state_frames_lazy_mapping(spark, tmp_path_factory, producer):
         assert out["edges"] is out["edges"]
 
 
-def test_bucketed_band_state_and_pruned_fold(spark, tmp_path_factory,
-                                             monkeypatch):
-    """100 TB scale path: bands + repsigs state committed in the
-    self-describing bucketed layouts (bh<P>= / fb<P>= hive subdirs) lets
-    a small batch's fold partition-prune BOTH the prior band index (to
-    its touched buckets) and the prior rep-sketch table (to its verify
-    endpoints' buckets) — scan cost follows the batch, not the state —
-    with results identical to the flat layout and the one-shot batch
-    run."""
-    from dedup_spark import streaming as st
-
-    cfg = DedupConfig(state_buckets=64, state_bucket_min_rows=0)
-    corpus = corpus_df(spark, 142, seed=37).cache()
-    state = str(tmp_path_factory.mktemp("state_bucket"))
-    incremental_update(corpus.where("file_id < 139"), state, cfg)
-    b0 = os.path.join(state, "bands", "batch_id=0")
-    assert st._bucket_scheme(b0, "bh") == 64
-    assert any(n.startswith("bh64=") for n in os.listdir(b0))
-    r0 = os.path.join(state, "repsigs", "batch_id=0")
-    assert st._bucket_scheme(r0, "fb") == 64
-    assert st._bucket_scheme(r0, "bh") is None  # prefixes don't cross-match
-    assert any(n.startswith("fb64=") for n in os.listdir(r0))
-
-    # a 1-file batch touches ≤ cfg.bands buckets of the 64 — with the
-    # prune gate forced on, the fold must read strictly fewer bucket
-    # dirs than exist (for the band index AND the wide rep-sketch
-    # endpoint fetch), and still produce batch-identical results
-    monkeypatch.setattr(st, "_PRUNE_MIN_BYTES", 0)
-    incremental_update(corpus.where("file_id = 139"), state, cfg)
-    lines = [json.loads(l) for l in open(os.path.join(state, "metrics.jsonl"))]
-    m1 = lines[1]
-    assert "touched_buckets" in m1["phase_ms"]
-    assert 0 < m1["band_state_buckets_read"] <= CFG.bands
-    assert m1["band_state_buckets_read"] < m1["band_state_buckets_total"]
-    assert "touched_endpoints" in m1["phase_ms"]
-    assert 0 < m1["repsig_state_buckets_read"]
-    assert m1["repsig_state_buckets_read"] < m1["repsig_state_buckets_total"]
-    part = _pairs(run_pipeline(
-        corpus.where("file_id < 140"), CFG)["edges"].where("verified"))
-    assert _pairs(expanded_edges(spark, state).where("verified")) == part
-
-    # compaction keeps the bucketed layout on the merged base (that is
-    # where bucketing pays most) and changes no derived result
-    out = compact_state(spark, state, cfg)
-    assert out["merged_batches"] == 2
-    base = os.path.join(state, "bands", "batch_id=1")
-    assert st._bucket_scheme(base, "bh") == 64
-    assert st._bucket_scheme(
-        os.path.join(state, "repsigs", "batch_id=1"), "fb") == 64
-    assert _pairs(expanded_edges(spark, state).where("verified")) == part
-
-    # a further small fold against the bucketed base (mixed-reader path)
-    # still prunes and still matches the one-shot batch run
-    incremental_update(corpus.where("file_id >= 140"), state, cfg)
-    lines = [json.loads(l) for l in open(os.path.join(state, "metrics.jsonl"))]
-    m2 = lines[-1]
-    assert m2["band_state_buckets_read"] < m2["band_state_buckets_total"]
-    batch_edges = _pairs(run_pipeline(corpus, CFG)["edges"].where("verified"))
-    assert _pairs(expanded_edges(spark, state).where("verified")) == batch_edges
-
-
 def test_loose_bound_measures_universe(spark, tmp_path_factory, monkeypatch):
-    """The fold's gates read a footer upper bound on the band universe.
-    When that bound is too loose to decide a gate, one job counts the
-    universe exactly, so the decision and every counter equal the
-    exact-count ones: here the exact count is over the endpoint-prune
-    cap, so the rep-sketch read is not pruned."""
+    """The endpoint broadcast gate reads a footer upper bound on the band
+    universe (every prior band row plus the batch's). When that bound is
+    too loose to decide the gate, one job counts the universe exactly, so
+    the decision equals the exact-count one: here the bound is over the
+    gate while the exact universe (the touched prior rows plus the
+    batch's) is under it."""
     from dedup_spark import streaming as st
 
-    cfg = DedupConfig(state_buckets=16, state_bucket_min_rows=0)
     corpus = corpus_df(spark, 90, seed=67).cache()
     state = str(tmp_path_factory.mktemp("state_bound"))
-    incremental_update(corpus.where("file_id < 80"), state, cfg)
-    monkeypatch.setattr(st, "_PRUNE_MIN_BYTES", 0)
-    monkeypatch.setattr(st, "_PRUNE_MAX_HASHES", 1)
-    incremental_update(corpus.where("file_id >= 80"), state, cfg)
+    incremental_update(corpus.where("file_id < 80"), state, CFG)
+    prior_rows = st._footer_rows(os.path.join(state, "bands", "batch_id=0"))
+    monkeypatch.setattr(st, "_BROADCAST_MAX_BYTES", 8 * prior_rows)
+    incremental_update(corpus.where("file_id >= 80"), state, CFG)
     with open(os.path.join(state, "metrics.jsonl")) as f:
         m = [json.loads(ln) for ln in f][-1]
     assert "universe_count" in m["phase_ms"]
-    assert "touched_endpoints" not in m["phase_ms"]
-    assert m["repsig_state_buckets_read"] == m["repsig_state_buckets_total"]
-    assert m["touched_old_band_rows"] > 0
+    new_band_rows = m["born_groups"] * CFG.bands
+    assert new_band_rows > 0 and m["touched_old_band_rows"] > 0
+    assert m["touched_old_band_rows"] + new_band_rows <= prior_rows
     batch_edges = _pairs(run_pipeline(corpus, CFG)["edges"].where("verified"))
     assert _pairs(expanded_edges(spark, state).where("verified")) == batch_edges
+
+
+def test_bucketed_state_is_refused(spark, tmp_path_factory):
+    """A bands or repsigs partition holding a hive subdirectory (the
+    retired bucketed layout) is refused by the fold and by compaction
+    before either runs a job or writes anything."""
+    import shutil
+
+    corpus = corpus_df(spark, 60, seed=71).cache()
+    state = str(tmp_path_factory.mktemp("state_bucketed"))
+    incremental_update(corpus.where("file_id < 30"), state, CFG)
+    part = os.path.join(state, "bands", "batch_id=0")
+    bucket = os.path.join(part, "bh64=0")
+    os.makedirs(bucket)
+    for name in os.listdir(part):
+        if name.endswith(".parquet"):
+            shutil.move(os.path.join(part, name), bucket)
+    before = _file_digests(state)
+
+    with pytest.raises(RuntimeError, match="bands/batch_id=0"):
+        incremental_update(corpus.where("file_id >= 30"), state, CFG)
+    assert not os.path.exists(os.path.join(state, "signatures", "batch_id=1"))
+    with pytest.raises(RuntimeError, match="bands/batch_id=0"):
+        compact_state(spark, state)
+    assert _file_digests(state) == before
 
 
 def test_concurrent_writer_failure_fails_fold(spark, tmp_path_factory,
@@ -443,35 +407,38 @@ def test_fold_of_exact_copies_commits(spark, tmp_path_factory):
     assert inc_cl == batch_cl
 
 
-@pytest.mark.parametrize("bucketed", [False, True], ids=["flat", "bucketed"])
+@pytest.mark.parametrize("compacted", [False, True],
+                         ids=["flat", "compacted"])
 def test_pinned_state_schemas_match_written(spark, tmp_path_factory,
-                                            bucketed):
+                                            compacted):
     """Every state read passes a pinned schema instead of inferring one
     (no schema-inference job). Each pinned schema must equal what a fresh
-    fold writes, in the flat and the bucketed (bh/fb) layouts."""
+    fold writes, and what compaction writes into its merged base, and
+    every partition is flat (no hive subdirectory)."""
     from pyspark.sql.types import _parse_datatype_string
 
     from dedup_spark import streaming as st
 
-    cfg = (DedupConfig(state_buckets=8, state_bucket_min_rows=0)
-           if bucketed else CFG)
     corpus = corpus_df(spark, 50, seed=59).cache()
     state = str(tmp_path_factory.mktemp("state_schema"))
-    incremental_update(corpus.where("file_id < 30"), state, cfg)
-    incremental_update(corpus.where("file_id >= 30"), state, cfg)
+    incremental_update(corpus.where("file_id < 30"), state, CFG)
+    incremental_update(corpus.where("file_id >= 30"), state, CFG)
+    if compacted:
+        assert compact_state(spark, state)["merged_batches"] == 2
     assert set(st.STATE_SCHEMAS) == {
         "signatures", "repsigs", "members", "groups", "bands", "edges"}
-    layouts = set()
     for table, ddl in st.STATE_SCHEMAS.items():
-        part = os.path.join(state, table, "batch_id=1")
-        inferred = st._drop_layout_cols(spark.read.parquet(part)).schema
-        assert inferred == _parse_datatype_string(ddl), table
-        layouts |= {n.split("=")[0][:2] for n in os.listdir(part)
-                    if "=" in n}
-        # the pinned reader sees the same rows as the inferring one
-        pinned = st._drop_layout_cols(st._read_state(spark, table, part))
-        assert pinned.count() == spark.read.parquet(part).count()
-    assert layouts == ({"bh", "fb"} if bucketed else set())
+        parts = sorted(os.listdir(os.path.join(state, table)))
+        assert parts == (["batch_id=1"] if compacted and table != "signatures"
+                         else ["batch_id=0", "batch_id=1"]), (table, parts)
+        for name in parts:
+            part = os.path.join(state, table, name)
+            assert not [n for n in os.listdir(part) if "=" in n], part
+            inferred = spark.read.parquet(part).schema
+            assert inferred == _parse_datatype_string(ddl), (table, name)
+            # the pinned reader sees the same rows as the inferring one
+            pinned = st._read_state(spark, table, part)
+            assert pinned.count() == spark.read.parquet(part).count()
 
 
 def _group_jobs(spark, group: str) -> int:
