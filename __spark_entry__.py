@@ -510,10 +510,10 @@ def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew ladder (operators/lsh.py salted_pairs — VERDICT r3 #4): buckets
     ≤ 1,000 pair directly in-partition, up to 10,000 via salted blocks
     with ≤ ~2,000 members per task, and only true mega-buckets beyond
-    that are dropped (pipeline/CLI runs surface those through the ladder's
-    metrics frame; none exist at driver SFs). No trailing orderBy — the
-    driver's value hash is order-insensitive, and a global sort of the
-    pair set is a wasted exchange at scale."""
+    that are dropped (pipeline/CLI runs count those with
+    lsh.dropped_bucket_aggs; none exist at driver SFs). No trailing
+    orderBy — the driver's value hash is order-insensitive, and a global
+    sort of the pair set is a wasted exchange at scale."""
     from dedup_spark.operators.groups import (
         expand_member_pairs, within_group_pairs,
     )

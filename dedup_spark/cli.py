@@ -16,7 +16,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
+
+# the dropped-bucket counters each command's JSON line carries
+_DROPPED = ("dropped_buckets", "dropped_rows", "max_bucket_size")
 
 
 def _corpus(spark, path: str, content_col: str, id_col: str):
@@ -76,8 +80,10 @@ def main(argv=None):
         n_files = corpus.count()
         n_edges = res["edges"].where("verified").count()
         n_clusters = res["clusters"].select("cluster_id").distinct().count()
+        dropped = res["candidate_metrics"].first()
         print(json.dumps({"files": n_files, "verified_edges": n_edges,
-                          "clusters": n_clusters, "workdir": args.workdir}))
+                          "clusters": n_clusters, "workdir": args.workdir,
+                          **{k: dropped[k] for k in _DROPPED}}))
     elif args.cmd == "incremental":
         from .streaming import current_clusters, incremental_update
 
@@ -85,9 +91,13 @@ def main(argv=None):
         incremental_update(new, args.state, DedupConfig(),
                            content_col=args.content_col, id_col=args.id_col)
         cl = current_clusters(spark, args.state)
+        # the fold's own record of this batch: no job
+        with open(os.path.join(args.state, "metrics.jsonl")) as f:
+            last = json.loads(f.readlines()[-1])
         print(json.dumps({
             "files_in_state": cl.count(),
             "clusters": cl.select("cluster_id").distinct().count(),
+            **{k: last[k] for k in _DROPPED},
         }))
     elif args.cmd == "report":
         from .operators.cluster import cluster_sizes

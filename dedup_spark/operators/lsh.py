@@ -20,10 +20,15 @@ Plan shape (all relational):
           ever buffers more than ~max_bucket members per side.
           Recall-neutral — every member pair lands in exactly one block
           pair.
-        s > max_bucket·salt     → dropped WITH LOGGED METRICS (true
-          boilerplate mega-buckets: quadratic pair-gen is never the right
-          answer there at any parallelism)
+        s > max_bucket·salt     → dropped and COUNTED (true boilerplate
+          mega-buckets: quadratic pair-gen is never the right answer
+          there at any parallelism)
     → distinct pairs
+
+The drop is never silent: ``dropped_bucket_aggs`` is the one definition of
+its counters, read as ``run_pipeline``'s ``candidate_metrics``
+(``dropped_bucket_metrics``) and observed by the incremental fold on its
+band universe (``metrics.jsonl``). The ladder itself emits pairs only.
 
 The window count buffers each bucket group in-partition
 (ExternalAppendOnlyUnsafeRowArray — spills, never OOMs); the merge join
@@ -34,7 +39,7 @@ buffers one ≤max_bucket block per key (same spillable array). At
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
@@ -62,30 +67,33 @@ def band_buckets(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def bucket_stats(buckets: DataFrame) -> DataFrame:
-    """Bucket-size distribution — the skew metric table."""
-    return (
-        buckets.groupBy("band_id", "band_hash")
-        .agg(F.count("*").alias("bucket_size"))
-    )
+def dropped_bucket_aggs(salt_cap: int) -> list[Column]:
+    """The dropped-bucket counters as aggregates over rows that carry
+    their bucket's ``bucket_size``: rows of buckets larger than
+    ``salt_cap``, those buckets (each of s dropped rows adds 1/s, so no
+    sort or distinct is needed) and the largest of them. All three read 0
+    when nothing is dropped."""
+    size = F.col("bucket_size")
+    dropped = size > salt_cap
+    return [
+        F.round(F.coalesce(F.sum(F.when(dropped, 1.0 / size)), F.lit(0.0)))
+        .cast("long").alias("dropped_buckets"),
+        F.count(F.when(dropped, 1)).alias("dropped_rows"),
+        F.coalesce(F.max(F.when(dropped, size)), F.lit(0)).alias(
+            "max_bucket_size"),
+    ]
 
 
 def dropped_bucket_metrics(signatures: DataFrame,
                            cfg: DedupConfig) -> DataFrame:
-    """The candidate ladder's dropped-bucket accounting as a standalone
-    LAZY one-row frame (dropped_buckets, dropped_rows, max_bucket_size) —
-    ``run_pipeline`` returns it as ``candidate_metrics`` (planned on first
-    read) so batch runs surface the capped-bucket regime the same way the
-    incremental fold's metrics.jsonl does; it costs a job only when
-    collected."""
-    salt_cap = cfg.max_bucket * max(1, cfg.salt)
-    return bucket_stats(band_buckets(signatures, cfg)).where(
-        F.col("bucket_size") > salt_cap
-    ).agg(
-        F.count("*").alias("dropped_buckets"),
-        F.coalesce(F.sum("bucket_size"), F.lit(0)).alias("dropped_rows"),
-        F.coalesce(F.max("bucket_size"), F.lit(0)).alias("max_bucket_size"),
-    )
+    """The candidate ladder's dropped-bucket accounting as a LAZY one-row
+    frame (``dropped_bucket_aggs`` over the band buckets, sized by a
+    window count). ``run_pipeline`` returns it as ``candidate_metrics``,
+    planned on first read; it costs a job only when collected."""
+    w = Window.partitionBy("band_id", "band_hash")
+    return band_buckets(signatures, cfg).select(
+        F.count(F.lit(1)).over(w).alias("bucket_size")
+    ).agg(*dropped_bucket_aggs(cfg.max_bucket * max(1, cfg.salt)))
 
 
 # Below this many band rows the mega-bucket PRE-FILTER is cost-gated
@@ -98,8 +106,8 @@ def dropped_bucket_metrics(signatures: DataFrame,
 PREFILTER_MIN_BAND_ROWS = 5_000_000
 
 
-def candidate_pairs(signatures: DataFrame, cfg: DedupConfig, n_rows: int,
-                    return_metrics: bool = False):
+def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
+                    n_rows: int) -> DataFrame:
     """Distinct (src, dst) candidate pairs from banded MinHash.
 
     ``band_buckets`` explodes each signature into one (band_id,
@@ -115,9 +123,9 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig, n_rows: int,
     several bands found. Buckets beyond ``max_bucket * salt`` are
     excluded — by a mega-bucket pre-filter (a groupBy count and a
     broadcast anti-join ahead of the window) or, with it gated off, by a
-    cap inside the window pass — and surfaced in the metrics frame:
-    explicit, logged skew handling instead of a silent quadratic
-    blow-up.
+    cap inside the window pass — and counted by ``dropped_bucket_metrics``
+    over the same signatures: explicit skew handling instead of a silent
+    quadratic blow-up.
 
     ``n_rows``: measured signature-row count (the pipeline's cache barrier
     returns it for free). Small measured inputs drop the mega-bucket
@@ -127,16 +135,15 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig, n_rows: int,
     prefilter = n_rows * cfg.bands > PREFILTER_MIN_BAND_ROWS
     return salted_pairs(
         band_buckets(signatures, cfg), cfg.max_bucket, cfg.salt,
-        return_metrics=return_metrics, prefilter=prefilter,
+        prefilter=prefilter,
     )
 
 
 def salted_pairs(buckets: DataFrame, max_b: int, salt: int | None,
                  key_cols: tuple[str, ...] = ("band_id", "band_hash"),
                  id_col: str = "file_id",
-                 return_metrics: bool = False,
                  dedupe: bool = True,
-                 prefilter: bool = True):
+                 prefilter: bool = True) -> DataFrame:
     """The skew-laddered pair generator over arbitrary bucket frames.
 
     ``buckets`` holds one row per (bucket key, member id); key columns and
@@ -146,7 +153,8 @@ def salted_pairs(buckets: DataFrame, max_b: int, salt: int | None,
     implementation of the ladder:
       size ≤ max_b        → direct in-partition pair-gen
       size ≤ max_b·salt   → salted blocks, ≤ ~2·max_b members per task
-      size > max_b·salt   → dropped, surfaced in the metrics frame
+      size > max_b·salt   → dropped; the ladder returns pairs only, and
+                            ``dropped_bucket_aggs`` counts the drop
 
     ``salt=None`` runs the ladder UNCAPPED: nothing is ever dropped, but
     every bucket still flows through the salted-block scheme, so no single
@@ -160,9 +168,8 @@ def salted_pairs(buckets: DataFrame, max_b: int, salt: int | None,
     """
     keys = list(key_cols)
     cap = None
-    if salt is None:
-        cold, hot = buckets, None
-    else:
+    cold = buckets
+    if salt is not None:
         salt_cap = max_b * max(1, salt)
         if prefilter:
             # mega-bucket pre-filter (ADVICE r2): the window pass buffers
@@ -177,11 +184,9 @@ def salted_pairs(buckets: DataFrame, max_b: int, salt: int | None,
             hot = (
                 buckets.groupBy(*keys)
                 .agg(F.count("*").alias("bucket_size"))
-                .where(F.col("bucket_size") > salt_cap)
+                .where(F.col("bucket_size") > salt_cap).select(*keys)
             )
-            cold = buckets.join(
-                F.broadcast(hot.select(*keys)), keys, "left_anti"
-            )
+            cold = buckets.join(F.broadcast(hot), keys, "left_anti")
         else:
             # cost-gated OFF for measured-small inputs (candidate_pairs):
             # the cap moves inside the window pass — same buckets dropped,
@@ -189,8 +194,6 @@ def salted_pairs(buckets: DataFrame, max_b: int, salt: int | None,
             # dedicated job + serialized broadcast future. Worst case a
             # task buffers every band row of the (small) input once,
             # linearly, before the cap filter drops the bucket.
-            hot = None
-            cold = buckets
             cap = salt_cap
     pairs = _block_pairs(cold, max_b, keys, id_col, cap=cap)
     if dedupe:
@@ -202,34 +205,7 @@ def salted_pairs(buckets: DataFrame, max_b: int, salt: int | None,
         # starves every downstream stage (guide §2.5).
         p = pairs.sparkSession.sparkContext.defaultParallelism * 2
         pairs = pairs.repartition(p, "src", "dst").dropDuplicates()
-    if not return_metrics:
-        return pairs
-    # the dropped-bucket metrics ARE the pre-filter's hot-key table — no
-    # extra pass over the bucket frame (uncapped mode drops nothing by
-    # definition and reports literal zeros)
-    if salt is not None and hot is None:
-        # capped but pre-filter gated off: same accounting, rebuilt lazily
-        # from the bucket frame (costs a job only if actually collected)
-        hot = (
-            buckets.groupBy(*keys)
-            .agg(F.count("*").alias("bucket_size"))
-            .where(F.col("bucket_size") > cap)
-        )
-    if hot is None:
-        spark = buckets.sparkSession
-        dropped = spark.range(1).select(
-            F.lit(0).alias("dropped_buckets"),
-            F.lit(0).alias("dropped_rows"),
-            F.lit(0).alias("max_bucket_size"),
-        )
-    else:
-        dropped = hot.agg(
-            F.count("*").alias("dropped_buckets"),
-            F.coalesce(F.sum("bucket_size"), F.lit(0)).alias("dropped_rows"),
-            F.coalesce(F.max("bucket_size"), F.lit(0)).alias(
-                "max_bucket_size"),
-        )
-    return pairs, dropped
+    return pairs
 
 
 def _block_sides(cold: DataFrame, max_b: int, keys: list[str],

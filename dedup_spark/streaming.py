@@ -34,6 +34,8 @@ corpus, so committed batch partitions are immutable):
                            is never materialized as state)
   metrics.jsonl            per-batch lineage: rows, pairs, dropped
                            buckets, state-proportionality counters
+  _config.json             ``config_fingerprint`` of the first fold; a
+                           fold under another config is refused
 
 Every partition is FLAT: parquet files directly in the batch dir, never
 hive subdirectories. State written in the retired bucketed bands/repsigs
@@ -132,10 +134,10 @@ from .config import DedupConfig
 from .operators.groups import (
     expand_group_edges, group_keys, group_star_pairs, group_window,
 )
-from .operators.lsh import band_buckets
+from .operators.lsh import band_buckets, dropped_bucket_aggs
 from .operators.signatures import SIG_SCHEMA, compute_signatures
 from .operators.verify import verify_pairs
-from .pipeline import Frames
+from .pipeline import Frames, config_fingerprint
 
 # One pinned schema per state table (data columns only; the hive
 # partition column batch_id is still discovered from the directory names).
@@ -222,6 +224,7 @@ def incremental_update(new_corpus: DataFrame, state_dir: str,
     sig_path = os.path.join(state_dir, "signatures")
     edge_path = os.path.join(state_dir, "edges")
 
+    _pin_config(state_dir, cfg)
     if os.path.isdir(state_dir):
         _reject_bucketed_layout(state_dir)
         _recover_compaction(state_dir)  # finish any interrupted compaction
@@ -307,6 +310,25 @@ def _prior_parts(state_dir: str, table: str, batch_id: int) -> list[str]:
         for b in _batch_dirs(os.path.join(state_dir, table))
         if b < batch_id
     ]
+
+
+def _pin_config(state_dir: str, cfg: DedupConfig) -> None:
+    """Pin the state to its first fold's config: band hashes of another
+    config never match the stored ones, so recall would be lost silently.
+    Runs before any job or write, stranded-batch re-folds included."""
+    path = os.path.join(state_dir, "_config.json")
+    fp = config_fingerprint(cfg)
+    try:
+        with open(path) as f:
+            stored = f.read()
+    except FileNotFoundError:
+        os.makedirs(state_dir, exist_ok=True)
+        with open(path, "w") as f:
+            f.write(fp)
+        return
+    if stored != fp:
+        raise RuntimeError(f"state {state_dir} was folded under config "
+                           f"{stored}, not {fp}; use a fresh state_dir")
 
 
 def _reject_bucketed_layout(state_dir: str) -> None:
@@ -524,37 +546,26 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     # bucket sizes by ONE window over the universe (a single exchange on
     # the bucket key), persisted: the pair join, the endpoint set and any
     # gate probe below all read it, and would otherwise each re-scan every
-    # prior bands partition and re-run the semi-join. The skew statistics
-    # are observed on the rows flowing INTO the cache: building a cached
-    # partition consumes every row, so the counters are exact (unless a
-    # lost block is recomputed — the observe() caveat noted at the pair
-    # count below), and they ride the first action that scans the cache
-    # (normally the edges commit) — no stats job of its own. try/finally:
-    # a verify failure mid-fold (e.g. during stranded-batch recovery)
-    # must not leak the cached frame for the session lifetime.
-    in_bucket = Window.partitionBy("band_id", "band_hash").orderBy("file_id")
-    dropped = F.col("bucket_size") > salt_cap
-    bucket_metrics = [
-        F.count(F.lit(1)).alias("universe_rows"),
-        F.count(F.when(dropped, 1)).alias("dropped_rows"),
-        F.count(F.when(dropped & (F.col("bucket_rank") == 1), 1)).alias(
-            "dropped_buckets"),
-        # max over DROPPED buckets only — same semantics as the batch
-        # path's dropped_bucket_metrics frame (0 when nothing dropped)
-        F.coalesce(F.max(F.when(dropped, F.col("bucket_size"))),
-                   F.lit(0)).alias("max_bucket_size"),
-    ]
+    # prior bands partition and re-run the semi-join. The dropped-bucket
+    # counters (lsh.dropped_bucket_aggs, the batch path's definition) are
+    # observed on the rows flowing INTO the cache: building a cached
+    # partition consumes every row, so they are exact (unless a lost block
+    # is recomputed — the observe() caveat noted at the pair count below),
+    # and they ride the first action that scans the cache (normally the
+    # edges commit) — no stats job of its own. try/finally: a verify
+    # failure mid-fold (e.g. during stranded-batch recovery) must not leak
+    # the cached frame for the session lifetime.
+    bucket_metrics = [F.count(F.lit(1)).alias("universe_rows"),
+                      *dropped_bucket_aggs(salt_cap)]
     bucket_obs = Observation(f"fold_buckets_{batch_id}")
     universe = universe.select(
         "band_id", "band_hash", "file_id",
-        F.count(F.lit(1)).over(in_bucket.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing,
-        )).alias("bucket_size"),
-        F.row_number().over(in_bucket).alias("bucket_rank"),
+        F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_hash"))
+        .alias("bucket_size"),
     ).observe(bucket_obs, *bucket_metrics).persist(
         StorageLevel.MEMORY_AND_DISK_DESER)
     try:
-        ok_b = universe.where(~dropped).select(
+        ok_b = universe.where(F.col("bucket_size") <= salt_cap).select(
             "band_id", "band_hash", "file_id")
         new_b = new_bands.select(
             "band_id", "band_hash", F.col("file_id").alias("new_id")
@@ -606,8 +617,8 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
         ).where("verified")
 
         # 7. commit edges (the batch marker), then the lineage/skew
-        # metrics — same dropped-bucket surface as operators/lsh.py
-        # candidate_pairs, plus the state-proportionality counters the
+        # metrics — the dropped-bucket counters of run_pipeline's
+        # candidate_metrics, plus the state-proportionality counters the
         # append-only design is accountable to (tests assert these stay
         # ∝ batch, not ∝ state). Every index partition (groups and bands
         # included — join the concurrent writers, re-raising their

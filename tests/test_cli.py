@@ -24,6 +24,11 @@ def keep_session(spark, monkeypatch):
     return spark
 
 
+def _assert_dropped_counters(out: dict) -> None:
+    for k in ("dropped_buckets", "dropped_rows", "max_bucket_size"):
+        assert isinstance(out[k], int) and out[k] >= 0, (k, out)
+
+
 def test_cli_run_and_report(keep_session, tmp_path, capsys):
     spark = keep_session
     corpus = corpus_df(spark, 60, seed=37)
@@ -37,6 +42,7 @@ def test_cli_run_and_report(keep_session, tmp_path, capsys):
     assert out["files"] == 60
     assert out["clusters"] <= 60 and out["clusters"] > 0
     assert out["verified_edges"] >= 0
+    _assert_dropped_counters(out)
     assert os.path.exists(os.path.join(workdir, "clusters", "_SUCCESS"))
 
     rc = cli.main(["report", "--workdir", workdir, "--top", "5"])
@@ -61,6 +67,7 @@ def test_cli_incremental(keep_session, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["files_in_state"] == 40
     assert 0 < out["clusters"] <= 40
+    _assert_dropped_counters(out)
     metrics = [json.loads(l)
                for l in open(os.path.join(state, "metrics.jsonl"))]
     assert [m["batch_id"] for m in metrics] == [0, 1]

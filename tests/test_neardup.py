@@ -92,16 +92,16 @@ def test_ground_truth_sanity(corpus, result, oracle):
 def test_skew_guard_metrics(spark, corpus):
     """Hot band buckets above the salt ceiling are dropped WITH metrics, and
     the pipeline still returns (no silent failure on a pathological corpus)."""
-    from dedup_spark.operators.lsh import candidate_pairs
+    from dedup_spark.operators.lsh import (
+        candidate_pairs, dropped_bucket_metrics,
+    )
     from dedup_spark.operators.signatures import compute_signatures
 
     tiny = DedupConfig(max_bucket=4, salt=1)  # salt=1 → drop above max_bucket
     sigs = compute_signatures(corpus, tiny)
-    pairs, metrics = candidate_pairs(sigs, tiny, n_rows=sigs.count(),
-                                     return_metrics=True)
-    m = metrics.collect()[0]
+    m = dropped_bucket_metrics(sigs, tiny).collect()[0]
     assert m["dropped_buckets"] > 0  # the giant injected cluster trips the cap
-    assert pairs.count() >= 0
+    assert candidate_pairs(sigs, tiny, n_rows=sigs.count()).count() >= 0
 
 
 def test_salted_pairs_recall_neutral(spark, corpus):
@@ -131,7 +131,9 @@ def test_salted_pairs_generic_keys(spark):
     must enumerate exactly the brute-force pair set, salting included."""
     from itertools import combinations
 
-    from dedup_spark.operators.lsh import salted_pairs
+    from pyspark.sql import Window
+
+    from dedup_spark.operators.lsh import dropped_bucket_aggs, salted_pairs
 
     rows = [("b0", i) for i in range(7)] + \
            [("b1", i) for i in range(5, 11)] + [("b2", 99)]
@@ -146,15 +148,15 @@ def test_salted_pairs_generic_keys(spark):
     ).collect()}
     assert got == want
     # drop ladder: salt_cap=6 kills the 7-member bucket, keeps the 6
-    pairs, dropped = salted_pairs(
-        buckets, 3, 2, key_cols=("bkt",), id_col="doc_id",
-        return_metrics=True,
-    )
+    pairs = salted_pairs(buckets, 3, 2, key_cols=("bkt",), id_col="doc_id")
     ids1 = sorted(d for k, d in rows if k == "b1")
     assert {(r["src"], r["dst"]) for r in pairs.collect()} == {
         tuple(sorted(p)) for p in combinations(ids1, 2)
     }
-    d = dropped.collect()[0]
+    # the one counter definition over the same buckets, window-sized
+    sized = buckets.select(
+        F.count(F.lit(1)).over(Window.partitionBy("bkt")).alias("bucket_size"))
+    d = sized.agg(*dropped_bucket_aggs(6)).collect()[0]
     assert d["dropped_buckets"] == 1 and d["dropped_rows"] == 7
 
 
@@ -162,26 +164,22 @@ def test_salted_pairs_prefilter_gate_equivalent(spark):
     """The mega-bucket pre-filter is a PLAN choice, not a semantics knob
     (round 5: cost-gated off for measured-small inputs to drop its
     dedicated job + broadcast future from the tail): with it on or off,
-    the pair set AND the dropped-bucket accounting must be identical —
-    the cap just moves inside the window pass."""
+    the pair set must be identical — the cap just moves inside the window
+    pass."""
     from dedup_spark.operators.lsh import salted_pairs
 
     rows = [("b0", i) for i in range(7)] + \
            [("b1", i) for i in range(5, 11)] + [("b2", 99)]
     buckets = spark.createDataFrame(rows, "bkt string, doc_id long")
     # max_b=3, salt=2 → salt_cap=6: b0 (7 members) dropped, b1 salted
-    on_pairs, on_drop = salted_pairs(
-        buckets, 3, 2, key_cols=("bkt",), id_col="doc_id",
-        return_metrics=True, prefilter=True,
+    on_pairs = salted_pairs(
+        buckets, 3, 2, key_cols=("bkt",), id_col="doc_id", prefilter=True,
     )
-    off_pairs, off_drop = salted_pairs(
-        buckets, 3, 2, key_cols=("bkt",), id_col="doc_id",
-        return_metrics=True, prefilter=False,
+    off_pairs = salted_pairs(
+        buckets, 3, 2, key_cols=("bkt",), id_col="doc_id", prefilter=False,
     )
     assert {(r["src"], r["dst"]) for r in on_pairs.collect()} == \
            {(r["src"], r["dst"]) for r in off_pairs.collect()}
-    assert on_drop.collect() == off_drop.collect()
-    assert off_drop.collect()[0]["dropped_buckets"] == 1
     # the no-pre-filter plan must not contain the broadcast anti-join
     assert "BroadcastExchange" not in off_pairs._jdf.queryExecution() \
         .executedPlan().toString()
@@ -221,13 +219,6 @@ def test_salted_pairs_uncapped_ladder(spark):
             .collect()
         ]
         assert max(sizes) <= 4 * 4, max(sizes)
-    # uncapped metrics surface reports literal zeros
-    _, dropped = salted_pairs(
-        buckets, 4, None, key_cols=("bkt",), id_col="doc_id",
-        return_metrics=True,
-    )
-    d = dropped.collect()[0]
-    assert d["dropped_buckets"] == 0 and d["dropped_rows"] == 0
 
 
 def test_within_group_pairs_bounded_tasks(spark, monkeypatch):
@@ -299,6 +290,35 @@ def test_capped_bucket_regime_e2e(spark, corpus, tmp_path_factory):
     # before a bucket crossed the cap — never fewer than the one-shot run
     assert inc >= capped
     assert inc <= uncapped
+
+
+def test_dropped_counters_batch_equal_fold(spark, corpus, tmp_path_factory):
+    """One counter definition (lsh.dropped_bucket_aggs): a one-batch fold
+    of the whole corpus writes the dropped-bucket counters run_pipeline
+    returns as candidate_metrics, and an input with no band rows (every
+    file empty) reads zero on both paths."""
+    import json
+
+    from dedup_spark.streaming import incremental_update
+
+    cfg = DedupConfig(max_bucket=2, salt=2)
+    keys = ("dropped_buckets", "dropped_rows", "max_bucket_size")
+
+    def both(df, name):
+        with run_pipeline(df, cfg) as res:
+            batch = res["candidate_metrics"].collect()[0].asDict()
+        state = str(tmp_path_factory.mktemp(name))
+        incremental_update(df, state, cfg)
+        with open(os.path.join(state, "metrics.jsonl")) as f:
+            fold = json.loads(f.readline())
+        return batch, {k: fold[k] for k in keys}
+
+    batch, fold = both(corpus, "state_counters")
+    assert batch == fold == dict(zip(keys, (43, 259, 10)))
+    empty = corpus.limit(20).withColumns({
+        "content": F.lit(""), "content_sha256": F.sha2(F.lit(""), 256)})
+    batch, fold = both(empty, "state_counters_empty")
+    assert batch == fold == dict.fromkeys(keys, 0)
 
 
 def test_result_plans_audits_lazily_and_releases(spark, corpus,

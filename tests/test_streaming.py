@@ -326,6 +326,19 @@ def test_bucketed_state_is_refused(spark, tmp_path_factory):
     assert _file_digests(state) == before
 
 
+def test_fold_under_other_config_is_refused(spark, tmp_path_factory):
+    """The first fold pins the state to its config: a later fold under
+    another banding would join band hashes that can never match the
+    stored ones, so it is refused before any job or write."""
+    corpus = corpus_df(spark, 60, seed=73).cache()
+    state = str(tmp_path_factory.mktemp("state_config"))
+    incremental_update(corpus.where("file_id < 30"), state, CFG)
+    with pytest.raises(RuntimeError, match="fresh state_dir"):
+        incremental_update(corpus.where("file_id >= 30"), state,
+                           DedupConfig(bands=16))
+    assert not os.path.exists(os.path.join(state, "signatures", "batch_id=1"))
+
+
 def test_concurrent_writer_failure_fails_fold(spark, tmp_path_factory,
                                               monkeypatch):
     """The group-delta and bands partitions commit on concurrent threads;

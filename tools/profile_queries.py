@@ -1,54 +1,97 @@
-"""Run declared queries with the Spark event log on; print per-query wall
-and the event-log path + per-query t0 epoch-ms so tools/stage_metrics.py
-can break a query into stages.
+"""Run declared SQL-surface queries with an uncompressed Spark event log on
+and print one JSON row per query run: its wall time plus the event-log
+totals of its window (jobs, stages, task run and CPU time, GC, shuffle,
+spill, driver-only gap), read with perfbench's event-log reader.
 
-Usage: SPARK_CONF_DIR=/tmp/spark_conf python tools/profile_queries.py \
-           --sf DIR query [query ...]
-(the conf dir's spark-defaults.conf must set spark.eventLog.enabled/.dir)
+Usage: python tools/profile_queries.py --sf DIR query [query ...]
+
+``--sf`` defaults to ``$SPARK_GRAFT_SF_DIR``; ``SPARK_GRAFT_CPUS`` sets the
+core count (default: all) and ``PROFILE_REPS`` repeats the query list,
+releasing the query caches between repetitions. The event log lives in a
+fresh temporary directory, removed on exit.
 """
 
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
+import shlex
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+
+def _event_log_conf(log_dir: str) -> None:
+    """Turn the event log on for the session started next, uncompressed
+    (no zstd reader is installed), as perfbench's traced run does."""
+    conf = {
+        "spark.ui.showConsoleProgress": "false",
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": "file://" + log_dir,
+        "spark.eventLog.compress": "false",
+    }
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        f"--conf {shlex.quote(f'{k}={v}')}" for k, v in conf.items()
+    ) + " pyspark-shell"
 
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
-    ap.add_argument("--sf", default="/root/testdata/sf1.0")
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
     args = ap.parse_args()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    os.environ.setdefault("SPARK_CONF_DIR", "/tmp/spark_conf")
-    os.makedirs("/tmp/spark_events", exist_ok=True)
+    if not args.sf:
+        ap.error("--sf (or SPARK_GRAFT_SF_DIR) is required")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+    log_dir = tempfile.mkdtemp(prefix="profile_queries_")
+    try:
+        _event_log_conf(log_dir)
+        spans = _run(args.queries, args.sf, cpus)
+        from perfbench import eventlog
 
+        log = eventlog.read(log_dir)
+        for span in spans:
+            w = eventlog.window(log, span)
+            row = {"query": span.name, **dataclasses.asdict(w),
+                   "driver_gap_s": w.driver_gap_s}
+            print(json.dumps({k: round(v, 3) if isinstance(v, float) else v
+                              for k, v in row.items()}))
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+
+
+def _run(names: list[str], sf_dir: str, cpus: int) -> list:
+    """Run each query once per repetition into a no-op sink; returns one
+    ``eventlog.Span`` per run, named ``query#rep``. Stopping the session
+    closes the event log."""
     from dedup_spark.session import get_spark
+    from perfbench.eventlog import Span
 
     spark = get_spark("profile", cores=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
 
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
-    marks = {}
+    spans = []
     for rep in range(int(os.environ.get("PROFILE_REPS", "1"))):
-      if rep:
-          entry_mod.release_caches()
-      for name in args.queries:
-        spark.sparkContext.setJobDescription(name)
-        t0 = int(time.time() * 1000)
-        df = qs[name](spark, args.sf)
-        df.write.format("noop").mode("overwrite").save()
-        marks[f"{name}#{rep}"] = {"t0_ms": t0, "wall": round(time.time() * 1000 - t0) / 1000}
+        if rep:
+            entry_mod.release_caches()
+        for name in names:
+            spark.sparkContext.setJobDescription(name)
+            t0 = time.time() * 1000.0
+            qs[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite").save()
+            spans.append(Span(f"{name}#{rep}", t0, time.time() * 1000.0))
     entry_mod.release_caches()
     spark.stop()
-    print(json.dumps({"log": f"/tmp/spark_events/{app_id}", "marks": marks}))
+    return spans
 
 
 if __name__ == "__main__":
