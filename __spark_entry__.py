@@ -888,7 +888,9 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build_cc():
         edges = q_ngram_jaccard_pairs(spark, sf_dir).select("src", "dst")
-        return connected_components(edges).select(
+        # the pair cache's barrier count bounds the CC input: no probe
+        n_edges = _FRAME_ROWS[(sf_dir, "ngram_pairs")]
+        return connected_components(edges, max_edges=n_edges).select(
             F.col("file_id").alias("doc_id"), "cluster_id"
         )
 

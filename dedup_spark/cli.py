@@ -34,6 +34,14 @@ def _corpus(spark, path: str, content_col: str, id_col: str):
     return df
 
 
+def _files_and_clusters(clusters) -> tuple[int, int]:
+    """(files, clusters) in one job: ``clusters`` has one row per file."""
+    from pyspark.sql import functions as F
+
+    return tuple(clusters.agg(F.count(F.lit(1)),
+                              F.countDistinct("cluster_id")).first())
+
+
 def main(argv=None):
     p = argparse.ArgumentParser(prog="dedup_spark")
     p.add_argument("--cores", type=int, default=None)
@@ -77,9 +85,8 @@ def main(argv=None):
         res = run_pipeline(corpus, cfg, workdir=args.workdir,
                            resume=args.resume, content_col=args.content_col,
                            id_col=args.id_col)
-        n_files = corpus.count()
         n_edges = res["edges"].where("verified").count()
-        n_clusters = res["clusters"].select("cluster_id").distinct().count()
+        n_files, n_clusters = _files_and_clusters(res["clusters"])
         dropped = res["candidate_metrics"].first()
         print(json.dumps({"files": n_files, "verified_edges": n_edges,
                           "clusters": n_clusters, "workdir": args.workdir,
@@ -94,9 +101,10 @@ def main(argv=None):
         # the fold's own record of this batch: no job
         with open(os.path.join(args.state, "metrics.jsonl")) as f:
             last = json.loads(f.readlines()[-1])
+        n_files, n_clusters = _files_and_clusters(cl)
         print(json.dumps({
-            "files_in_state": cl.count(),
-            "clusters": cl.select("cluster_id").distinct().count(),
+            "files_in_state": n_files,
+            "clusters": n_clusters,
             **{k: last[k] for k in _DROPPED},
         }))
     elif args.cmd == "report":

@@ -78,54 +78,33 @@ def connected_components(edges: DataFrame, edges_canonical: bool = False,
 
     ``edges_canonical``: caller guarantees (src < dst, no self-loops, no
     duplicates) — skips the canonicalization shuffle (one exchange + agg
-    over the full edge set). The pipeline's CC input qualifies by
-    construction: group star pairs are (rep=group-min, member) and
-    verified rep edges are least/greatest-ordered distinct pairs, and the
-    two sets are disjoint (same-group vs cross-group endpoints).
+    over the full edge set) on the distributed path. The pipeline's
+    verified rep edges qualify: least/greatest-ordered distinct pairs.
 
-    ``max_edges``: a caller-measured upper bound on the input's rows (the
-    streaming serve path sums parquet footer rows). A bound at or under
-    ``DRIVER_FINALIZE_EDGES`` proves the graph driver-sized, so the edges
-    are collected once as they are, with no canonicalization and no
-    persist + count probe; ``None`` (the batch path) keeps the probe.
+    ``max_edges``: the caller's measured upper bound on the input's rows
+    (a count of the persisted edges, parquet footer rows, a cache
+    barrier's count); ``None`` costs one ``count()`` of the raw edges. At
+    or under ``DRIVER_FINALIZE_EDGES`` the edges are collected once as
+    they are: the driver labeling ignores duplicates, self-loops and
+    orientation.
     """
-    from pyspark import StorageLevel
-
     spark = edges.sparkSession
     raw = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    if max_edges is not None and max_edges <= DRIVER_FINALIZE_EDGES:
-        # the driver labeling is indifferent to duplicates, self-loops
-        # and orientation, so the raw edges skip the canonicalizing
-        # shuffle as well as the probe
+    if max_edges is None:
+        max_edges = raw.count()
+    if max_edges <= DRIVER_FINALIZE_EDGES:
         return _driver_cc(spark, raw)
-    # persist BEFORE the probe: on the big-graph branch the probe's partial
-    # compute is reused by the localCheckpoint instead of re-deriving the
-    # whole canon lineage (which may be an expensive pair-gen pipeline)
-    canon = (raw if edges_canonical else _canon(edges)).persist(
-        StorageLevel.DISK_ONLY)
-    # Fast path: small graphs skip the distributed rounds entirely.
-    # Size test = count(), NOT limit(N+1).collect(): CollectLimit scale-up
-    # runs a ladder of incremental jobs AND short-circuits partition
-    # iterators, so the persist is left partially populated and every rung
-    # re-derives upstream (event-log measured: 6 jobs, ~4.4 s of re-scan
-    # at 8 cores on a 66k-edge graph). count() is one clean job that fully
-    # materializes the cache; the Arrow collect then reads cache only.
-    n_edges = canon.count()
-    if n_edges <= DRIVER_FINALIZE_EDGES:
-        try:
-            return _driver_cc(spark, canon)
-        finally:
-            canon.unpersist()
 
-    # narrow the per-round shuffles ONLY NOW: canon above is materialized
-    # at full session width (the override used to sit on the whole lineage,
-    # throttling the upstream pair-gen of the edge set to n_partitions —
-    # measured 8-task stages carrying ~50 s of 32-core work at sf1.0)
     n_partitions = max(8, spark.sparkContext.defaultParallelism // 4)
+    # checkpoint BEFORE narrowing the shuffle width, so the canon lineage
+    # (maybe a pair-gen pipeline) runs at full width: narrowed, it ran in
+    # 8-task stages carrying ~50 s of 32-core work at sf1.0
+    canon = raw if edges_canonical else _canon(edges)
+    e = canon.repartition(n_partitions).localCheckpoint(eager=True)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
     try:
-        return _cc_rounds(canon, n_partitions)
+        return _cc_rounds(e)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
@@ -190,11 +169,8 @@ def _driver_cc(spark, uv: DataFrame) -> DataFrame:
     return _assign_df(spark, _assign_from_edges(pdf[["u", "v"]].to_numpy()))
 
 
-def _cc_rounds(canon: DataFrame, n_partitions: int) -> DataFrame:
-    spark = canon.sparkSession
-    e = canon.repartition(n_partitions).localCheckpoint(eager=True)
-    canon.unpersist()
-
+def _cc_rounds(e: DataFrame) -> DataFrame:
+    spark = e.sparkSession
     # star rounds keep edges on ORIGINAL vertex ids (no supernode
     # contraction), so at any point the current edge set has exactly the
     # original components — both the driver finalize and the converged
@@ -245,17 +221,18 @@ def _cc_rounds(canon: DataFrame, n_partitions: int) -> DataFrame:
 def cluster_assignments(corpus_ids: DataFrame, edges: DataFrame,
                         edges_canonical: bool = False,
                         max_edges: int | None = None) -> DataFrame:
-    """All files → cluster id; files with no verified edge are singleton
-    clusters (cluster_id = own file_id). ``max_edges``: see
-    ``connected_components``."""
+    """All files → cluster id: each file takes the component label of its
+    ``rep`` (a file is its own rep without a ``rep`` column), and a rep on
+    no edge labels itself. ``max_edges``: see ``connected_components``."""
     cc = connected_components(edges, edges_canonical=edges_canonical,
                               max_edges=max_edges)
+    rep = F.col("rep") if "rep" in corpus_ids.columns else F.col("file_id")
     return (
-        corpus_ids.select("file_id")
-        .join(cc, "file_id", "left")
+        corpus_ids.select("file_id", rep.alias("rep"))
+        .join(cc.withColumnRenamed("file_id", "rep"), "rep", "left")
         .select(
             "file_id",
-            F.coalesce("cluster_id", F.col("file_id")).alias("cluster_id"),
+            F.coalesce("cluster_id", F.col("rep")).alias("cluster_id"),
         )
     )
 

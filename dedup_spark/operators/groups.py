@@ -120,8 +120,10 @@ def with_groups(signatures: DataFrame) -> DataFrame:
 
 
 def group_star_pairs(groups: DataFrame) -> DataFrame:
-    """Linear (rep, member) spanning edges — all a cluster stage needs to
-    connect each group internally."""
+    """Linear (rep, member) spanning edges — all a member-level cluster
+    stage needs to connect each group internally. Callers: the serve path
+    (``streaming.current_clusters``) and perfbench's traced layer; the
+    batch pipeline clusters the rep graph and needs none."""
     return (
         groups.where(F.col("file_id") != F.col("rep"))
         .select(F.col("rep").alias("src"), F.col("file_id").alias("dst"))

@@ -1,7 +1,9 @@
 """End-to-end near-dup pipeline with checkpoint/resume + per-stage metrics.
 
 Stage DAG (north_star):
-  corpus → signatures → candidates (LSH) → edges (verify) → clusters (CC)
+  corpus → signatures + groups → candidates (LSH over group reps) →
+  edges_rep (verify) → clusters (CC over the verified rep edges; each
+  member takes its rep's label)
 
 Every stage can checkpoint to ``workdir/<stage>`` (parquet + _SUCCESS);
 ``resume=True`` skips any stage whose checkpoint exists — the reference's
@@ -260,9 +262,7 @@ def run_pipeline(
         persisted.append(df.persist(StorageLevel.MEMORY_AND_DISK_DESER))
         return persisted[-1]
 
-    from .operators.groups import (
-        expand_group_edges, group_star_pairs, with_groups,
-    )
+    from .operators.groups import expand_group_edges, with_groups
 
     _GROUP_COLS = ["g1", "g2", "rep", "group_size"]
 
@@ -329,30 +329,31 @@ def run_pipeline(
                 corpus, cfg, content_col, id_col,
             ),
         )
-        cluster_input = edges_out.where("verified")
+        cluster_edges = edges_out.where("verified")
+        cluster_ids = groups.select("file_id")
     else:
-        # quadratic pair surface for audits, planned on first read;
-        # clustering uses the LINEAR compact set (group spanning stars +
-        # verified rep pairs) — identical components by construction.
+        # quadratic pair surface for audits, planned on first read; CC
+        # labels the reps over the verified rep edges and each member takes
+        # its rep's label (rep = group minimum: same ids as member-level CC)
         def edges_out():
             return expand_group_edges(edges_rep, groups, n_sigs)
-        cluster_input = group_star_pairs(groups).unionByName(
-            edges_rep.where("verified").select("src", "dst")
-        )
+        cluster_edges = edges_rep.where("verified")
+        cluster_ids = groups.select("file_id", "rep")
+    cluster_edges = cluster_edges.select("src", "dst")
 
     # cluster over the ids of the staged groups frame (one row per corpus
     # row: with_groups keeps zero-shingle files under unique group keys)
     # — re-scanning the corpus parquet for one column costs a listing +
-    # footer + scan pass per run. Star pairs (rep=group-min < member) and
-    # verified rep edges (least/greatest distinct, cross-group) are
-    # canonical and disjoint by construction, so CC may skip its
-    # canonicalization exchange; the LCS-gated member-level set is not
-    # proven so and keeps the default.
+    # footer + scan pass per run. The CC bound is the edges' count, which
+    # populates their persist (or reads the checkpoint) for the driver
+    # collect. Verified rep edges are canonical, so CC may skip its
+    # canonicalization; the LCS-gated member-level set keeps the default.
     clusters = stage(
         "clusters",
         lambda: cluster_assignments(
-            groups.select("file_id"), cluster_input,
-            edges_canonical=cfg.min_lcs <= 0
+            cluster_ids, cluster_edges,
+            edges_canonical=cfg.min_lcs <= 0,
+            max_edges=cluster_edges.count(),
         ),
     )
     return Frames({

@@ -853,7 +853,14 @@ def current_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     (derived from the narrow membership state — never stored) + verified
     rep edges. The wide signature table is touched only for the id
     universe, a single-column parquet read (zero-shingle files have no
-    members row but still get a singleton cluster)."""
+    members row but still get a singleton cluster).
+
+    Unlike ``run_pipeline``, serve keeps star pairs and a member-level
+    CC: stored edge endpoints are pinned at birth, not current reps, so
+    the rep graph would first map them through the two joins of
+    ``expanded_edges``. Measured on a 640-file state of three folds (4
+    cores), that took serve plus one files/clusters aggregate from 6 to
+    10 Spark jobs."""
     from .operators.cluster import cluster_assignments
 
     _recover_compaction(state_dir)  # never read a half-compacted layout
@@ -867,7 +874,7 @@ def current_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     )
     # footer-measured bound on the CC input: one star edge per non-rep
     # member plus every stored rep edge. Under the driver-finalize cap
-    # the CC collects once instead of paying a persist + count probe.
+    # the CC collects once instead of paying a count() of its input.
     max_edges = (_footer_rows(os.path.join(state_dir, "members"))
                  + _footer_rows(edge_dir))
     return cluster_assignments(sigs.select("file_id"), cluster_input,

@@ -33,3 +33,30 @@ def synth_sample():
 
     text = "".join(r["content"] for r in generate_corpus(16, seed=7)).encode()
     return text + zlib.compress(text, 9)
+
+
+@pytest.fixture(scope="session")
+def group_jobs(spark):
+    """``group_jobs(name, run)``: the Spark jobs ``run()`` starts, counted
+    in job group ``name`` once the listener bus has caught up."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def count(group: str, run) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        seen, stable_since = -1, time.time()
+        while time.time() - stable_since < 0.5:
+            n = len(tracker.getJobIdsForGroup(group))
+            if n != seen:
+                seen, stable_since = n, time.time()
+            time.sleep(0.05)
+        return seen
+
+    return count

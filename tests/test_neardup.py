@@ -581,6 +581,61 @@ def test_multi_block_expansion_matches_brute_force(
     assert bool(fusion_break.search(plan)) is not fused
 
 
+def test_rep_graph_labels_match_member_oracle(spark, copies_corpus,
+                                              reversed_fold_state):
+    """Clustering the representative graph labels every member exactly
+    as a member-level union-find over the brute-force member pair set
+    (every within-group pair, the member product of every verified rep
+    edge) — in the pipeline, and in serve after a reversed-order fold,
+    where stored edge endpoints are not group minima."""
+    from itertools import combinations, product
+
+    from dedup_spark.oracle import oracle_clusters
+    from dedup_spark.streaming import current_clusters
+
+    def labels(df):
+        return {r["file_id"]: r["cluster_id"] for r in df.collect()}
+
+    with run_pipeline(copies_corpus, CFG) as res:
+        members: dict[int, list[int]] = {}
+        for r in res["groups"].collect():
+            members.setdefault(r["rep"], []).append(r["file_id"])
+        rep_edges = [(r["src"], r["dst"]) for r in
+                     res["edges_rep"].where("verified").collect()]
+        got = labels(res["clusters"])
+    pairs = [p for m in members.values() for p in combinations(m, 2)]
+    pairs += [p for a, b in rep_edges
+              for p in product(members[a], members[b])]
+    # non-vacuous: a multi-member group's rep carries a verified edge
+    assert any(len(members[v]) > 1 for e in rep_edges for v in e)
+    want = oracle_clusters([f for m in members.values() for f in m], pairs)
+    assert got == want
+    assert labels(current_clusters(spark, reversed_fold_state)) == want
+
+
+# Spark jobs of one run_pipeline plus a clusters distinct count on the
+# corpus below (8 cores, 8 shuffle partitions): one more while the CC
+# clustered star pairs + rep edges behind its persist + count probe.
+PIPELINE_JOB_FLOOR = 20
+
+
+def test_pipeline_job_floor(spark, group_jobs):
+    """Fixed cost of the batch path, counted in Spark jobs: no probe job
+    (a size count, a cache barrier) may come back silently. The corpus is
+    its own (120 files, every fifth copied once), so no cached frame of
+    another test can stand in for a stage."""
+    base = corpus_df(spark, 100, seed=79)
+    corpus = base.unionByName(base.where("file_id % 5 = 0").withColumn(
+        "file_id", F.col("file_id") + 1000)).cache()
+    corpus.count()  # the input cache is not part of the pipeline
+
+    def run_and_count():
+        with run_pipeline(corpus, CFG) as res:
+            res["clusters"].select("cluster_id").distinct().count()
+
+    assert group_jobs("pipeline_floor", run_and_count) <= PIPELINE_JOB_FLOOR
+
+
 def test_resume_rejects_stale_fingerprint(spark, corpus, tmp_path_factory):
     """A checkpoint written under different config semantics must be
     recomputed, not resumed (ADVICE r2: config/semantics fingerprint).
@@ -628,37 +683,39 @@ def test_cc_distributed_loop_matches_driver_path(spark, monkeypatch):
     assert (59, 0) in got and (107, 100) in got
 
 
-def test_cc_edges_canonical_flag_equivalence(spark):
+def test_cc_edges_canonical_flag_equivalence(spark, monkeypatch):
     """edges_canonical=True (pipeline fast path: skips the canonicalization
     exchange) must produce identical clusters to the default path when the
-    input really is canonical — and the default path must canonicalize a
-    messy edge list (reversed, duplicated, self-loop) to the same answer,
-    as must the footer-bounded path that collects it uncanonicalized."""
-    from dedup_spark.operators.cluster import cluster_assignments
+    input really is canonical — and a messy edge list (reversed,
+    duplicated, self-loop) must give the same labels unbounded (counted),
+    under an exact bound, and canonicalized through the distributed
+    rounds. An id frame with a ``rep`` column labels members by their
+    rep's component."""
+    from dedup_spark.operators import cluster as cl
 
     canonical = [(0, 1), (1, 2), (5, 6), (8, 9)]
     messy = canonical + [(2, 1), (1, 0), (6, 5), (7, 7)]
     ids = spark.range(0, 10).select(F.col("id").alias("file_id"))
 
-    fast = {
-        (r["file_id"], r["cluster_id"])
-        for r in cluster_assignments(
-            ids, spark.createDataFrame(canonical, "src long, dst long"),
-            edges_canonical=True,
-        ).collect()
-    }
-    safe = {
-        (r["file_id"], r["cluster_id"])
-        for r in cluster_assignments(
-            ids, spark.createDataFrame(messy, "src long, dst long")
-        ).collect()
-    }
-    bounded = {
-        (r["file_id"], r["cluster_id"])
-        for r in cluster_assignments(
-            ids, spark.createDataFrame(messy, "src long, dst long"),
-            max_edges=len(messy),
-        ).collect()
-    }
-    assert fast == safe == bounded
+    def labels(edges, ids=ids, **kw):
+        return {
+            (r["file_id"], r["cluster_id"])
+            for r in cl.cluster_assignments(
+                ids, spark.createDataFrame(edges, "src long, dst long"), **kw
+            ).collect()
+        }
+
+    fast = labels(canonical, edges_canonical=True)
+    counted = labels(messy)
+    bounded = labels(messy, max_edges=len(messy))
+    # members 10-12 of the groups repped by 2 (on an edge), 7 (self-loop
+    # only) and 3 (on no edge)
+    with_reps = spark.createDataFrame(
+        [(f, f) for f in range(10)] + [(10, 2), (11, 7), (12, 3)],
+        "file_id long, rep long")
+    by_rep = labels(messy, ids=with_reps, max_edges=len(messy))
+    monkeypatch.setattr(cl, "DRIVER_FINALIZE_EDGES", 2)
+    distributed = labels(messy)
+    assert fast == counted == bounded == distributed
     assert (2, 0) in fast and (9, 8) in fast and (7, 7) in fast
+    assert by_rep == fast | {(10, 0), (11, 7), (12, 3)}

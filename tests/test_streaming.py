@@ -454,27 +454,13 @@ def test_pinned_state_schemas_match_written(spark, tmp_path_factory,
             assert pinned.count() == spark.read.parquet(part).count()
 
 
-def _group_jobs(spark, group: str) -> int:
-    """Jobs recorded for ``group``, once the listener bus has caught up."""
-    import time
-
-    tracker = spark.sparkContext.statusTracker()
-    seen, stable_since = -1, time.time()
-    while time.time() - stable_since < 0.5:
-        n = len(tracker.getJobIdsForGroup(group))
-        if n != seen:
-            seen, stable_since = n, time.time()
-        time.sleep(0.05)
-    return seen
-
-
 # Spark jobs of one small-batch fold + current_clusters on the fixed state
 # below (8 cores, 8 shuffle partitions): 43 while every state read
 # inferred its schema and the fold and CC ran their size probes, 23 since.
 FOLD_SERVE_JOB_FLOOR = 23
 
 
-def test_fold_and_serve_job_floor(spark, tmp_path_factory):
+def test_fold_and_serve_job_floor(spark, tmp_path_factory, group_jobs):
     """Fixed cost of the incremental path, counted in Spark jobs: one
     fold of a small batch into a fixed state plus one current_clusters.
     No probe job (schema inference, bucket-stats barrier, CC size count)
@@ -484,12 +470,10 @@ def test_fold_and_serve_job_floor(spark, tmp_path_factory):
     state = str(tmp_path_factory.mktemp("state_floor"))
     incremental_update(corpus.where("file_id < 60"), state, CFG)
     batch = corpus.where("file_id >= 60")
-    sc = spark.sparkContext
-    sc.setJobGroup("fold_serve_floor", "fold + serve job floor")
-    try:
+
+    def fold_and_serve():
         incremental_update(batch, state, CFG)
         current_clusters(spark, state)  # the driver CC collects here
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert _group_jobs(spark, "fold_serve_floor") <= FOLD_SERVE_JOB_FLOOR
+
+    assert group_jobs("fold_serve_floor", fold_and_serve) \
+        <= FOLD_SERVE_JOB_FLOOR
