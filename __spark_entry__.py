@@ -23,6 +23,10 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from dedup_spark.config import (  # noqa: E402
+    MERSENNE31, DedupConfig, minhash_coeffs,
+)
+
 CHUNK = 1000  # fixed-mode chunk size for SQL-parity queries (chars)
 
 
@@ -350,13 +354,10 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _K16 = 16
-_P31 = 2147483647
 
 
 def _coeffs16():
-    from dedup_spark.config import minhash_coeffs
-
-    return minhash_coeffs(_K16, 1315423911)
+    return minhash_coeffs(_K16, DedupConfig.seed)
 
 
 def _tok_hash_spark(c):
@@ -474,7 +475,8 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _coeffs16()
     tokh = _tokh_frame(spark, sf_dir)
     aggs = [
-        F.min((F.lit(a[i]) * F.col("h") + F.lit(b[i])) % _P31).alias(f"mh{i}")
+        F.min((F.lit(a[i]) * F.col("h") + F.lit(b[i])) % MERSENNE31)
+        .alias(f"mh{i}")
         for i in range(_K16)
     ]
     return tokh.groupBy("doc_id").agg(*aggs)
@@ -483,7 +485,8 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_sql() -> str:
     a, b = _coeffs16()
     mins = ",\n           ".join(
-        f"min(({a[i]} * h + {b[i]}) % {_P31}) AS mh{i}" for i in range(_K16)
+        f"min(({a[i]} * h + {b[i]}) % {MERSENNE31}) AS mh{i}"
+        for i in range(_K16)
     )
     return _TOKENS_CTE + f"""
         SELECT doc_id,
@@ -492,104 +495,53 @@ def _minhash_sql() -> str:
     """
 
 
-_MAX_BAND_BUCKET = 1000   # direct pair-gen cap per LSH bucket
-_BAND_SALT = 10           # salted ceiling = 10,000 members per bucket
+# the band query's LSH: 4 bands × r=4 over K=16; buckets pair directly up
+# to 1,000 members and via salted blocks up to 10,000
+_BAND_CFG = DedupConfig(num_perm=_K16, bands=4, band_rows=4,
+                        max_bucket=1000, salt=10)
 
 
 def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7 LSH banding at document granularity (4 bands × r=4 over K=16):
     candidate pairs sharing any band value.
 
-    Plan (mirrors operators/lsh.py + operators/groups.py): docs with an
-    IDENTICAL 16-value signature share every band bucket, so they collapse
-    to one representative (min doc_id) before banding; rep-level bucket
-    pairs expand back through the membership afterwards — provably the
-    same pair set as the SQL twin's full self-join, but pair generation is
-    no longer quadratic in exact-dup cluster sizes. One band explode pass;
-    no self-join. Pair generation routes through the library's salted
-    skew ladder (operators/lsh.py salted_pairs — VERDICT r3 #4): buckets
-    ≤ 1,000 pair directly in-partition, up to 10,000 via salted blocks
-    with ≤ ~2,000 members per task, and only true mega-buckets beyond
-    that are dropped (pipeline/CLI runs count those with
-    lsh.dropped_bucket_aggs; none exist at driver SFs). No trailing
-    orderBy — the driver's value hash is order-insensitive, and a global
-    sort of the pair set is a wasted exchange at scale."""
+    The pipeline's operators, end to end: docs with an IDENTICAL 16-value
+    signature share every band bucket, so ``groups.group_window`` over
+    the full-signature key collapses them to one representative (min
+    doc_id); ``lsh.candidate_pairs`` bands the reps through the salted
+    skew ladder (buckets beyond 10,000 members are dropped; none exist at
+    driver SFs); ``expand_member_pairs`` and ``within_group_pairs`` expand
+    rep pairs back through the membership. Provably the pair set of the
+    SQL twin's full self-join, but pair generation is not quadratic in
+    exact-dup group sizes. No trailing orderBy — the driver's value hash
+    is order-insensitive, and a global sort of the pair set is a wasted
+    exchange at scale."""
     from dedup_spark.operators.groups import (
-        expand_member_pairs, within_group_pairs,
+        _keys, expand_member_pairs, group_window, within_group_pairs,
     )
-    from dedup_spark.operators.lsh import salted_pairs
+    from dedup_spark.operators.lsh import candidate_pairs
 
-    # four consumers (reps→bands, mem twice, within) would each replan the
-    # whole signature scan+window; the keyed persist materializes it ONCE
-    # per session+sf_dir (with the eager barrier that keeps concurrent
-    # consumer jobs — non-AQE broadcast futures — from racing the
-    # unpopulated cache into double compute).
+    # four consumers (reps→bands, the expansion's groups twice, within)
+    # would each replan the whole signature scan+window; the keyed persist
+    # materializes it ONCE per session+sf_dir
     def build_members():
-        sig = q_minhash_signatures(spark, sf_dir)
-        gid = F.md5(
-            F.concat_ws(
-                "-", *[F.col(f"mh{i}").cast("string") for i in range(_K16)]
-            )
+        sig = q_minhash_signatures(spark, sf_dir).select(
+            F.col("doc_id").alias("file_id"),
+            F.array(*[f"mh{i}" for i in range(_K16)]).alias("minhash"),
         )
-        keyed = sig.select(
-            "doc_id", gid.alias("gid"), *[f"mh{i}" for i in range(_K16)]
-        )
-        # explicitly-numbered repartition: the window exchange is tiny in
-        # bytes, and AQE would otherwise coalesce it to ~1 task — the
-        # cached frame then serves every consumer (rep min and group
-        # size here, the member expansion below) at that width (guide §2.5)
-        w = Window.partitionBy("gid")
-        p = spark.sparkContext.defaultParallelism * 2
-        return keyed.repartition(p, "gid").select(
-            "doc_id", "gid", F.min("doc_id").over(w).alias("rep"),
-            F.count("*").over(w).alias("group_size"),
-            *[f"mh{i}" for i in range(_K16)],
-        )
+        g1, g2 = _keys(("minhash",))
+        return group_window(sig.select("*", g1.alias("g1"), g2.alias("g2")))
 
     members = _cached_frame(spark, sf_dir, "band_members", build_members)
-    reps = members.where(F.col("doc_id") == F.col("rep"))
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "-",
-                        *[
-                            F.col(f"mh{band * 4 + j}").cast("string")
-                            for j in range(4)
-                        ],
-                    )
-                ).alias("band_val"),
-            )
-            for band in range(4)
-        ]
-    )
-    bands = reps.select("doc_id", F.explode(band_arr).alias("b")).select(
-        "doc_id", "b.band_id", "b.band_val"
-    )
-    # mega-bucket pre-filter gated by the MEASURED member count (the cache
-    # barrier's count(), kept in _FRAME_ROWS — free): band rows = reps*4
-    # <= members*4, and below lsh.PREFILTER_MIN_BAND_ROWS the pre-filter's
-    # dedicated agg job + broadcast future cost more driver latency than
-    # the linear window-buffering they prevent. The cap itself moves
-    # inside the window pass, so the pair OUTPUT is identical either way
-    # (operators/lsh.py salted_pairs docstring); at fleet scale the count
-    # is large and the pre-filter stays on — the correct 100 TB posture.
-    from dedup_spark.operators.lsh import PREFILTER_MIN_BAND_ROWS
-
+    # the cache barrier's count() sizes both plan gates: the ladder's
+    # mega-bucket pre-filter and the expansion's fusion
     n_members = _FRAME_ROWS[(sf_dir, "band_members")]
-    pf = n_members * 4 > PREFILTER_MIN_BAND_ROWS
-    rep_pairs = salted_pairs(
-        bands, _MAX_BAND_BUCKET, _BAND_SALT,
-        key_cols=("band_id", "band_val"), id_col="doc_id",
-        prefilter=pf,
+    # _tokh_frame already drops blank docs: every signature has tokens
+    reps = members.where(F.col("file_id") == F.col("rep")).withColumn(
+        "n_shingles", F.lit(1)
     )
-    # rep pairs → member pairs and all within-group pairs: the library's
-    # blocked expansion, fused or behind its exchanges by the same
-    # measured member count (operators/groups.py)
-    groups = members.select(F.col("doc_id").alias("file_id"), "rep",
-                            "group_size")
+    rep_pairs = candidate_pairs(reps, _BAND_CFG, n_rows=n_members)
+    groups = members.select("file_id", "rep", "group_size")
     cross = expand_member_pairs(rep_pairs, groups, n_members)
     within = within_group_pairs(groups).select("src", "dst")
     return cross.unionAll(within)
@@ -598,7 +550,8 @@ def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_band_sql() -> str:
     a, b = _coeffs16()
     mins = ",\n           ".join(
-        f"min(({a[i]} * h + {b[i]}) % {_P31}) AS mh{i}" for i in range(_K16)
+        f"min(({a[i]} * h + {b[i]}) % {MERSENNE31}) AS mh{i}"
+        for i in range(_K16)
     )
     band_rows = "\n    UNION ALL\n".join(
         "    SELECT doc_id, {band} AS band_id, md5({expr}) AS band_val FROM sig".format(
@@ -1675,7 +1628,6 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full near-dup pipeline (CDC chunk → MinHash/SimHash →
     LSH → exact-Jaccard verify → connected components) on the sf0.001
     documents table; returns per-language cluster stats."""
-    from dedup_spark.config import DedupConfig
     from dedup_spark.pipeline import run_pipeline
 
     sf_dir = "/root/testdata/sf0.001"

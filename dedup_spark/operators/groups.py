@@ -67,9 +67,11 @@ FUSED_MAX_PAIRS = 50_000_000
 _SIG = ("shingles", "minhash", "simhash")
 
 
-def _keys() -> tuple[Column, Column]:
-    """The two independent 64-bit halves of the full-signature key."""
-    return F.xxhash64(*_SIG), F.xxhash64(F.lit(1), *_SIG)
+def _keys(cols: tuple[str, ...] = _SIG) -> tuple[Column, Column]:
+    """The two independent 64-bit halves of the group key over ``cols``
+    (the full signature by default; the band query keys its 16-value
+    MinHash array)."""
+    return F.xxhash64(*cols), F.xxhash64(F.lit(1), *cols)
 
 
 def group_keys(signatures: DataFrame) -> DataFrame:
@@ -143,8 +145,7 @@ def within_group_pairs(groups: DataFrame) -> DataFrame:
     emits it exactly once."""
     members = groups.where(F.col("group_size") > 1).select("rep", "file_id")
     return salted_pairs(
-        members, MEMBER_BLOCK, None, key_cols=("rep",),
-        id_col="file_id", dedupe=False,
+        members, MEMBER_BLOCK, None, key_cols=("rep",), dedupe=False,
     ).select(
         "src",
         "dst",

@@ -141,16 +141,14 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
 
 def salted_pairs(buckets: DataFrame, max_b: int, salt: int | None,
                  key_cols: tuple[str, ...] = ("band_id", "band_hash"),
-                 id_col: str = "file_id",
                  dedupe: bool = True,
                  prefilter: bool = True) -> DataFrame:
     """The skew-laddered pair generator over arbitrary bucket frames.
 
-    ``buckets`` holds one row per (bucket key, member id); key columns and
-    the id column are parametric so every bucketed pair-gen in the repo
-    (MinHash band buckets, the entry-level SQL-parity band twin, the
-    within-exact-group audit expansions, salted block tests) shares ONE
-    implementation of the ladder:
+    ``buckets`` holds one row per (bucket key, ``file_id``); the key
+    columns are parametric so every bucketed pair-gen in the repo (MinHash
+    band buckets, the within-exact-group audit expansions, salted block
+    tests) shares ONE implementation of the ladder:
       size ≤ max_b        → direct in-partition pair-gen
       size ≤ max_b·salt   → salted blocks, ≤ ~2·max_b members per task
       size > max_b·salt   → dropped; the ladder returns pairs only, and
@@ -195,7 +193,7 @@ def salted_pairs(buckets: DataFrame, max_b: int, salt: int | None,
             # task buffers every band row of the (small) input once,
             # linearly, before the cap filter drops the bucket.
             cap = salt_cap
-    pairs = _block_pairs(cold, max_b, keys, id_col, cap=cap)
+    pairs = _block_pairs(cold, max_b, keys, cap=cap)
     if dedupe:
         # dropDuplicates over an explicitly-numbered repartition on the
         # pair key: one exchange (the aggregate reuses the partitioning),
@@ -209,7 +207,7 @@ def salted_pairs(buckets: DataFrame, max_b: int, salt: int | None,
 
 
 def _block_sides(cold: DataFrame, max_b: int, keys: list[str],
-                 id_col: str, cap: int | None = None):
+                 cap: int | None = None):
     """Bucket members → the two sides of the block-pair join (see
     ``_block_pairs``) and the width of its explicit exchanges. Split out
     so tests can assert the per-task member-count bound directly.
@@ -233,8 +231,8 @@ def _block_sides(cold: DataFrame, max_b: int, keys: list[str],
     nb = F.ceil(F.col("bucket_size") / max_b).cast("int")
     base = counted.select(
         *keys,
-        id_col,
-        F.pmod(F.xxhash64(id_col), nb).cast("int").alias("blk"),
+        "file_id",
+        F.pmod(F.xxhash64("file_id"), nb).cast("int").alias("blk"),
         nb.alias("nb"),
     )
     # a member of block b sits on the LEFT of tasks (b, t) for t >= b and
@@ -242,13 +240,13 @@ def _block_sides(cold: DataFrame, max_b: int, keys: list[str],
     # sees it on both sides and keeps ordered pairs only.
     left = base.select(
         *keys,
-        F.col(id_col).alias("_lid"),
+        F.col("file_id").alias("_lid"),
         F.col("blk").alias("bi"),
         F.explode(F.sequence(F.col("blk"), F.col("nb") - 1)).alias("bj"),
     )
     right = base.select(
         *keys,
-        F.col(id_col).alias("_rid"),
+        F.col("file_id").alias("_rid"),
         F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("bi"),
         F.col("blk").alias("bj"),
     )
@@ -256,7 +254,7 @@ def _block_sides(cold: DataFrame, max_b: int, keys: list[str],
 
 
 def _block_pairs(cold: DataFrame, max_b: int, keys: list[str],
-                 id_col: str, cap: int | None = None) -> DataFrame:
+                 cap: int | None = None) -> DataFrame:
     """Salted-block pair generation as a CO-PARTITIONED SORT-MERGE
     SELF-JOIN on (bucket key, block i, block j).
 
@@ -282,7 +280,7 @@ def _block_pairs(cold: DataFrame, max_b: int, keys: list[str],
     so size-estimate-driven strategy/coalesce decisions are always wrong
     here).
     """
-    left, right, n_partitions = _block_sides(cold, max_b, keys, id_col, cap)
+    left, right, n_partitions = _block_sides(cold, max_b, keys, cap)
     jk = [*keys, "bi", "bj"]
     part = [F.col(k) for k in jk]
     left = left.repartition(n_partitions, *part)

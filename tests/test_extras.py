@@ -167,9 +167,12 @@ def test_band_query_size_gates_equivalent(spark, monkeypatch):
     """Both size gates of q_minhash_band_candidates are plan choices, not
     semantics: the defaults at sf0.01 (fused expansion, mega-bucket
     pre-filter off) and both gates forced the other way (unfused
-    exchanges, pre-filter on) must emit the same (src, dst) set."""
+    exchanges, pre-filter on) must each emit exactly the (src, dst) set
+    of the DuckDB twin's full band self-join."""
     import os
     import re
+
+    duckdb = pytest.importorskip("duckdb")
 
     import __spark_entry__ as e
     from dedup_spark.operators import groups, lsh
@@ -177,6 +180,11 @@ def test_band_query_size_gates_equivalent(spark, monkeypatch):
     sf = "/root/testdata/sf0.01"
     if not os.path.exists(sf):
         pytest.skip("driver testdata not present")
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{sf}/documents.parquet')")
+    want = con.execute(e._minhash_band_sql()).fetchall()
 
     def run():
         e.release_caches()
@@ -191,14 +199,44 @@ def test_band_query_size_gates_equivalent(spark, monkeypatch):
     monkeypatch.setattr(groups, "FUSED_MAX_PAIRS", 0)
     monkeypatch.setattr(lsh, "PREFILTER_MIN_BAND_ROWS", 0)
     gated_pairs, gated_plan = run()
-    assert default_pairs  # non-vacuous: sf0.01 has band candidates
-    assert gated_pairs == default_pairs
+    assert want  # non-vacuous: sf0.01 has band candidates
+    assert default_pairs == want
+    assert gated_pairs == want
     # the two runs really took different branches of both gates: the
     # pre-filter's anti-join, and the unfused path's (dst, src) exchange
     fusion_break = re.compile(r"hashpartitioning\(dst#\d+L?, src#")
     assert "LeftAnti" not in default_plan and "LeftAnti" in gated_plan
     assert not fusion_break.search(default_plan)
     assert fusion_break.search(gated_plan)
+
+
+# Spark jobs of one cold band query count at sf0.01 (8 cores, 8 shuffle
+# partitions): the token-hash and member cache barriers, the rep ladder,
+# the member expansion and the count itself; 24 both while the query ran
+# its own md5 LSH and on the library operators.
+BAND_QUERY_JOB_FLOOR = 24
+
+
+def test_band_query_job_floor(spark, group_jobs):
+    """Fixed cost of the band query, counted in Spark jobs from cold
+    caches."""
+    import os
+
+    import __spark_entry__ as e
+
+    sf = "/root/testdata/sf0.01"
+    if not os.path.exists(sf):
+        pytest.skip("driver testdata not present")
+
+    e.release_caches()
+    try:
+        jobs = group_jobs(
+            "band_query_floor",
+            lambda: e.q_minhash_band_candidates(spark, sf).count(),
+        )
+    finally:
+        e.release_caches()
+    assert jobs <= BAND_QUERY_JOB_FLOOR, jobs
 
 
 def test_config_band_invariant_raises():

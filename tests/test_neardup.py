@@ -22,7 +22,8 @@ def corpus(spark):
 
 @pytest.fixture(scope="module")
 def result(spark, corpus):
-    return run_pipeline(corpus, CFG)
+    with run_pipeline(corpus, CFG) as res:
+        yield res
 
 
 @pytest.fixture(scope="module")
@@ -127,8 +128,8 @@ def test_salted_pairs_recall_neutral(spark, corpus):
 
 def test_salted_pairs_generic_keys(spark):
     """salted_pairs is the ONE pair-gen ladder for every bucketed surface
-    (VERDICT r3 #4): with string bucket keys and a custom id column it
-    must enumerate exactly the brute-force pair set, salting included."""
+    (VERDICT r3 #4): with string bucket keys it must enumerate exactly
+    the brute-force pair set, salting included."""
     from itertools import combinations
 
     from pyspark.sql import Window
@@ -137,18 +138,18 @@ def test_salted_pairs_generic_keys(spark):
 
     rows = [("b0", i) for i in range(7)] + \
            [("b1", i) for i in range(5, 11)] + [("b2", 99)]
-    buckets = spark.createDataFrame(rows, "bkt string, doc_id long")
+    buckets = spark.createDataFrame(rows, "bkt string, file_id long")
     want = set()
     for b in ("b0", "b1"):
         ids = sorted(d for k, d in rows if k == b)
         want |= {tuple(sorted(p)) for p in combinations(ids, 2)}
     # max_b=2 forces the salted path on both buckets (sizes 7 and 6)
     got = {(r["src"], r["dst"]) for r in salted_pairs(
-        buckets, 2, 1000, key_cols=("bkt",), id_col="doc_id"
+        buckets, 2, 1000, key_cols=("bkt",)
     ).collect()}
     assert got == want
     # drop ladder: salt_cap=6 kills the 7-member bucket, keeps the 6
-    pairs = salted_pairs(buckets, 3, 2, key_cols=("bkt",), id_col="doc_id")
+    pairs = salted_pairs(buckets, 3, 2, key_cols=("bkt",))
     ids1 = sorted(d for k, d in rows if k == "b1")
     assert {(r["src"], r["dst"]) for r in pairs.collect()} == {
         tuple(sorted(p)) for p in combinations(ids1, 2)
@@ -170,13 +171,13 @@ def test_salted_pairs_prefilter_gate_equivalent(spark):
 
     rows = [("b0", i) for i in range(7)] + \
            [("b1", i) for i in range(5, 11)] + [("b2", 99)]
-    buckets = spark.createDataFrame(rows, "bkt string, doc_id long")
+    buckets = spark.createDataFrame(rows, "bkt string, file_id long")
     # max_b=3, salt=2 → salt_cap=6: b0 (7 members) dropped, b1 salted
     on_pairs = salted_pairs(
-        buckets, 3, 2, key_cols=("bkt",), id_col="doc_id", prefilter=True,
+        buckets, 3, 2, key_cols=("bkt",), prefilter=True,
     )
     off_pairs = salted_pairs(
-        buckets, 3, 2, key_cols=("bkt",), id_col="doc_id", prefilter=False,
+        buckets, 3, 2, key_cols=("bkt",), prefilter=False,
     )
     assert {(r["src"], r["dst"]) for r in on_pairs.collect()} == \
            {(r["src"], r["dst"]) for r in off_pairs.collect()}
@@ -197,10 +198,10 @@ def test_salted_pairs_uncapped_ladder(spark):
 
     n = 100  # 25x the direct cap of max_b=4 — deep into the block regime
     buckets = spark.createDataFrame(
-        [("g", i) for i in range(n)], "bkt string, doc_id long"
+        [("g", i) for i in range(n)], "bkt string, file_id long"
     )
     rows = salted_pairs(
-        buckets, 4, None, key_cols=("bkt",), id_col="doc_id", dedupe=False
+        buckets, 4, None, key_cols=("bkt",), dedupe=False
     ).collect()
     got = [(r["src"], r["dst"]) for r in rows]
     want = {tuple(sorted(p)) for p in combinations(range(n), 2)}
@@ -210,7 +211,7 @@ def test_salted_pairs_uncapped_ladder(spark):
     # multiple of max_b members on either side of the block-pair join
     # (hash-multinomial block sizes concentrate at bucket_size/nb ≤ max_b;
     # deterministic via xxhash64) — the memory contract of the ladder
-    left, right, _ = _block_sides(buckets, 4, ["bkt"], "doc_id")
+    left, right, _ = _block_sides(buckets, 4, ["bkt"])
     for side in (left, right):
         sizes = [
             r["m"]
@@ -551,34 +552,33 @@ def test_multi_block_expansion_matches_brute_force(
 
     monkeypatch.setattr(G, "MEMBER_BLOCK", 2)
     monkeypatch.setattr(G, "FUSED_MAX_PAIRS", 10**18 if fused else 0)
-    res = run_pipeline(copies_corpus, CFG)
+    with run_pipeline(copies_corpus, CFG) as res:
+        members: dict[int, list[int]] = {}
+        for r in res["groups"].collect():
+            members.setdefault(r["rep"], []).append(r["file_id"])
+        rep_edges = [(r["src"], r["dst"]) for r in
+                     res["edges_rep"].where("verified").collect()]
+        want = {tuple(sorted(p)) for m in members.values()
+                for p in combinations(m, 2)}
+        want |= {tuple(sorted(p)) for a, b in rep_edges
+                 for p in product(members[a], members[b])}
+        # non-vacuous: verified edges between multi-block groups exist
+        assert any(len(members[a]) > 2 and len(members[b]) > 2
+                   for a, b in rep_edges)
 
-    members: dict[int, list[int]] = {}
-    for r in res["groups"].collect():
-        members.setdefault(r["rep"], []).append(r["file_id"])
-    rep_edges = [(r["src"], r["dst"]) for r in
-                 res["edges_rep"].where("verified").collect()]
-    want = {tuple(sorted(p)) for m in members.values()
-            for p in combinations(m, 2)}
-    want |= {tuple(sorted(p)) for a, b in rep_edges
-             for p in product(members[a], members[b])}
-    # non-vacuous: verified edges between multi-block groups exist
-    assert any(len(members[a]) > 2 and len(members[b]) > 2
-               for a, b in rep_edges)
+        def pairs(df):
+            got = [(r["src"], r["dst"]) for r in
+                   df.where("verified").select("src", "dst").collect()]
+            assert len(got) == len(set(got))  # each pair exactly once
+            return set(got)
 
-    def pairs(df):
-        got = [(r["src"], r["dst"]) for r in
-               df.where("verified").select("src", "dst").collect()]
-        assert len(got) == len(set(got))  # each pair exactly once
-        return set(got)
-
-    assert pairs(res["edges"]) == want
-    assert pairs(expanded_edges(spark, reversed_fold_state)) == want
-    # the gate really flipped: only the unfused plan has the (dst, src)
-    # fusion-break exchange
-    plan = res["edges"]._jdf.queryExecution().executedPlan().toString()
-    fusion_break = re.compile(r"hashpartitioning\(dst#\d+L?, src#")
-    assert bool(fusion_break.search(plan)) is not fused
+        assert pairs(res["edges"]) == want
+        assert pairs(expanded_edges(spark, reversed_fold_state)) == want
+        # the gate really flipped: only the unfused plan has the (dst, src)
+        # fusion-break exchange
+        plan = res["edges"]._jdf.queryExecution().executedPlan().toString()
+        fusion_break = re.compile(r"hashpartitioning\(dst#\d+L?, src#")
+        assert bool(fusion_break.search(plan)) is not fused
 
 
 def test_rep_graph_labels_match_member_oracle(spark, copies_corpus,
