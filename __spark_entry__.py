@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from dedup_spark.config import (  # noqa: E402
     MERSENNE31, DedupConfig, minhash_coeffs,
 )
+from dedup_spark.operators import ngram  # noqa: E402
 
 CHUNK = 1000  # fixed-mode chunk size for SQL-parity queries (chars)
 
@@ -112,10 +113,11 @@ _DOCS2_SQL = f"""docs2 AS (
 
 def _chunk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-mode chunk manifest over the dup-injected documents, pure JVM
-    (no Python UDF): chunk → sha256 → first-occurrence window (SURVEY.md
-    C1+J1+J2). The injected duplicates make every downstream dedup metric
-    (is_new=false, backrefs, eviction windows, MaxMem intervals)
-    non-trivially falsifiable at the driver's sf0.01 gate.
+    (no Python UDF): chunk → sha256 → ``build_manifest`` (SURVEY.md
+    C1+J1+J2), whose ``global_seq`` order is (doc_id, seq) order. The
+    injected duplicates make every downstream dedup metric (is_new=false,
+    backrefs, eviction windows, MaxMem intervals) non-trivially
+    falsifiable at the driver's sf0.01 gate.
 
     Session-cached (keyed persist, same pattern as the token-hash frame):
     SIX queries consume this manifest (chunk_manifest, chunk_dedup_stats,
@@ -123,19 +125,14 @@ def _chunk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole chunk+sha256 scan; the manifest itself is narrow (one row
     per 1000-char chunk)."""
     from dedup_spark.operators.chunk import fixed_chunks_relational
+    from dedup_spark.operators.dedup import build_manifest
 
     def build():
         chunks = fixed_chunks_relational(
             _docs_dup(spark, sf_dir), CHUNK, content_col="text",
             id_col="doc_id"
         )
-        w = Window.partitionBy("hash").orderBy("file_id", "seq")
-        return (
-            chunks.withColumn("rn", F.row_number().over(w))
-            .withColumn("is_new", F.col("rn") == 1)
-            .drop("rn")
-            .withColumnRenamed("file_id", "doc_id")
-        )
+        return build_manifest(chunks).withColumnRenamed("file_id", "doc_id")
 
     return _cached_frame(spark, sf_dir, "chunk_manifest", build)
 
@@ -360,10 +357,6 @@ def _coeffs16():
     return minhash_coeffs(_K16, DedupConfig.seed)
 
 
-def _tok_hash_spark(c):
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-
-
 # --- shared persisted frames -------------------------------------------
 # The (doc_id, token-hash) frame is the common input of minhash_signatures,
 # simhash_docs, and the band query: built once per (session, sf_dir) and
@@ -439,6 +432,8 @@ def _tokh_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash expression in the 16 MinHash / 32 SimHash aggregates re-computes
     md5 per aggregate (no CSE across aggregate expressions — same Catalyst
     behavior as the ngram split fix; measured ~40% off the query)."""
+    from dedup_spark.operators.textstats import token_hash_col
+
     def build():
         d = _docs(spark, sf_dir).where(F.length(F.trim("text")) > 0)
         # array_distinct already dedupes within each doc; no row-level
@@ -451,7 +446,8 @@ def _tokh_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_distinct(F.split(F.trim("text"), r"\s+"))
             ).alias("tok"),
         )
-        return toks.select("doc_id", _tok_hash_spark(F.col("tok")).alias("h"))
+        h = token_hash_col()
+        return toks.select("doc_id", h(F.col("tok")).alias("h"))
 
     return _cached_frame(spark, sf_dir, "tokh", build)
 
@@ -482,15 +478,18 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokh.groupBy("doc_id").agg(*aggs)
 
 
-def _minhash_sql() -> str:
+def _minhash_mins() -> str:  # the twins' 16 MinHash aggregates
     a, b = _coeffs16()
-    mins = ",\n           ".join(
+    return ",\n           ".join(
         f"min(({a[i]} * h + {b[i]}) % {MERSENNE31}) AS mh{i}"
         for i in range(_K16)
     )
+
+
+def _minhash_sql() -> str:
     return _TOKENS_CTE + f"""
         SELECT doc_id,
-           {mins}
+           {_minhash_mins()}
         FROM tokens GROUP BY doc_id
     """
 
@@ -517,7 +516,7 @@ def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     is order-insensitive, and a global sort of the pair set is a wasted
     exchange at scale."""
     from dedup_spark.operators.groups import (
-        _keys, expand_member_pairs, group_window, within_group_pairs,
+        expand_member_pairs, group_window, key_columns, within_group_pairs,
     )
     from dedup_spark.operators.lsh import candidate_pairs
 
@@ -529,7 +528,7 @@ def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("file_id"),
             F.array(*[f"mh{i}" for i in range(_K16)]).alias("minhash"),
         )
-        g1, g2 = _keys(("minhash",))
+        g1, g2 = key_columns(("minhash",))
         return group_window(sig.select("*", g1.alias("g1"), g2.alias("g2")))
 
     members = _cached_frame(spark, sf_dir, "band_members", build_members)
@@ -548,11 +547,6 @@ def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_band_sql() -> str:
-    a, b = _coeffs16()
-    mins = ",\n           ".join(
-        f"min(({a[i]} * h + {b[i]}) % {MERSENNE31}) AS mh{i}"
-        for i in range(_K16)
-    )
     band_rows = "\n    UNION ALL\n".join(
         "    SELECT doc_id, {band} AS band_id, md5({expr}) AS band_val FROM sig".format(
             band=band,
@@ -565,7 +559,7 @@ def _minhash_band_sql() -> str:
     return _TOKENS_CTE + f"""
         , sig AS (
             SELECT doc_id,
-           {mins}
+           {_minhash_mins()}
             FROM tokens GROUP BY doc_id
         ), bands AS (
         {band_rows}
@@ -619,171 +613,22 @@ def _simhash_sql() -> str:
     """
 
 
-_MAX_GRAM_DF = 1000  # posting-list cap: grams in more docs carry no signal
-
-
-# below this many cached (gh, doc_id, n) rows the pair volume cannot
-# stress a 64 MB/task aggregation budget at 8x-parallelism width, and
-# the dedicated volume-measuring job would be pure added latency
-_NGRAM_VOLUME_MIN_ROWS = 4_000_000
-
-
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-3-gram exact Jaccard near-dup pairs (threshold 0.3).
-
-    Plan: document-frequency-capped inverted-index pair generation. Grams
-    are keyed by ``xxhash64`` (8-byte shuffle key instead of full 3-gram
-    text); the (gh, doc_id) rows of grams under the ``_MAX_GRAM_DF`` cap
-    self-join on the gram hash (co-partitioned merge join — each key's
-    match buffer is bounded by the cap), so pair explosion is bounded by
-    ``_MAX_GRAM_DF``² per gram rather than quadratic in an unbounded
-    hot-gram posting list. At the driver SFs every gram is far below the
-    cap, so results are identical to the exact SQL twin (which applies
-    the same df cap)."""
+    """Word-3-gram exact Jaccard near-dup pairs (threshold 0.3) from
+    ``operators/ngram.py``. At the driver SFs no gram reaches its df cap,
+    which the exact SQL twin applies too."""
     # three consumers (pair-gen self-join + the per-doc sizes) — without a
     # persist the gram build plans THREE times (measured: zero
     # ReusedExchange, 2.2x query wall). The keyed persist carries the
     # eager materialization barrier, so the size-join broadcast futures
     # can't race the unpopulated cache into double compute (same pattern,
-    # and same event-log evidence, as dedup_spark/pipeline.py).
-    def build_gram_rows():
-        d = _docs(spark, sf_dir).where(F.length(F.trim("text")) > 0)
-        # materialize the token array in its OWN projection: referencing
-        # the split() expression from the size guard, the sequence bound,
-        # and the gram lambda re-runs the regex split per reference (no
-        # CSE across the expression tree) — measured 7x on the gram build
-        # (4.9 s→0.7 s)
-        from dedup_spark.operators.textstats import _trigram_array
-
-        dt = d.select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
-        toks = F.col("toks")
-        # docs with <3 tokens yield zero grams — matches the DuckDB
-        # generate_series semantics which emits nothing. The trigram
-        # array is the shared zip_with construction (textstats) —
-        # identical strings to the per-index transform/slice form,
-        # measured ~4× cheaper per doc.
-        tri = F.when(
-            F.size(toks) >= 3, _trigram_array(toks, F.size(toks))
-        ).otherwise(F.array().cast("array<string>"))
-        grams = dt.select(
-            "doc_id",
-            F.explode(F.array_distinct(tri)).alias("ng"),
-        ).where(F.col("ng") != "").select(
-            "doc_id", F.xxhash64("ng").alias("gh")
-        )
-        # kept (gh, doc_id, n) rows: df cap via a window count over an
-        # explicitly-numbered repartition (AQE-coalesce-exempt — guide
-        # §2.5), then each doc's kept-gram count ``n`` via a second
-        # narrow window — carrying n on the gram row lets the pair stage
-        # compute jaccard inline instead of joining the ~10^8-row pair
-        # aggregate against a per-doc size table twice (both windows and
-        # the join shuffle only the 2.6M narrow gram rows at sf1.0).
-        p = spark.sparkContext.defaultParallelism * 2
-        w = Window.partitionBy("gh")
-        wd = Window.partitionBy("doc_id")
-        return (
-            grams.repartition(p, "gh")
-            .withColumn("df", F.count("*").over(w))
-            .where(F.col("df") <= _MAX_GRAM_DF)
-            .select("gh", "doc_id")
-            .repartition(p, "doc_id")
-            .withColumn("n", F.count("*").over(wd))
-        )
-
+    # and same event-log evidence, as dedup_spark/pipeline.py); its
+    # count() is the measured row count the pair stage's volume gate reads.
     def build_pairs():
-        gram_rows = _cached_frame(
-            spark, sf_dir, "ngram_gram_rows", build_gram_rows
-        )
-        # pair generation as a co-partitioned merge self-join on the gram
-        # hash (guide §7.1): the old flatten(transform(...)) explode over
-        # collect_list postings materialized every gram's C(df,2) struct
-        # array through interpreted HOFs — measured 121 s of GC across the
-        # explode stages at sf1.0; the join streams the identical pair
-        # multiset out of codegen. Per-key match buffer ≤ _MAX_GRAM_DF
-        # rows (the df cap), so no task holds a hot gram's whole pair set.
-        # The co-occurrence count groups by (src, dst) over an 8×-wide
-        # explicit repartition: the pair stream is nearly duplicate-free
-        # (114M distinct of 127M instances at sf1.0), so at the session's
-        # default width each final-agg task's hash map outgrew its
-        # execution-memory share and fell back to sort-based aggregation
-        # (measured 16.2 s → 6.6 s for the agg alone). n_src/n_dst ride
-        # the group key (functionally dependent on src/dst), so jaccard
-        # is computed inline — no join back onto the pair aggregate.
-        a = gram_rows.alias("a")
-        b = gram_rows.alias("b")
-        # pair-aggregation width: 8x parallelism keeps each final-agg
-        # task's hash map inside its execution-memory share at the
-        # measured sf1.0 volume (118M instances), but the volume grows
-        # ~quadratically in gram df, and at 2x the corpus the fixed
-        # width overflowed every map into sort-based fallback (event-log
-        # measured: 13 GB spill, 2,054 s runSum in the one agg stage).
-        # For large inputs (cache row count > _NGRAM_VOLUME_MIN_ROWS,
-        # where one sub-second in-cache pass amortizes) the EXACT
-        # instance count sum(C(df,2)) sizes the exchange instead:
-        # ~80 B/key of UnsafeFixedWidthAggregationMap footprint against
-        # a 64 MB per-task budget, rounded up to a parallelism multiple
-        # (guide §2.5: derive widths from data size, not constants; the
-        # session's bypass threshold covers these widths).
-        dp = spark.sparkContext.defaultParallelism
-        p8 = dp * 8
-        if (_FRAME_ROWS.get((sf_dir, "ngram_gram_rows"), 0)
-                > _NGRAM_VOLUME_MIN_ROWS):
-            inst = gram_rows.groupBy("gh").count().agg(
-                F.sum(F.col("count") * (F.col("count") - 1) / 2)
-            ).first()[0] or 0
-            need = -(-int(inst * 80) // (64 << 20))   # ceil div
-            p8 = max(p8, dp * (-(-need // dp)))
-            # staying on the bypass writer beats a strict 64 MB/task agg
-            # budget while the maps still fit the ~150 MB execution
-            # share: clamp to the session's (FD-limited) threshold when
-            # that keeps per-task state under 128 MB, otherwise take the
-            # width and let the exchange use the serialized-sort writer.
-            bypass_cap = int(spark.conf.get(
-                "spark.shuffle.sort.bypassMergeThreshold", "200"))
-            cap = dp * (bypass_cap // dp) if bypass_cap >= dp else 0
-            if p8 > cap > 0 and inst * 80 // cap <= (128 << 20):
-                p8 = cap
-        inter = (
-            a.hint("merge")
-            .join(b, "gh")
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            # length filter: for a pair with gram-set sizes n_a, n_b and
-            # any overlap c, jaccard = c/(n_a+n_b-c) <= min(n)/max(n), so
-            # a pair with 10*min(n) < 3*max(n) has exact jaccard < 0.3 and
-            # every one of its instances (n_src/n_dst are pair constants)
-            # is dropped BEFORE the pair exchange — integer arithmetic
-            # (guide §2.3: shuffle fewer rows). Caveat: the output
-            # predicate is round(jaccard, 6) >= 0.3, not jaccard >= 0.3.
-            # A dropped pair sits at least 1/(10*max(n)) below 0.3, which
-            # exceeds the 5e-7 rounding margin unless max(n) >= 200,000
-            # grams; only there can a pair that would round up to 0.3 be
-            # lost. The parity twin caps a document at 9,999 grams
-            # (generate_series(1, 9999) in _NGRAM_SQL), so that case is
-            # unreachable on any input the oracle can check.
-            .where(
-                F.least("a.n", "b.n") * F.lit(10)
-                >= F.greatest("a.n", "b.n") * F.lit(3)
-            )
-            .repartition(p8, F.col("a.doc_id"), F.col("b.doc_id"))
-            .groupBy(
-                F.col("a.doc_id").alias("src"),
-                F.col("b.doc_id").alias("dst"),
-                F.col("a.n").alias("n_src"),
-                F.col("b.n").alias("n_dst"),
-            )
-            .agg(F.count("*").alias("n_common"))
-        )
-        return (
-            inter.withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_common")
-                    / (F.col("n_src") + F.col("n_dst") - F.col("n_common")),
-                    6,
-                ),
-            )
-            .where(F.col("jaccard") >= 0.3)
-            .select("src", "dst", "n_common", "jaccard")
+        rows = _cached_frame(spark, sf_dir, "ngram_gram_rows",
+                             lambda: ngram.gram_rows(_docs(spark, sf_dir)))
+        return ngram.jaccard_pairs(
+            rows, _FRAME_ROWS[(sf_dir, "ngram_gram_rows")]
         )
 
     # the near-dup edge set is the shared input of neardup_components /
@@ -795,8 +640,9 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cached_frame(spark, sf_dir, "ngram_pairs", build_pairs)
 
 
-_NGRAM_SQL = f"""
-WITH grams0 AS (
+# The three near-dup twins share one CTE chain (grams0 … inter); the CC
+# twins open it with WITH RECURSIVE. The kept CTE's cap is ngram.MAX_GRAM_DF.
+_NGRAM_CTES = f"""grams0 AS (
     SELECT DISTINCT doc_id, ng
     FROM (
         SELECT d.doc_id,
@@ -812,7 +658,7 @@ WITH grams0 AS (
     WHERE ng <> ''
 ), kept AS (
     -- same df cap as the Spark plan (_MAX_GRAM_DF); no-op at driver SFs
-    SELECT ng FROM grams0 GROUP BY ng HAVING count(*) <= {_MAX_GRAM_DF}
+    SELECT ng FROM grams0 GROUP BY ng HAVING count(*) <= {ngram.MAX_GRAM_DF}
 ), grams AS (
     SELECT doc_id, ng FROM grams0 JOIN kept USING (ng)
 ), sizes AS (
@@ -823,7 +669,9 @@ WITH grams0 AS (
     WHERE x.doc_id < y.doc_id
     GROUP BY 1, 2
 )
-SELECT src, dst, n_common,
+"""
+
+_NGRAM_SQL = "\nWITH " + _NGRAM_CTES + """SELECT src, dst, n_common,
        round(n_common / (sx.n + sy.n - n_common), 6) AS jaccard
 FROM inter
 JOIN sizes sx ON sx.doc_id = src
@@ -854,17 +702,8 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cached_frame(spark, sf_dir, "neardup_cc", build_cc)
 
 
-_CC_SQL = _NGRAM_SQL.replace(
-    "WITH grams0 AS", "WITH RECURSIVE grams0 AS", 1
-).replace(
-    """SELECT src, dst, n_common,
-       round(n_common / (sx.n + sy.n - n_common), 6) AS jaccard
-FROM inter
-JOIN sizes sx ON sx.doc_id = src
-JOIN sizes sy ON sy.doc_id = dst
-WHERE round(n_common / (sx.n + sy.n - n_common), 6) >= 0.3
-""",
-    """, e AS (
+# reach(v, r): every vertex r reachable from v over the symmetric edges
+_REACH_SQL = "\nWITH RECURSIVE " + _NGRAM_CTES + """, e AS (
     SELECT src, dst FROM inter
     JOIN sizes sx ON sx.doc_id = src
     JOIN sizes sy ON sy.doc_id = dst
@@ -878,9 +717,10 @@ WHERE round(n_common / (sx.n + sy.n - n_common), 6) >= 0.3
     UNION
     SELECT reach.v, sym.v AS r FROM reach JOIN sym ON sym.u = reach.r
 )
-SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v ORDER BY doc_id
-""",
-)
+"""
+
+_CC_SQL = _REACH_SQL + """SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v ORDER BY doc_id
+"""
 
 
 def q_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -924,10 +764,7 @@ def q_dedup_reduction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SURVIVORS_CORE = _CC_SQL.replace(
-    """SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v ORDER BY doc_id
-""",
-    """, cc AS (
+_SURVIVORS_CORE = _REACH_SQL + """, cc AS (
     SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v
 )
 SELECT d.doc_id,
@@ -935,17 +772,7 @@ SELECT d.doc_id,
        (coalesce(cc.cluster_id, d.doc_id) = d.doc_id) AS keep,
        d.n_chars
 FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
-""",
-)
-
-# exact-string surgery guards (ADVICE r5): if the donor SQL tails ever
-# drift, .replace() silently no-ops and the derived oracles become the
-# donor query with the wrong columns — fail at import instead. Explicit
-# raises, not asserts: the guards must also hold under ``python -O``.
-if _CC_SQL == _NGRAM_SQL or "RECURSIVE" not in _CC_SQL:
-    raise RuntimeError("oracle SQL surgery failed: _CC_SQL")
-if _SURVIVORS_CORE == _CC_SQL or "LEFT JOIN cc" not in _SURVIVORS_CORE:
-    raise RuntimeError("oracle SQL surgery failed: _SURVIVORS_CORE")
+"""
 
 _REDUCTION_SQL = f"""
 WITH s AS ({_SURVIVORS_CORE})
@@ -1208,15 +1035,7 @@ def q_block_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_backref_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2/J3: backref-distance distribution over the chunk manifest, and
     how many dups a format-2 bounded window (max_backref=8) would drop."""
-    m = _chunk_manifest(spark, sf_dir)
-    m = m.withColumn(
-        "gseq", F.col("doc_id").cast("long") * (1 << 20) + F.col("seq")
-    )
-    w = Window.partitionBy("hash").orderBy("gseq")
-    d = (
-        m.withColumn("backref", F.col("gseq") - F.lag("gseq").over(w))
-        .where(F.col("backref").isNotNull())
-    )
+    d = _chunk_manifest(spark, sf_dir).where(F.col("backref").isNotNull())
     return d.agg(
         F.count("*").alias("n_dups"),
         F.min("backref").alias("min_backref"),

@@ -67,7 +67,7 @@ FUSED_MAX_PAIRS = 50_000_000
 _SIG = ("shingles", "minhash", "simhash")
 
 
-def _keys(cols: tuple[str, ...] = _SIG) -> tuple[Column, Column]:
+def key_columns(cols: tuple[str, ...] = _SIG) -> tuple[Column, Column]:
     """The two independent 64-bit halves of the group key over ``cols``
     (the full signature by default; the band query keys its 16-value
     MinHash array)."""
@@ -81,7 +81,7 @@ def group_keys(signatures: DataFrame) -> DataFrame:
     per-batch key aggregates instead of re-windowing the cumulative
     signature table. Files with no shingles are excluded (they never
     participate in matching)."""
-    g1, g2 = _keys()
+    g1, g2 = key_columns()
     return signatures.where(F.col("n_shingles") > 0).select(
         "file_id", g1.alias("g1"), g2.alias("g2")
     )
@@ -112,7 +112,7 @@ def with_groups(signatures: DataFrame) -> DataFrame:
     bogus group), so the frame keeps every input row.
     """
     empty = F.col("n_shingles") == 0
-    g1, g2 = _keys()
+    g1, g2 = key_columns()
     keyed = signatures.withColumn(
         "g1", F.when(empty, F.xxhash64(F.lit(-1), "file_id")).otherwise(g1)
     ).withColumn(

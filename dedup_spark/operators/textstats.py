@@ -187,7 +187,7 @@ def passage_dedup_stats(df: DataFrame, text: str = "text",
     )
 
 
-def _trigram_array(toks, n):
+def trigram_array(toks, n):
     """tri[j] = toks[j] + ' ' + toks[j+1] + ' ' + toks[j+2], j = 1..n-2,
     as two ``zip_with`` passes over three shifted slices. Identical
     strings to the per-index ``transform(concat_ws(slice(toks, j, 3)))``
@@ -226,7 +226,7 @@ def with_repetition(df: DataFrame, text: str = "text") -> DataFrame:
     )
     toks = F.col("_toks")
     n = F.size(toks)
-    tri = F.when(n >= 3, _trigram_array(toks, n)).otherwise(
+    tri = F.when(n >= 3, trigram_array(toks, n)).otherwise(
         F.array().cast("array<string>")
     )
     n_tri = F.size(tri)

@@ -118,23 +118,77 @@ def test_lsh_multiprobe_recall_vs_bruteforce(spark, vectors):
     assert len(exact & approx) >= len(exact & single)
 
 
-def test_ngram_pairs_short_docs(spark, tmp_path):
-    """Docs with <3 whitespace tokens must yield zero grams, not crash
-    (sequence(1,0) expands descending and slice(toks,0,3) throws)."""
-    import __spark_entry__ as e
+def _ngram_brute_force(docs, max_df):
+    """{(src, dst): (n_common, jaccard)} by set arithmetic over the same
+    tokenization: split(trim(text), '\\s+'), distinct word trigrams, grams
+    in more than ``max_df`` docs dropped, rounded Jaccard >= 0.3."""
+    import re
+    from collections import Counter
 
-    rows = [
-        (0, "two tokens", "en", "s", 10),
-        (1, "one", "en", "s", 3),
-        (2, "alpha beta gamma delta epsilon zeta", "en", "s", 35),
-        (3, "alpha beta gamma delta epsilon zeta", "en", "s", 35),
-        (4, "", "en", "s", 0),
+    grams = {}
+    for doc_id, text in docs:
+        t = text.strip(" ")
+        toks = re.split(r"\s+", t) if t else []
+        grams[doc_id] = {" ".join(toks[i:i + 3])
+                         for i in range(len(toks) - 2)} - {""}
+    df = Counter(g for gs in grams.values() for g in gs)
+    kept = {d: {g for g in gs if df[g] <= max_df} for d, gs in grams.items()}
+    out = {}
+    for a in kept:
+        for b in kept:
+            c = len(kept[a] & kept[b])
+            if a < b and c:
+                j = c / (len(kept[a]) + len(kept[b]) - c)
+                if round(j, 6) >= 0.3:
+                    out[(a, b)] = (c, j)
+    return out
+
+
+def test_ngram_pairs_match_brute_force(spark, monkeypatch):
+    """operators/ngram.py against brute-force set Jaccard, at both branches
+    of the volume gate. Inputs: docs with <3 tokens, which must yield zero
+    grams, not crash (sequence(1,0) expands descending and slice(toks,0,3)
+    throws); blank docs; a gram in more docs than a lowered MAX_GRAM_DF,
+    which would pair docs 6–9 at Jaccard 1/3 if kept; and docs 10/11 at
+    the length filter's boundary (3 vs 10 grams, 10·3 = 3·10, Jaccard
+    exactly 0.3)."""
+    from dedup_spark.operators import ngram
+
+    toks = [f"t{i}" for i in range(1, 14)]
+    docs = [
+        (0, "two tokens"),
+        (1, "one"),
+        (2, "alpha beta gamma delta epsilon zeta"),
+        (3, "alpha beta gamma delta epsilon zeta"),
+        (4, ""),
+        (5, "   "),
+        *[(i, f"hot gram here w{i}") for i in (6, 7, 8, 9)],
+        (10, " ".join(toks[:5])),
+        (11, " ".join(toks[:12])),
+        (12, " ".join(toks)),
     ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    got = e.q_ngram_jaccard_pairs(spark, str(tmp_path)).collect()
-    assert [(r["src"], r["dst"], r["jaccard"]) for r in got] == [(2, 3, 1.0)]
+    monkeypatch.setattr(ngram, "MAX_GRAM_DF", 3)
+    want = _ngram_brute_force(docs, 3)
+    assert (2, 3) in want and (10, 11) in want and (10, 12) not in want
+    assert not any(a in (6, 7, 8, 9) for a, _ in want)
+
+    rows = ngram.gram_rows(
+        spark.createDataFrame(docs, "doc_id long, text string")
+    ).cache()
+    try:
+        n_rows = rows.count()
+        for volume_min_rows in (ngram.VOLUME_MIN_ROWS, 0):
+            monkeypatch.setattr(ngram, "VOLUME_MIN_ROWS", volume_min_rows)
+            got = {
+                (r["src"], r["dst"]): (r["n_common"], r["jaccard"])
+                for r in ngram.jaccard_pairs(rows, n_rows).collect()
+            }
+            assert got.keys() == want.keys()
+            for k, (c, j) in want.items():
+                assert got[k][0] == c and got[k][1] == pytest.approx(j,
+                                                                     abs=1e-6)
+    finally:
+        rows.unpersist()
 
 
 def test_entry_persist_cache_stable(spark):

@@ -31,6 +31,8 @@ def norm_cell(v):
 
 
 def norm_rows(cols, rows):
+    """Rows in engine-neutral, order-insensitive form, columns by name
+    (shared with tests/test_oracle.py)."""
     idx = sorted(range(len(cols)), key=lambda i: cols[i])
     return sorted(
         tuple(repr(norm_cell(r[i])) for i in idx) for r in rows
