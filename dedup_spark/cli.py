@@ -77,6 +77,7 @@ def main(argv=None):
     spark.sparkContext.setLogLevel("WARN")
 
     if args.cmd == "run":
+        from .operators.groups import expanded_edge_count
         from .pipeline import run_pipeline
 
         cfg = DedupConfig(mode=args.mode, max_size=args.max_size,
@@ -85,7 +86,9 @@ def main(argv=None):
         res = run_pipeline(corpus, cfg, workdir=args.workdir,
                            resume=args.resume, content_col=args.content_col,
                            id_col=args.id_col)
-        n_edges = res["edges"].where("verified").count()
+        # min_lcs stays 0 here, so the verified member pairs are counted
+        # from group sizes, never expanded
+        n_edges = expanded_edge_count(res["edges_rep"], res["groups"])
         n_files, n_clusters = _files_and_clusters(res["clusters"])
         dropped = res["candidate_metrics"].first()
         print(json.dumps({"files": n_files, "verified_edges": n_edges,

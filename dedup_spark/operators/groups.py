@@ -18,7 +18,8 @@ This module owns the whole group layer: the key (``group_keys``), the one
 (g1, g2) window that assigns ``rep`` and ``group_size``
 (``group_window``), and the one representative → member expansion
 (``expand_member_pairs``) that the pipeline's ``edges`` surface, the
-incremental state's ``expanded_edges`` and the band query all use.
+incremental state's ``expanded_edges`` and the band query all use, and
+that expansion's pair count from group sizes (``expanded_edge_count``).
 
 The expansion is BLOCKED: each group's members are collected into
 ``ceil(group_size / MEMBER_BLOCK)`` id arrays, a rep pair joins the
@@ -76,11 +77,11 @@ def key_columns(cols: tuple[str, ...] = _SIG) -> tuple[Column, Column]:
 
 def group_keys(signatures: DataFrame) -> DataFrame:
     """(file_id, g1, g2): the 128-bit full-signature group key, computed
-    PER ROW with no shuffle — the building block of the incremental
-    fold's members and group-delta state (streaming.py), which folds
-    per-batch key aggregates instead of re-windowing the cumulative
-    signature table. Files with no shingles are excluded (they never
-    participate in matching)."""
+    PER ROW with no shuffle — the rows of the incremental fold's
+    ``members`` state (streaming.py), whose prior partitions answer
+    born-group detection by key presence instead of re-windowing the
+    cumulative signature table. Files with no shingles are excluded
+    (they never participate in matching)."""
     g1, g2 = key_columns()
     return signatures.where(F.col("n_shingles") > 0).select(
         "file_id", g1.alias("g1"), g2.alias("g2")
@@ -220,3 +221,19 @@ def expand_group_edges(edges_rep: DataFrame, groups: DataFrame,
     )
     rejected = edges_rep.where(~F.col("verified"))
     return cross.unionByName(within_group_pairs(groups)).unionByName(rejected)
+
+
+def expanded_edge_count(edges_rep: DataFrame, groups: DataFrame) -> int:
+    """The verified row count of ``expand_group_edges(edges_rep, groups,
+    ...)`` in one aggregate, without expanding a pair: ΣC(s, 2) over the
+    group sizes plus Σ s_src·s_dst over the verified rep edges."""
+    size = groups.where(F.col("file_id") == F.col("rep")).select(
+        "rep", F.col("group_size").alias("s"))
+    within = size.select(F.expr("s * (s - 1) div 2").alias("n"))
+    cross = (
+        edges_rep.where("verified")
+        .join(size.withColumnsRenamed({"rep": "src", "s": "a"}), "src")
+        .join(size.withColumnsRenamed({"rep": "dst", "s": "b"}), "dst")
+        .select((F.col("a") * F.col("b")).alias("n"))
+    )
+    return within.unionByName(cross).agg(F.sum("n")).first()[0] or 0

@@ -24,10 +24,12 @@ from ..config import DedupConfig
 
 
 def verify_pairs(pairs: DataFrame, signatures: DataFrame,
-                 shingles: DataFrame, cfg: DedupConfig) -> DataFrame:
+                 shingles: DataFrame | None, cfg: DedupConfig) -> DataFrame:
     """pairs (src,dst) → verified edges with exact Jaccard.
 
-    Returns (src, dst, hamming, jaccard, verified).
+    Returns (src, dst, hamming, jaccard, verified). ``signatures`` carries
+    ``file_id``, ``simhash`` and the ``shingles`` sketch. The ``shingles``
+    argument is ignored; it stays positional for existing callers.
 
     Size-tiered shuffle (the 100 TB lever on the verify stage): when the
     hamming gate is active (``simhash_hamming_max < 64``) the pair rows
@@ -43,7 +45,6 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
     # single-phase plan they ride one join per pair side. The kernel emits
     # shingle sketches via np.unique (sorted + distinct already), so no
     # array_distinct pass is needed here.
-    has_sketch = "shingles" in signatures.columns
     if cfg.simhash_hamming_max < 64:
         narrow = signatures.select("file_id", "simhash")
         gated = (
@@ -61,10 +62,8 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
             .where(F.col("hamming") <= cfg.simhash_hamming_max)
             .select("src", "dst", "hamming")
         )
-        sketch_src = signatures if has_sketch else shingles
-        sets = sketch_src.select(
-            "file_id", F.col("shingles").alias("shingle_set")
-        )
+        sets = signatures.select(
+            "file_id", F.col("shingles").alias("shingle_set"))
         e = (
             gated
             .join(sets.withColumnsRenamed(
@@ -73,17 +72,9 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
                 {"file_id": "dst", "shingle_set": "set_dst"}), "dst")
         )
     else:
-        if has_sketch:
-            side = signatures.select(
-                "file_id", "simhash", F.col("shingles").alias("shingle_set")
-            )
-        else:
-            side = signatures.select("file_id", "simhash").join(
-                shingles.select(
-                    "file_id", F.col("shingles").alias("shingle_set")
-                ),
-                "file_id",
-            )
+        side = signatures.select(
+            "file_id", "simhash", F.col("shingles").alias("shingle_set")
+        )
         e = (
             pairs
             .join(side.withColumnsRenamed({

@@ -298,7 +298,6 @@ def run_pipeline(
     rep_sigs = sig_groups.where(
         F.col("file_id") == F.col("rep")
     ).drop(*_GROUP_COLS)
-    shingles = rep_sigs.select("file_id", "shingles")
     # the cache-materialization count doubles as the measured row count
     # that cost-gates the mega-bucket pre-filter (small measured inputs
     # drop its dedicated job + broadcast future; output identical)
@@ -313,7 +312,7 @@ def run_pipeline(
     # whose non-representative endpoints vanish in the expansion join.
     edges_rep = stage(
         "edges_rep",
-        lambda: verify_pairs(pairs, rep_sigs, shingles, cfg),
+        lambda: verify_pairs(pairs, rep_sigs, None, cfg),
     )
 
     if cfg.min_lcs > 0:
@@ -359,7 +358,6 @@ def run_pipeline(
     return Frames({
         "signatures": signatures,
         "groups": groups,
-        "shingles": shingles,
         "candidates": pairs,
         "edges_rep": edges_rep,
         "edges": edges_out,

@@ -13,14 +13,13 @@ appends, per-batch write volume must scale with the batch, never the
 corpus, so committed batch partitions are immutable):
 
   signatures/batch_id=K/   this batch's signature+shingle rows
-  groups/batch_id=K/       this batch's GROUP-KEY DELTA: one narrow row
-                           (g1, g2, rep_delta, cnt_delta) per distinct
-                           signature group observed in the batch
   members/batch_id=K/      (file_id, g1, g2) for every matchable row of
-                           the batch — the narrow membership map that
-                           lets the serving queries (current_clusters /
-                           expanded_edges) avoid re-hashing the wide
-                           signature rows
+                           the batch — the narrow membership map and the
+                           one group-key index: born-group detection asks
+                           it "seen before?", and the serving queries
+                           (current_clusters / expanded_edges) rebuild
+                           groups from it without re-hashing the wide
+                           signature rows (NARROW, O(state))
   repsigs/batch_id=K/      signature rows of the group representatives
                            BORN in this batch (one per new group); every
                            later fold scans all of it (WIDE, O(state))
@@ -54,17 +53,17 @@ modes, not just explicit replay.
 Per-batch cost model (VERDICT r3 "What's wrong" #3 — the round-3 fold
 re-grouped the FULL cumulative signature table every batch, an
 O(state-rows) wide shuffle of ~10 KB signature rows): shuffles
-now touch only (a) the batch's own rows, (b) the narrow group-key deltas
-of the batch, and (c) members of band buckets actually TOUCHED by the
-batch's newborn groups. Prior state is SCANNED in full: the group
-deltas (4 longs/row) and the band index (3 longs/row) are narrow scans
-reduced by semi-joins on the batch's keys (broadcast while those keys
-are small), and ``repsigs`` — the one WIDE prior-state read — is
-restricted by a semi-join on the verify endpoints. These scans
-therefore grow with the state: narrow for the deltas and bands, wide for
-repsigs. The wide cumulative ``signatures`` table is never re-read by the fold — it
-is only consumed by the on-demand audit surfaces (``expanded_edges`` /
-``current_clusters``).
+now touch only (a) the batch's own rows, (b) the narrow group keys of
+the batch, and (c) members of band buckets actually TOUCHED by the
+batch's newborn groups. Prior state is SCANNED in full: the members
+(3 longs/row, two read after column pruning) and the band index (3
+longs/row) are narrow scans reduced by semi-joins on the batch's keys
+(broadcast while those keys are small), and ``repsigs`` — the one WIDE
+prior-state read — is restricted by a semi-join on the verify
+endpoints. These scans therefore grow with the state: narrow for the
+members and bands, wide for repsigs. The wide cumulative ``signatures``
+table is never re-read by the fold — it is only consumed by the
+on-demand audit surfaces (``expanded_edges`` / ``current_clusters``).
 
 A bucketed bands/repsigs layout pruned to the buckets a batch touches
 was measured and removed: a batch with k band hashes touches
@@ -79,10 +78,10 @@ at P=1024 it still read 956 of 1,024 band buckets, took 31.5 s and left
 Fixed-cost budget (the per-batch job count is the small-batch
 throughput limiter; at this scale CPU follows plans and jobs, not data).
 Three sequential commit barriers — signatures, born-rep sketches
-(repsigs) and the verify+edges commit — plus CONCURRENT members,
-group-delta and bands commits on writer threads joined before the edges
-marker. No job runs only to learn a schema or a size: every state read
-passes its pinned schema (``STATE_SCHEMAS``), the bucket-skew counters
+(repsigs) and the verify+edges commit — plus CONCURRENT members and
+bands commits on writer threads joined before the edges marker. No job
+runs only to learn a schema or a size: every state read passes its
+pinned schema (``STATE_SCHEMAS``), the bucket-skew counters
 and the candidate-pair count are observe() metrics riding the edges
 commit, and the broadcast gates read upper bounds summed from
 parquet footers (a job measures the exact size only when the bound is too
@@ -90,7 +89,7 @@ loose to decide a gate). ``current_clusters`` bounds its CC input the
 same way and collects it with no probe job. Measured on the benchmark's
 ``incremental_ingest`` op (a 100-file batch into a 1k-file state, 4
 cores, Spark event log): fold + serve went from 48 jobs (35 + 13, eight
-of them schema inference on state reads) to 28 (22 + 6). Map-only state
+of them schema inference on state reads) to 26 (20 + 6). Map-only state
 writes size their output files from measured input bytes (never a fixed
 fan-out), and each phase's wall lands in ``metrics.jsonl`` as
 ``phase_ms``.
@@ -148,7 +147,6 @@ STATE_SCHEMAS = {
     "signatures": SIG_SCHEMA,
     "repsigs": SIG_SCHEMA,
     "members": "file_id long, g1 long, g2 long",
-    "groups": "g1 long, g2 long, rep_delta long, cnt_delta long",
     "bands": "file_id long, band_id int, band_hash long",
     "edges": "src long, dst long, hamming int, jaccard double, "
              "verified boolean",
@@ -357,22 +355,21 @@ def _reject_bucketed_layout(state_dir: str) -> None:
 
 def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
                  batch_id: int, new_sigs: DataFrame, phases: dict):
-    """Build one batch's NARROW index partitions (members, group delta,
-    born-rep sketches, born-rep bands) from its signature rows.
+    """Build one batch's index partitions (members, born-rep sketches,
+    born-rep bands) from its signature rows.
     Deterministic in (prior narrow state, batch rows), so a re-fold of a
     stranded batch rewrites the same rows. Returns
-    ``(new_bands, groups_part, repsig_part, bands_part, threads)``
+    ``(new_bands, repsig_part, bands_part, threads)``
     where ``new_bands`` is the band LINEAGE over the committed repsigs
     partition (column-pruned parquet scan, identical rows to the bands
     partition) and ``threads`` holds the started writer threads
-    committing the members, group-delta and bands partitions concurrently
-    with the caller's jobs — the caller must ``join()`` each (surfacing
-    its error) before committing the batch's edges marker. Nothing in the
-    fold reads those three partitions back: born-group detection consumes
-    member/delta LINEAGE over the committed signature partition (narrow
-    aggregates of 3-long rows ∝ batch) and the fold's band consumers the
-    band lineage, so only the repsigs commit is a job barrier."""
-    groups_part = os.path.join(state_dir, "groups", f"batch_id={batch_id}")
+    committing the members and bands partitions concurrently with the
+    caller's jobs — the caller must ``join()`` each (surfacing its error)
+    before committing the batch's edges marker. Nothing in the fold reads
+    those two partitions back: born-group detection consumes the member
+    LINEAGE over the committed signature partition (3-long rows ∝ batch)
+    and the fold's band consumers the band lineage, so only the repsigs
+    commit is a job barrier."""
     repsig_part = os.path.join(state_dir, "repsigs", f"batch_id={batch_id}")
     bands_part = os.path.join(state_dir, "bands", f"batch_id={batch_id}")
     sig_part = os.path.join(state_dir, "signatures", f"batch_id={batch_id}")
@@ -391,17 +388,15 @@ def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
         n_files = len(_parquet_files(path))
         return max(1, _part_bytes(path) // (64 << 20), n_files // 8)
 
-    # 2. narrow membership map + group-key delta for THIS batch only:
-    # one member row per matchable file, one delta row per distinct
-    # signature group in the batch (shuffle ∝ batch rows). The members
-    # COMMIT is pure state maintenance (only the serving queries read the
-    # members table back) — it runs on a writer thread concurrent with
-    # the repsigs/edges jobs, and the fold's own consumers use the
-    # members LINEAGE over the committed signature partition instead.
-    # That re-runs group_keys' xxhash64 over the batch's wide rows once
-    # per consumer — strictly ∝ batch, measured cheaper than the commit
-    # barrier + read-back it replaces (round 6; was the one sequential
-    # members_write barrier VERDICT r5 #4 flagged).
+    # 2. narrow membership map for THIS batch only: one member row per
+    # matchable file. The members COMMIT is pure state maintenance (later
+    # folds and the serving queries read it back) — it runs on a writer
+    # thread concurrent with the repsigs/edges jobs, and the fold's own
+    # consumers use the members LINEAGE over the committed signature
+    # partition instead. That re-runs group_keys' xxhash64 over the
+    # batch's wide rows once per consumer — strictly ∝ batch, measured
+    # cheaper than the commit barrier + read-back it replaces (round 6;
+    # was the one sequential members_write barrier VERDICT r5 #4 flagged).
     members_part = os.path.join(state_dir, "members", f"batch_id={batch_id}")
     new_members = group_keys(new_sigs.drop("batch_id"))
 
@@ -414,60 +409,38 @@ def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     members_th = _CapturingThread(target=_write_members)
     members_th.start()
     threads.append(members_th)
-    new_delta = (
-        new_members
-        .groupBy("g1", "g2")
-        .agg(F.min("file_id").alias("rep_delta"),
-             F.count("*").alias("cnt_delta"))
-    )
 
-    def _write_groups():
-        _timed(phases, "groups_write", lambda: new_delta.write.mode(
-            "overwrite").parquet(groups_part))
-
-    # the delta commit is pure state maintenance: born-group detection
-    # below consumes the member (or, with no prior state, the delta)
-    # lineage, so the write overlaps the repsigs job. The aggregation
-    # that implies shuffles 3-long member rows (∝ batch) — never more
-    # than the batch's own signature partition.
-    groups_th = _CapturingThread(target=_write_groups)
-    groups_th.start()
-    threads.append(groups_th)
-
-    # 3. born-group detection against the PRIOR narrow deltas: scan old
-    # keys once, reduced by a semi-join on the batch's broadcast member
-    # keys (duplicate keys are harmless on a semi-join's build side, so
-    # they need no aggregate first) — no wide shuffle of state. ONE
-    # aggregation over the batch's member rows plus those touched prior
-    # rows then marks a key born when no prior row shares it, and takes
-    # its rep (the batch's min file_id): rows of 3 longs ∝ batch, and no
-    # second broadcast. A giant bootstrap batch takes the no-prior
-    # branch; for a later batch too large to broadcast the hint is
-    # dropped and Spark shuffles both narrow key tables — never the wide
-    # signature state. Gate bytes = batch rows × 24 B (the members row is
-    # 3 longs) from the committed signature footers — an exact-width
-    # bound that needs no wait on the async members commit.
+    # 3. born-group detection against the PRIOR members partitions (the
+    # one group-key index; with no prior state the scan is empty): scan
+    # old keys once, reduced by a semi-join on the batch's broadcast
+    # member keys (duplicate keys are harmless on a semi-join's build
+    # side, so they need no aggregate first) — no wide shuffle of state.
+    # ONE aggregation over the batch's member rows plus those touched
+    # prior rows then marks a key born when no prior row shares it, and
+    # takes its rep (the batch's min file_id): rows of 3 longs ∝ batch,
+    # and no second broadcast. For a batch too large to broadcast the
+    # hint is dropped and Spark shuffles both narrow key tables — never
+    # the wide signature state. Gate bytes = batch rows × 24 B (the
+    # members row is 3 longs) from the committed signature footers — an
+    # exact-width bound that needs no wait on the async members commit.
     hint = (F.broadcast if 24 * _footer_rows(sig_part) <= _BROADCAST_MAX_BYTES
             else (lambda df: df))
-    prior_groups = _prior_parts(state_dir, "groups", batch_id)
-    if prior_groups:
-        old = (
-            _read_state(spark, "groups", *prior_groups)
-            .join(hint(new_members.select("g1", "g2")), ["g1", "g2"],
-                  "left_semi")
-            .select("g1", "g2", F.lit(None).cast("long").alias("file_id"),
-                    F.lit(True).alias("old"))
-        )
-        born_reps = (
-            new_members.withColumn("old", F.lit(False))
-            .unionByName(old)
-            .groupBy("g1", "g2")
-            .agg(F.max("old").alias("old"), F.min("file_id").alias("file_id"))
-            .where(~F.col("old"))
-            .select("file_id")
-        )
-    else:
-        born_reps = new_delta.select(F.col("rep_delta").alias("file_id"))
+    old = (
+        _read_state(spark, "members",
+                    *_prior_parts(state_dir, "members", batch_id))
+        .join(hint(new_members.select("g1", "g2")), ["g1", "g2"],
+              "left_semi")
+        .select("g1", "g2", F.lit(None).cast("long").alias("file_id"),
+                F.lit(True).alias("old"))
+    )
+    born_reps = (
+        new_members.withColumn("old", F.lit(False))
+        .unionByName(old)
+        .groupBy("g1", "g2")
+        .agg(F.max("old").alias("old"), F.min("file_id").alias("file_id"))
+        .where(~F.col("old"))
+        .select("file_id")
+    )
 
     # 4. newborn representatives' signature rows + their narrow band rows
     # become state; the rep is pinned at birth (membership-based
@@ -489,7 +462,7 @@ def _index_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     bands_th = _CapturingThread(target=_write_bands)
     bands_th.start()
     threads.append(bands_th)
-    return new_bands, groups_part, repsig_part, bands_part, threads
+    return new_bands, repsig_part, bands_part, threads
 
 
 def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
@@ -505,9 +478,8 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     batch_id line from a first fold."""
     phases = {} if phases is None else phases
     edge_part = os.path.join(state_dir, "edges", f"batch_id={batch_id}")
-    new_bands, groups_part, repsig_part, bands_part, threads = (
-        _index_batch(spark, state_dir, cfg, batch_id, new_sigs, phases)
-    )
+    new_bands, repsig_part, bands_part, threads = _index_batch(
+        spark, state_dir, cfg, batch_id, new_sigs, phases)
 
     # 5. candidate pairs: newborn reps vs members of the band buckets
     # they TOUCH. Prior bands are scanned (3 longs/row) and reduced by a
@@ -515,8 +487,8 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
     # bucket-size caps apply the batch path's no-silent-truncation rule
     # over the touched buckets (untouched buckets generate no pairs and
     # need no cap check). The broadcast gate here sizes the BAND-KEY
-    # frame, never the group delta (ADVICE r4: one row per band per born
-    # rep — a delta just under the gate could carry n_bands× more
+    # frame, never the batch's group keys (ADVICE r4: one row per band per
+    # born rep — a key frame just under the gate could carry n_bands× more
     # band-key rows).
     salt_cap = cfg.max_bucket * max(1, cfg.salt)
     prior_bands = _prior_parts(state_dir, "bands", batch_id)
@@ -612,15 +584,14 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
         )
         verify_side = all_repsigs.join(
             ep_hint(endpoint_ids), "file_id", "left_semi")
-        rep_edges = verify_pairs(
-            pairs, verify_side, verify_side.select("file_id", "shingles"), cfg
-        ).where("verified")
+        rep_edges = verify_pairs(pairs, verify_side, None, cfg).where(
+            "verified")
 
         # 7. commit edges (the batch marker), then the lineage/skew
         # metrics — the dropped-bucket counters of run_pipeline's
         # candidate_metrics, plus the state-proportionality counters the
         # append-only design is accountable to (tests assert these stay
-        # ∝ batch, not ∝ state). Every index partition (groups and bands
+        # ∝ batch, not ∝ state). Every index partition (members and bands
         # included — join the concurrent writers, re-raising their
         # errors) must be committed BEFORE the marker.
         for th in threads:
@@ -634,7 +605,6 @@ def _fold_batch(spark: SparkSession, state_dir: str, cfg: DedupConfig,
             "new_rows": _footer_rows(os.path.join(
                 state_dir, "signatures", f"batch_id={batch_id}")),
             "new_edges": _footer_rows(edge_part),
-            "new_groups": _footer_rows(groups_part),
             "born_groups": born_groups,
             "candidate_pairs": int(
                 _observed(pair_obs, pairs, pair_metrics)["n_pairs"]),
@@ -681,7 +651,7 @@ def _watermark(state_dir: str) -> int:
         return -1
 
 
-_COMPACT_TABLES = ("groups", "members", "repsigs", "bands", "edges")
+_COMPACT_TABLES = ("members", "repsigs", "bands", "edges")
 
 
 def _recover_compaction(state_dir: str) -> None:
@@ -720,16 +690,17 @@ def _recover_compaction(state_dir: str) -> None:
 
 def compact_state(spark: SparkSession, state_dir: str) -> dict:
     """Log-structured maintenance compaction (run out of band, like an
-    Iceberg rewrite): merge every committed batch's NARROW delta
-    partitions (groups / members / repsigs / bands / edges) into one base partition
-    at ``batch_id=<watermark>``, so state reads stop paying one directory
+    Iceberg rewrite): merge every committed batch's index partitions
+    (members / repsigs / bands / edges) into one base partition at
+    ``batch_id=<watermark>``, so state reads stop paying one directory
     listing + footer per historical batch. ``signatures`` partitions are
     NEVER compacted — they are the replay inputs and the wide audit
     surface. Fold semantics are preserved exactly: born-group detection
-    needs key PRESENCE in any prior delta (the groups merge keeps one row
-    per key: min rep_delta, summed cnt_delta), and repsigs/bands/edges
-    rows are disjoint across batches so their merge is a plain union,
-    written flat like every other partition.
+    needs key PRESENCE in any prior members row, which a union keeps, and
+    the rows of every table are disjoint across batches, so each merge
+    is a plain union, written flat like every other partition. A
+    ``groups/`` table left by an older layout is neither read nor
+    compacted.
 
     Crash safety: merged bases are written to a hidden tmp dir first, a
     journal records the install + deletes, and every fold start finishes
@@ -762,13 +733,7 @@ def compact_state(spark: SparkSession, state_dir: str) -> dict:
         merged_ids = sorted(set(merged_ids) | set(ids))
         dirs = [os.path.join(tdir, f"batch_id={b}") for b in ids]
         tmp = os.path.join(tdir, ".compact_tmp")
-        df = _read_state(spark, table, *dirs)
-        if table == "groups":
-            df = df.groupBy("g1", "g2").agg(
-                F.min("rep_delta").alias("rep_delta"),
-                F.sum("cnt_delta").alias("cnt_delta"),
-            )
-        df.write.mode("overwrite").parquet(tmp)
+        _read_state(spark, table, *dirs).write.mode("overwrite").parquet(tmp)
     if not merged_ids:
         return {"through": w0, "merged_batches": 0}
     # watermark FIRST (replay no-op guard must cover the ids whose edges

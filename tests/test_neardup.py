@@ -573,6 +573,8 @@ def test_multi_block_expansion_matches_brute_force(
             return set(got)
 
         assert pairs(res["edges"]) == want
+        assert G.expanded_edge_count(res["edges_rep"], res["groups"]) \
+            == len(want)
         assert pairs(expanded_edges(spark, reversed_fold_state)) == want
         # the gate really flipped: only the unfused plan has the (dst, src)
         # fusion-break exchange

@@ -111,8 +111,8 @@ def test_incremental_cost_proportional_to_batch(spark, tmp_path_factory):
     """VERDICT r3 #2: the per-batch fold must not re-shuffle the full
     cumulative signature table. The fold's own lineage counters (written
     per batch to metrics.jsonl) pin it: after a large bootstrap batch, a
-    small batch's group-delta/born/touched-bucket row counts scale with
-    the SMALL batch, not with the state."""
+    small batch's born/touched-bucket row counts scale with the SMALL
+    batch, not with the state."""
     corpus = corpus_df(spark, 170, seed=23).cache()
     state = str(tmp_path_factory.mktemp("state_prop"))
     incremental_update(corpus.where("file_id < 150"), state, CFG)
@@ -125,10 +125,9 @@ def test_incremental_cost_proportional_to_batch(spark, tmp_path_factory):
     # state written per batch ∝ batch
     for x in m[1:]:
         assert x["new_rows"] == 10
-        assert x["new_groups"] <= 10
         assert x["born_groups"] <= 10
     # bootstrap wrote the big batch's groups once
-    assert m[0]["new_groups"] > 100
+    assert m[0]["born_groups"] > 100
     # touched band state ∝ batch: each new rep touches ≤ bands buckets,
     # and each touched bucket's OLD membership is what gets read — far
     # below the full band index of the 150-file bootstrap state
@@ -188,7 +187,7 @@ def test_state_compaction(spark, tmp_path_factory):
 
     out = compact_state(spark, state)
     assert out["through"] == 2 and out["merged_batches"] == 3
-    for table in ("groups", "members", "repsigs", "bands", "edges"):
+    for table in ("members", "repsigs", "bands", "edges"):
         dirs = os.listdir(os.path.join(state, table))
         assert dirs == ["batch_id=2"], (table, dirs)
     # signatures are replay inputs — never compacted
@@ -220,7 +219,7 @@ def test_state_compaction(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("removed", [
     ("edges",),
-    ("edges", "groups", "members", "repsigs", "bands"),
+    ("edges", "members", "repsigs", "bands"),
 ], ids=["edges", "edges_and_index"])
 def test_stranded_index_rebuilt(spark, tmp_path_factory, removed):
     """A crash after batch 1's signatures committed but before its edges
@@ -239,7 +238,7 @@ def test_stranded_index_rebuilt(spark, tmp_path_factory, removed):
         shutil.rmtree(os.path.join(state, table, "batch_id=1"))
 
     incremental_update(corpus.where("file_id >= 90"), state, CFG)
-    for table in ("groups", "members", "repsigs", "bands", "edges"):
+    for table in ("members", "repsigs", "bands", "edges"):
         assert sorted(os.listdir(os.path.join(state, table))) == [
             "batch_id=0", "batch_id=1", "batch_id=2",
         ], table
@@ -256,7 +255,7 @@ def test_state_frames_lazy_mapping(spark, tmp_path_factory, producer):
     corpus = corpus_df(spark, 60, seed=3).cache()
     if producer == "run_pipeline":
         out = run_pipeline(corpus, CFG)
-        keys = {"signatures", "groups", "shingles", "candidates",
+        keys = {"signatures", "groups", "candidates",
                 "edges_rep", "edges", "clusters", "candidate_metrics"}
     else:
         state = str(tmp_path_factory.mktemp("state_lazy"))
@@ -341,7 +340,7 @@ def test_fold_under_other_config_is_refused(spark, tmp_path_factory):
 
 def test_concurrent_writer_failure_fails_fold(spark, tmp_path_factory,
                                               monkeypatch):
-    """The group-delta and bands partitions commit on concurrent threads;
+    """The members and bands partitions commit on concurrent threads;
     a failure there must fail the fold (no edges marker = batch not
     committed) and be recoverable by the stranded-batch re-fold — never
     be swallowed into a half-indexed committed batch."""
@@ -354,12 +353,12 @@ def test_concurrent_writer_failure_fails_fold(spark, tmp_path_factory,
     real_timed = st._timed
 
     def boom(phases, key, fn):
-        if key == "groups_write":
-            raise RuntimeError("injected delta-commit failure")
+        if key == "members_write":
+            raise RuntimeError("injected members-commit failure")
         return real_timed(phases, key, fn)
 
     monkeypatch.setattr(st, "_timed", boom)
-    with pytest.raises(RuntimeError, match="injected delta-commit"):
+    with pytest.raises(RuntimeError, match="injected members-commit"):
         incremental_update(corpus.where("file_id >= 40"), state, CFG)
     # the batch is NOT committed: signatures landed, edges marker did not
     assert os.path.isdir(os.path.join(state, "signatures", "batch_id=1"))
@@ -439,7 +438,7 @@ def test_pinned_state_schemas_match_written(spark, tmp_path_factory,
     if compacted:
         assert compact_state(spark, state)["merged_batches"] == 2
     assert set(st.STATE_SCHEMAS) == {
-        "signatures", "repsigs", "members", "groups", "bands", "edges"}
+        "signatures", "repsigs", "members", "bands", "edges"}
     for table, ddl in st.STATE_SCHEMAS.items():
         parts = sorted(os.listdir(os.path.join(state, table)))
         assert parts == (["batch_id=1"] if compacted and table != "signatures"
@@ -456,8 +455,9 @@ def test_pinned_state_schemas_match_written(spark, tmp_path_factory,
 
 # Spark jobs of one small-batch fold + current_clusters on the fixed state
 # below (8 cores, 8 shuffle partitions): 43 while every state read
-# inferred its schema and the fold and CC ran their size probes, 23 since.
-FOLD_SERVE_JOB_FLOOR = 23
+# inferred its schema and the fold and CC ran their size probes, 23 while
+# the fold also wrote a group-delta table, 21 (19 + 2) since.
+FOLD_SERVE_JOB_FLOOR = 21
 
 
 def test_fold_and_serve_job_floor(spark, tmp_path_factory, group_jobs):

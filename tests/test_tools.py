@@ -1,8 +1,8 @@
 """Import hygiene for ``tools/`` and the benchmark drivers (``bench.py``,
-``bench_extra.py``, ``perfbench/``): every ``from dedup_spark... import
-name`` in one of those scripts — function-local imports included — or in
-a child script it embeds as a string constant, must resolve against the
-current package. A deleted or renamed operator then cannot leave a tool or
+``perfbench/``): every ``from dedup_spark... import name`` in one of
+those scripts — function-local imports included — or in a child script
+it embeds as a string constant, must resolve against the current
+package. A deleted or renamed operator then cannot leave a tool or
 a benchmark that only fails when someone runs it."""
 
 import ast
@@ -59,8 +59,7 @@ def _scripts(subdir: str) -> list[str]:
     return sorted(f"{subdir}/{f}" for f in files if f.endswith(".py"))
 
 
-SCRIPTS = [*_scripts("tools"), "bench.py", "bench_extra.py",
-           *_scripts("perfbench")]
+SCRIPTS = [*_scripts("tools"), "bench.py", *_scripts("perfbench")]
 
 
 @pytest.mark.parametrize("tool", SCRIPTS,
